@@ -11,6 +11,7 @@ docstring. Every computed column is aliased identically on both sides
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2597,60 +2598,6 @@ def q_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cardinality_audit(_docs(spark, sf_dir), "source", "text", rsd=0.05)
 
 
-@_q("profiling", None)
-def q_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the operational profiling probes, normalized to
-    (leg, key, n1, n2, n3, n4, v1, v2):
-
-    - leg='profile': per-source stats (`corpus_profile`) — n1=n_docs,
-      n2=total_chars, n3=min, n4=max, v1=mean, v2=exact median;
-    - leg='skew': heavy-hitter report (`skew_report`) — n1=count,
-      n2=rank, v1=corpus fraction;
-    - leg='cardinality': HLL++-vs-exact distinct audit
-      (`cardinality_audit`) — n1=exact_distinct, n2=within_tol as 0/1.
-
-    All member oracles are plain SQL — value-exact at any SF."""
-    prof = q_corpus_profile(spark, sf_dir).select(
-        F.lit("profile").alias("leg"), F.col("source").alias("key"),
-        F.col("n_docs").cast("long").alias("n1"),
-        F.col("total_chars").alias("n2"),
-        F.col("min_chars").alias("n3"), F.col("max_chars").alias("n4"),
-        F.col("mean_chars").alias("v1"), F.col("median_chars").alias("v2"),
-    )
-    skew = q_skew_report(spark, sf_dir).select(
-        F.lit("skew").alias("leg"), "key",
-        F.col("n").alias("n1"), F.col("rank").alias("n2"),
-        F.lit(0).cast("long").alias("n3"), F.lit(0).cast("long").alias("n4"),
-        F.col("frac").alias("v1"), F.lit(0.0).alias("v2"),
-    )
-    card = q_cardinality_audit(spark, sf_dir).select(
-        F.lit("cardinality").alias("leg"), F.col("grp").alias("key"),
-        F.col("exact_distinct").alias("n1"),
-        F.col("within_tol").cast("long").alias("n2"),
-        F.lit(0).cast("long").alias("n3"), F.lit(0).cast("long").alias("n4"),
-        F.lit(0.0).alias("v1"), F.lit(0.0).alias("v2"),
-    )
-    return prof.unionByName(skew).unionByName(card)
-
-
-ORACLES["profiling"] = f"""
-    SELECT 'profile' AS leg, source AS key, CAST(n_docs AS BIGINT) AS n1,
-           total_chars AS n2, CAST(min_chars AS BIGINT) AS n3,
-           CAST(max_chars AS BIGINT) AS n4, mean_chars AS v1,
-           median_chars AS v2
-    FROM ({ORACLES["corpus_profile"]})
-    UNION ALL
-    SELECT 'skew', key, n, rank, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-           frac, 0.0
-    FROM ({ORACLES["skew_report"]})
-    UNION ALL
-    SELECT 'cardinality', grp, exact_distinct,
-           CAST(CASE WHEN within_tol THEN 1 ELSE 0 END AS BIGINT),
-           CAST(0 AS BIGINT), CAST(0 AS BIGINT), 0.0, 0.0
-    FROM ({ORACLES["cardinality_audit"]})
-"""
-
-
 # ---------------------------------------------------------------------------
 # Sinks / splits / media plumbing (K1-K4, O4, §multimodal).
 # ---------------------------------------------------------------------------
@@ -3067,45 +3014,6 @@ def q_gopher_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("event_windows", None)
-def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the two event-time window shapes over one schema:
-    tumbling rollups (`windowed_rollup`) and per-user session windows
-    (`sessionize`) — both batch twins of real watermarked streaming jobs
-    (streamed ≡ batch pinned in tests/test_media_streaming.py). Window
-    bounds stay formatted strings (the cross-engine timestamp rule)."""
-    w = q_windowed_rollup(spark, sf_dir).select(
-        F.lit("tumbling").alias("leg"),
-        F.col("event_type").alias("key"),
-        F.col("window_start").alias("win_start"),
-        F.col("window_end").alias("win_end"),
-        "n_events", "total_value",
-    )
-    s = q_sessionize(spark, sf_dir).select(
-        F.lit("session").alias("leg"),
-        F.col("user_id").cast("string").alias("key"),
-        F.col("session_start").alias("win_start"),
-        F.col("session_end").alias("win_end"),
-        "n_events", "total_value",
-    )
-    return w.unionByName(s)
-
-
-def _event_windows_oracle() -> str:
-    return f"""
-    SELECT 'tumbling' AS leg, event_type AS key, window_start AS win_start,
-           window_end AS win_end, n_events, total_value
-    FROM ({ORACLES["windowed_rollup"]})
-    UNION ALL
-    SELECT 'session', CAST(user_id AS VARCHAR), session_start, session_end,
-           n_events, total_value
-    FROM ({ORACLES["sessionize"]})
-    """
-
-
-ORACLES["event_windows"] = _event_windows_oracle()
-
-
 @_q(
     "streaming_dedup",
     """
@@ -3294,410 +3202,6 @@ def q_json_parse_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Driver-facing composites (round 4).
-#
-# The round driver's correctness record holds at most 50 rows (VERDICT r3:
-# exactly 50 recorded in rounds 2 AND 3 while the catalog grew 52→62 — a
-# count cap, not a time budget), so surfacing all 62 queries evicted the 12
-# most expensive = flagship entries from the external value-check gate.
-# Fix: fold groups of single-aspect queries into UNION-normalized composite
-# queries whose oracle is the UNION of the member oracles — every member's
-# values stay fully checked (same rows, same numbers, plus a leg tag), but
-# the driver-facing surface drops to ≤50 names (DRIVER_QUERY_NAMES below).
-# The member queries stay registered: scripts/verify_contract.py checks the
-# FULL catalog (members + composites) locally, and pytest pins members.
-# ---------------------------------------------------------------------------
-
-
-@_q(
-    "scan_lifecycle",
-    None,  # oracle composed below after all members are registered
-)
-def q_scan_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of S1/S2/W4 (`scan_limit`), S3/J5 (`sample_explode`),
-    J4 (`sample_gate`), P1 (`source_filter`) and P6 (`confidence_bands`)
-    — the §3.1 corpus-ingest lifecycle: ordered head-N scan, source-set
-    predicate rollup, doc × sample expansion, all-samples-present gate,
-    confidence banding. Each leg is the member query verbatim, normalized
-    to (leg, doc_id, attr, n); the two-metric source_filter leg emits one
-    row per metric."""
-    scan = q_scan_limit(spark, sf_dir).select(
-        F.lit("scan").alias("leg"),
-        "doc_id",
-        # F.concat (null-propagating), NOT concat_ws (null-skipping): the
-        # oracle's `lang || '|' || source` nulls the whole attr when either
-        # side is NULL — the twins must agree on that future fixture shape
-        F.concat("lang", F.lit("|"), "source").alias("attr"),
-        F.col("n_chars").cast("long").alias("n"),
-    )
-    sample = q_sample_explode(spark, sf_dir).select(
-        F.lit("sample").alias("leg"),
-        "doc_id",
-        F.lit("").alias("attr"),
-        F.col("sample_id").cast("long").alias("n"),
-    )
-    gate = q_sample_gate(spark, sf_dir).select(
-        F.lit("gate").alias("leg"),
-        "doc_id",
-        F.lit("").alias("attr"),
-        F.col("n_samples").cast("long").alias("n"),
-    )
-    src = q_source_filter(spark, sf_dir)
-    src_docs = src.select(
-        F.lit("source_docs").alias("leg"),
-        F.lit(-1).cast("long").alias("doc_id"),
-        F.col("source").alias("attr"),
-        F.col("n_docs").cast("long").alias("n"),
-    )
-    src_chars = src.select(
-        F.lit("source_chars").alias("leg"),
-        F.lit(-1).cast("long").alias("doc_id"),
-        F.col("source").alias("attr"),
-        F.col("total_chars").cast("long").alias("n"),
-    )
-    bands = q_confidence_bands(spark, sf_dir).select(
-        F.lit("bands").alias("leg"),
-        F.lit(-1).cast("long").alias("doc_id"),
-        F.col("band").alias("attr"),
-        F.col("n").cast("long").alias("n"),
-    )
-    return (
-        scan.unionByName(sample).unionByName(gate)
-        .unionByName(src_docs).unionByName(src_chars).unionByName(bands)
-    )
-
-
-ORACLES["scan_lifecycle"] = f"""
-    SELECT 'scan' AS leg, doc_id, lang || '|' || source AS attr,
-           CAST(n_chars AS BIGINT) AS n
-    FROM ({ORACLES["scan_limit"]})
-    UNION ALL
-    SELECT 'sample', doc_id, '', CAST(sample_id AS BIGINT)
-    FROM ({ORACLES["sample_explode"]})
-    UNION ALL
-    SELECT 'gate', doc_id, '', CAST(n_samples AS BIGINT)
-    FROM ({ORACLES["sample_gate"]})
-    UNION ALL
-    SELECT 'source_docs', CAST(-1 AS BIGINT), source, CAST(n_docs AS BIGINT)
-    FROM ({ORACLES["source_filter"]})
-    UNION ALL
-    SELECT 'source_chars', CAST(-1 AS BIGINT), source, total_chars
-    FROM ({ORACLES["source_filter"]})
-    UNION ALL
-    SELECT 'bands', CAST(-1 AS BIGINT), band, CAST(n AS BIGINT)
-    FROM ({ORACLES["confidence_bands"]})
-"""
-
-
-@_q("split_datasets", None)
-def q_split_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of O4/K4: hash-bucket split (`split_assignment`) and
-    exact-count split with tiny-corpus degeneracy (`split_sized`)."""
-    a = q_split_assignment(spark, sf_dir).select(
-        F.lit("hash").alias("leg"), "split", "n_docs"
-    )
-    b = q_split_sized(spark, sf_dir).select(
-        F.lit("sized").alias("leg"), "split", "n_docs"
-    )
-    return a.unionByName(b)
-
-
-ORACLES["split_datasets"] = f"""
-    SELECT 'hash' AS leg, split, n_docs FROM ({ORACLES["split_assignment"]})
-    UNION ALL
-    SELECT 'sized', split, n_docs FROM ({ORACLES["split_sized"]})
-"""
-
-
-@_q("text_signals", None)
-def q_text_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the per-document text-analysis signals: language-ID
-    distribution (`text_lang_id`), quality-score distribution
-    (`text_quality`), per-source token accounting (`text_token_stats`),
-    vocabulary-fingerprint dedup groups (`text_fingerprint`), the
-    Gopher repetition gate rollup (`text_repetition`) and the per-source
-    Gopher rule-set gate rollup (`gopher_gates`: v1 = docs passing ALL
-    gates, v2 = total individual-gate passes), normalized to
-    (leg, key, n_docs, v1, v2)."""
-    lang = q_text_lang_id(spark, sf_dir).select(
-        F.lit("lang").alias("leg"), F.col("lang_hat").alias("key"), "n_docs",
-        F.lit(0.0).alias("v1"), F.lit(0.0).alias("v2"),
-    )
-    quality = q_text_quality(spark, sf_dir).select(
-        F.lit("quality").alias("leg"),
-        F.round(F.col("quality") * 4).cast("int").cast("string").alias("key"),
-        "n_docs",
-        F.round("quality", 6).alias("v1"), F.lit(0.0).alias("v2"),
-    )
-    tokens = q_text_token_stats(spark, sf_dir).select(
-        F.lit("tokens").alias("leg"), F.col("source").alias("key"), "n_docs",
-        F.col("ws_tokens").cast("double").alias("v1"),
-        F.col("bpe_tokens").cast("double").alias("v2"),
-    )
-    fp = q_text_fingerprint(spark, sf_dir).select(
-        F.lit("fingerprint").alias("leg"), F.col("fp").alias("key"), "n_docs",
-        F.col("keep_id").cast("double").alias("v1"), F.lit(0.0).alias("v2"),
-    )
-    rep = q_text_repetition(spark, sf_dir).select(
-        F.lit("repetition").alias("leg"), F.col("source").alias("key"), "n_docs",
-        F.col("avg_repetition").alias("v1"),
-        F.col("n_repetitive").cast("double").alias("v2"),
-    )
-    gop = (
-        q_gopher_gates(spark, sf_dir)
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("keep").cast("int")).cast("double").alias("v1"),
-            F.sum(
-                F.col("g_word_count").cast("int")
-                + F.col("g_mean_word_len").cast("int")
-                + F.col("g_symbol_ratio").cast("int")
-                + F.col("g_alpha_words").cast("int")
-                + F.col("g_stopwords").cast("int")
-                + F.col("g_repetition").cast("int")
-            ).cast("double").alias("v2"),
-        )
-        .select(
-            F.lit("gopher").alias("leg"), F.col("source").alias("key"),
-            "n_docs", "v1", "v2",
-        )
-    )
-    drift = q_corpus_drift(spark, sf_dir).select(
-        F.lit("drift").alias("leg"), F.col("term").alias("key"),
-        (F.col("n_cand") + F.col("n_ref")).alias("n_docs"),
-        F.col("kl_contrib").alias("v1"), F.col("tv_contrib").alias("v2"),
-    )
-    return (
-        lang.unionByName(quality).unionByName(tokens)
-        .unionByName(fp).unionByName(rep).unionByName(gop)
-        .unionByName(drift)
-    )
-
-
-ORACLES["text_signals"] = f"""
-    SELECT 'lang' AS leg, lang_hat AS key, n_docs,
-           0.0 AS v1, 0.0 AS v2
-    FROM ({ORACLES["text_lang_id"]})
-    UNION ALL
-    SELECT 'quality', CAST(CAST(round(quality * 4) AS INT) AS VARCHAR), n_docs,
-           round(quality, 6), 0.0
-    FROM ({ORACLES["text_quality"]})
-    UNION ALL
-    SELECT 'tokens', source, n_docs,
-           CAST(ws_tokens AS DOUBLE), CAST(bpe_tokens AS DOUBLE)
-    FROM ({ORACLES["text_token_stats"]})
-    UNION ALL
-    SELECT 'fingerprint', fp, n_docs, CAST(keep_id AS DOUBLE), 0.0
-    FROM ({ORACLES["text_fingerprint"]})
-    UNION ALL
-    SELECT 'repetition', source, n_docs,
-           avg_repetition, CAST(n_repetitive AS DOUBLE)
-    FROM ({ORACLES["text_repetition"]})
-    UNION ALL
-    SELECT 'gopher', source, count(*) AS n_docs,
-           CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE),
-           CAST(sum(CAST(g_word_count AS INT) + CAST(g_mean_word_len AS INT)
-                + CAST(g_symbol_ratio AS INT) + CAST(g_alpha_words AS INT)
-                + CAST(g_stopwords AS INT) + CAST(g_repetition AS INT))
-                AS DOUBLE)
-    FROM ({ORACLES["gopher_gates"]})
-    GROUP BY source
-    UNION ALL
-    SELECT 'drift', term, n_cand + n_ref, kl_contrib, tv_contrib
-    FROM ({ORACLES["corpus_drift"]})
-"""
-
-
-@_q("media_pipeline", None)
-def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the multimodal plan legs: decode→typed-metadata
-    (`media_features`), every-Nth-frame sampling plan
-    (`media_frame_sample`) and the U7 resize-guard geometry
-    (`media_resize_plan`), normalized to (leg, doc_id, media_ref, a, b, c).
-    The real-byte decode leg (`media_payload_decode`) stays a standalone
-    driver query — it is the one that exercises kernel/imagecodec.py."""
-    feats = q_media_features(spark, sf_dir).select(
-        F.lit("features").alias("leg"), "doc_id", "media_ref",
-        F.col("width").alias("a"), F.col("height").alias("b"),
-        F.col("n_frames").alias("c"),
-    )
-    frames = q_media_frame_sample(spark, sf_dir).select(
-        F.lit("frame").alias("leg"), "doc_id", "media_ref",
-        F.col("frame_idx").alias("a"),
-        F.lit(0).alias("b"), F.lit(0).alias("c"),
-    )
-    resize = q_media_resize_plan(spark, sf_dir).select(
-        F.lit("resize").alias("leg"), "doc_id", "media_ref",
-        F.col("halvings").alias("a"), F.col("target_width").alias("b"),
-        F.col("target_height").alias("c"),
-    )
-    return feats.unionByName(frames).unionByName(resize)
-
-
-ORACLES["media_pipeline"] = f"""
-    SELECT 'features' AS leg, doc_id, media_ref,
-           width AS a, height AS b, n_frames AS c
-    FROM ({ORACLES["media_features"]})
-    UNION ALL
-    SELECT 'frame', doc_id, media_ref, frame_idx, 0, 0
-    FROM ({ORACLES["media_frame_sample"]})
-    UNION ALL
-    SELECT 'resize', doc_id, media_ref, halvings, target_width, target_height
-    FROM ({ORACLES["media_resize_plan"]})
-"""
-
-
-@_q("sampling_suite", None)
-def q_sampling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of A5/W2 per-doc sampling stats (`sampling_stats`) and the
-    A6 global best-vs-mean effectiveness rollup (`sampling_effectiveness`),
-    normalized to (leg, doc_id, m1, m2, m3, flag, n, best)."""
-    stats = q_sampling_stats(spark, sf_dir).select(
-        F.lit("per_doc").alias("leg"), "doc_id",
-        F.col("mean_accuracy").alias("m1"), F.col("max_accuracy").alias("m2"),
-        F.col("min_accuracy").alias("m3"),
-        F.col("any_exact_match").alias("flag"),
-        F.col("n_samples").cast("long").alias("n"),
-        F.col("best_sample_id").cast("long").alias("best"),
-    )
-    eff = q_sampling_effectiveness(spark, sf_dir).select(
-        F.lit("overall").alias("leg"), F.lit(-1).cast("long").alias("doc_id"),
-        F.col("mean_improvement").alias("m1"),
-        F.col("max_improvement").alias("m2"),
-        F.col("min_improvement").alias("m3"),
-        F.lit(False).alias("flag"),
-        F.lit(0).cast("long").alias("n"), F.lit(0).cast("long").alias("best"),
-    )
-    return stats.unionByName(eff)
-
-
-ORACLES["sampling_suite"] = f"""
-    SELECT 'per_doc' AS leg, doc_id, mean_accuracy AS m1, max_accuracy AS m2,
-           min_accuracy AS m3, any_exact_match AS flag,
-           CAST(n_samples AS BIGINT) AS n, CAST(best_sample_id AS BIGINT) AS best
-    FROM ({ORACLES["sampling_stats"]})
-    UNION ALL
-    SELECT 'overall', CAST(-1 AS BIGINT), mean_improvement, max_improvement,
-           min_improvement, false, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-    FROM ({ORACLES["sampling_effectiveness"]})
-"""
-
-
-@_q("eval_accuracy", None)
-def q_eval_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of A3 per-doc accuracy (`eval_doc_accuracy`) and the A4/A7
-    overall rollup (`eval_overall`); the per-field matrix stays standalone
-    in `eval_field_accuracy` (flagship J2/F6). Normalized to
-    (leg, doc_id, v1, v2, flag, n)."""
-    doc = q_eval_doc_accuracy(spark, sf_dir).select(
-        F.lit("per_doc").alias("leg"), "doc_id",
-        F.col("accuracy").alias("v1"), F.lit(0.0).alias("v2"),
-        F.col("exact_match").alias("flag"),
-        F.col("n_fields").cast("long").alias("n"),
-    )
-    overall = q_eval_overall(spark, sf_dir).select(
-        F.lit("overall").alias("leg"), F.lit(-1).cast("long").alias("doc_id"),
-        F.col("mean_accuracy").alias("v1"),
-        F.col("exact_match_rate").alias("v2"),
-        F.lit(False).alias("flag"), F.col("n_docs").cast("long").alias("n"),
-    )
-    return doc.unionByName(overall)
-
-
-ORACLES["eval_accuracy"] = f"""
-    SELECT 'per_doc' AS leg, doc_id, accuracy AS v1, 0.0 AS v2,
-           exact_match AS flag, CAST(n_fields AS BIGINT) AS n
-    FROM ({ORACLES["eval_doc_accuracy"]})
-    UNION ALL
-    SELECT 'overall', CAST(-1 AS BIGINT), mean_accuracy, exact_match_rate,
-           false, CAST(n_docs AS BIGINT)
-    FROM ({ORACLES["eval_overall"]})
-"""
-
-
-@_q("vote_variants", None)
-def q_vote_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of A2/W3 majority vote with pinned tie-break
-    (`majority_vote`) and the reference's declared-but-unimplemented
-    highest-confidence voter (`highest_confidence_vote`); the flagship A1
-    weighted vote stays standalone. Normalized to
-    (leg, doc_id, field_name, value, score)."""
-    maj = q_majority_vote(spark, sf_dir).select(
-        F.lit("majority").alias("leg"), "doc_id", "field_name", "value",
-        F.col("n_votes").cast("double").alias("score"),
-    )
-    conf = q_highest_confidence_vote(spark, sf_dir).select(
-        F.lit("confidence").alias("leg"), "doc_id", "field_name", "value",
-        F.col("confidence").alias("score"),
-    )
-    return maj.unionByName(conf)
-
-
-ORACLES["vote_variants"] = f"""
-    SELECT 'majority' AS leg, doc_id, field_name, value,
-           CAST(n_votes AS DOUBLE) AS score
-    FROM ({ORACLES["majority_vote"]})
-    UNION ALL
-    SELECT 'confidence', doc_id, field_name, value, confidence
-    FROM ({ORACLES["highest_confidence_vote"]})
-"""
-
-
-@_q("similarity_ann", None)
-def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the four top-k variants over one schema: the
-    brute-force exactness baseline (`similarity_topk` — SQL all-pairs
-    oracle leg) and the three scale paths — random-hyperplane LSH buckets
-    + exact rerank (`similarity_lsh_topk`), IVF cell probing
-    (`similarity_ivf_topk`), and product-quantized IVFADC
-    (`similarity_ivf_pq_topk`), which keep their pure-Python-replay
-    goldens."""
-    brute = q_similarity_topk(spark, sf_dir).select(
-        F.lit("brute").alias("leg"), "query_id", "neighbor_id", "rank", "cosine"
-    )
-    lsh = q_similarity_lsh_topk(spark, sf_dir).select(
-        F.lit("lsh").alias("leg"), "query_id", "neighbor_id", "rank", "cosine"
-    )
-    ivf = q_similarity_ivf_topk(spark, sf_dir).select(
-        F.lit("ivf").alias("leg"), "query_id", "neighbor_id", "rank", "cosine"
-    )
-    ivf_pq = q_similarity_ivf_pq_topk(spark, sf_dir).select(
-        F.lit("pq").alias("leg"), "query_id", "neighbor_id", "rank", "cosine"
-    )
-    pq_incr = q_similarity_pq_incremental(spark, sf_dir).select(
-        F.lit("pq_incr").alias("leg"), "query_id", "neighbor_id", "rank", "cosine"
-    )
-    return (
-        brute.unionByName(lsh).unionByName(ivf).unionByName(ivf_pq)
-        .unionByName(pq_incr)
-    )
-
-
-def _similarity_ann_oracle() -> str:
-    return (
-        "SELECT 'brute' AS leg, query_id, neighbor_id, \"rank\", cosine "
-        f"FROM ({ORACLES['similarity_topk']}) "
-        "UNION ALL "
-        "SELECT 'lsh', query_id, neighbor_id, \"rank\", cosine "
-        f"FROM read_parquet('{_GOLDEN_DIR}/similarity_lsh_topk.parquet') "
-        "UNION ALL "
-        "SELECT 'ivf', query_id, neighbor_id, \"rank\", cosine "
-        f"FROM read_parquet('{_GOLDEN_DIR}/similarity_ivf_topk.parquet') "
-        "UNION ALL "
-        "SELECT 'pq', query_id, neighbor_id, \"rank\", cosine "
-        f"FROM read_parquet('{_GOLDEN_DIR}/similarity_ivf_pq_topk.parquet') "
-        "UNION ALL "
-        "SELECT 'pq_incr', query_id, neighbor_id, \"rank\", cosine "
-        f"FROM read_parquet('{_GOLDEN_DIR}/similarity_pq_incremental.parquet')"
-    )
-
-
-ORACLES["similarity_ann"] = _similarity_ann_oracle()
-GOLDEN_ORACLE_QUERIES.add("similarity_ann")
-
-
 @_q(
     "mixture_rates_tau",
     """
@@ -3841,52 +3345,6 @@ def q_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_epochs(_docs(spark, sf_dir), budget=1000.0, temperature=0.5)
 
 
-@_q("mixture_temperatures", None)
-def q_mixture_temperatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the temperature-mixing parameter surface, normalized
-    to (tau, metric, stratum, n_docs, v): the default τ=0.5 rate leg
-    (`mixture_rates`), the non-default τ=0.25/0.75 rate legs
-    (`mixture_rates_tau`), and the budget-epoch legs (`mixture_epochs`:
-    metric='share' and metric='epochs'). The temperatures are
-    dyadic-rational exponents restated as sqrt compositions and the epoch
-    normalization is an order-pinned fold, so the combined oracle stays
-    value-exact SQL with no golden and no libm pow() dependence."""
-    half = q_mixture_rates(spark, sf_dir).select(
-        F.lit(0.5).alias("tau"), F.lit("rate").alias("metric"),
-        "stratum", "n_docs", F.col("rate").alias("v"),
-    )
-    taus = q_mixture_rates_tau(spark, sf_dir).select(
-        "tau", F.lit("rate").alias("metric"),
-        "stratum", "n_docs", F.col("rate").alias("v"),
-    )
-    ep = q_mixture_epochs(spark, sf_dir)
-    shares = ep.select(
-        F.lit(0.5).alias("tau"), F.lit("share").alias("metric"),
-        "stratum", "n_docs", F.col("share").alias("v"),
-    )
-    epochs = ep.select(
-        F.lit(0.5).alias("tau"), F.lit("epochs").alias("metric"),
-        "stratum", "n_docs", F.col("epochs").alias("v"),
-    )
-    return half.unionByName(taus).unionByName(shares).unionByName(epochs)
-
-
-ORACLES["mixture_temperatures"] = f"""
-    SELECT CAST(0.5 AS DOUBLE) AS tau, 'rate' AS metric, stratum, n_docs,
-           rate AS v
-    FROM ({ORACLES["mixture_rates"]})
-    UNION ALL
-    SELECT tau, 'rate', stratum, n_docs, rate
-    FROM ({ORACLES["mixture_rates_tau"]})
-    UNION ALL
-    SELECT CAST(0.5 AS DOUBLE), 'share', stratum, n_docs, share
-    FROM ({ORACLES["mixture_epochs"]})
-    UNION ALL
-    SELECT CAST(0.5 AS DOUBLE), 'epochs', stratum, n_docs, epochs
-    FROM ({ORACLES["mixture_epochs"]})
-"""
-
-
 @_q(
     "fixed_windows",
     """
@@ -3936,175 +3394,236 @@ def q_fixed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return window_summary(fixed_windows(docs, window=256))
 
 
-@_q("packing", None)
-def q_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the shard-packing surface: the whitespace-token
-    boundary + dense legs (`pack_sequences`), the real-BPE-budget leg
-    (`pack_sequences_bpe`, golden-pinned tokenizer counts + SQL-restated
-    packing math) and the GPT-style fixed-window chunking leg
-    (`fixed_windows`, docs spanning 256-token boundaries), normalized to
-    (leg, source, pack_id, n_docs, pack_tokens). Folding the pack driver
-    names into one frees a record slot for `selection_suite` under the
-    50-row cap."""
-    ws = q_pack_sequences(spark, sf_dir)
-    bpe = q_pack_sequences_bpe(spark, sf_dir).select(
-        F.lit("bpe").alias("leg"), "source", "pack_id", "n_docs", "pack_tokens"
-    )
-    win = q_fixed_windows(spark, sf_dir).select(
-        F.lit("window").alias("leg"), "source",
-        F.col("window_id").alias("pack_id"), "n_docs",
-        F.col("window_tokens").alias("pack_tokens"),
-    )
-    return ws.unionByName(bpe).unionByName(win)
+# ---------------------------------------------------------------------------
+# Driver-facing composites.
+#
+# The driver's correctness record holds at most 50 rows (VERDICT r3: exactly
+# 50 recorded while the catalog grew 52→62 — a count cap, not a time budget),
+# so single-aspect queries are folded into UNION composites: every member's
+# rows stay value-checked (plus a leg tag) under one driver-facing name. The
+# members stay registered; scripts/verify_contract.py checks the full catalog.
+#
+# A composite is declared once, as legs; `_composite` generates both engines.
+# A leg is (member, [select-list expressions]) with every output column
+# aliased, `leg` included. Spark runs QUERIES[member].selectExpr(*exprs) and
+# unions the legs by name; DuckDB runs SELECT <same exprs> FROM
+# (ORACLES[member]) joined by UNION ALL BY NAME. The shared text sticks to
+# constructs both dialects parse alike: CAST(… AS BIGINT/DOUBLE/INT/STRING),
+# CASE WHEN, round, null-propagating ||, literals. A zero double is
+# CAST(0 AS DOUBLE): bare 0.0 is a DECIMAL in both engines. The one other leg
+# shape adds a group key as a third element (Spark groupBy(key).agg, SQL
+# GROUP BY). A composite is golden-backed exactly when one of its members is.
+# ---------------------------------------------------------------------------
 
 
-ORACLES["packing"] = f"""
-    SELECT leg, source, pack_id, CAST(n_docs AS BIGINT) AS n_docs, pack_tokens
-    FROM ({ORACLES["pack_sequences"]})
-    UNION ALL
-    SELECT 'bpe', source, pack_id, CAST(n_docs AS BIGINT), pack_tokens
-    FROM ({ORACLES["pack_sequences_bpe"]})
-    UNION ALL
-    SELECT 'window', source, window_id, CAST(n_docs AS BIGINT), window_tokens
-    FROM ({ORACLES["fixed_windows"]})
-"""
-# the bpe leg reads the golden token counts → sf0.01-only, like its member
-GOLDEN_ORACLE_QUERIES.add("packing")
+def _composite(name: str, legs: list[tuple]) -> None:
+    def duck(expr: str) -> str:
+        # DuckDB reserves `offset`: quote bare column names on its side only
+        return f'"{expr}"' if expr.isidentifier() else expr
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        members = {m: QUERIES[m](spark, sf_dir) for m, *_ in legs}
+        return reduce(DataFrame.unionByName, [
+            members[m].groupBy(*key).agg(*map(F.expr, exprs)).drop(*key)
+            if key else members[m].selectExpr(*exprs)
+            for m, exprs, *key in legs
+        ])
+
+    QUERIES[name] = query
+    ORACLES[name] = "\nUNION ALL BY NAME\n".join(
+        f"SELECT {', '.join(map(duck, exprs))} FROM ({ORACLES[m]})"
+        + "".join(f" GROUP BY {k}" for k in key)
+        for m, exprs, *key in legs
+    )
+    if any(m in GOLDEN_ORACLE_QUERIES for m, *_ in legs):
+        GOLDEN_ORACLE_QUERIES.add(name)
 
 
-@_q("selection_suite", None)
-def q_selection_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of the retrieval-based data-selection operators added in
-    round 4, normalized to (leg, doc_id, key, n1, n2, v):
+_NO_ID = "CAST(-1 AS BIGINT) AS doc_id"  # rollup legs carry no document
+_LONG0, _DOUBLE0 = "CAST(0 AS BIGINT)", "CAST(0 AS DOUBLE)"
 
-    - leg='contamination': graded benchmark-overlap score
-      (`contamination_score`) — n1=total_grams, n2=hit_grams, v=score;
-    - leg='budget': quality-ranked selection under per-source token
-      budgets (`budget_select`, threshold scale path) — key=source,
-      n1=n_tokens, v=quality score;
-    - leg='bloom': Bloom-prefiltered incremental-ingest dedup survivors
-      (`dedup_bloom_incremental`) — key=source;
-    - leg='bm25': BM25 lexical retrieval (`bm25_search`) —
-      n1=n_hit_terms, v=score (fixed-order left-fold float sum);
-    - leg='lsh_incr': incremental near-dup pairs vs committed history
-      signatures (`dedup_lsh_incremental`) — doc_id=doc_a, n1=doc_b,
-      v=est_jaccard;
-    - leg='url': URL-level dedup over the canonicalized URL
-      (`url_dedup`, RefinedWeb's first dedup stage) — key=canonical_url,
-      n1=group_size, n2=keep(0/1);
-    - leg='domain': domain-blocklist flags (`domain_blocklist`, the C4
-      badlist stage) — key=host, n2=blocked(0/1).
-
-    The lsh_incr leg reads the banding-replay golden, so the composite is
-    sf0.01-checked like its member; every other member oracle is plain
-    SQL and stays value-exact at any SF individually."""
-    cont = q_contamination_score(spark, sf_dir).select(
-        F.lit("contamination").alias("leg"), "doc_id",
-        F.lit("").alias("key"),
-        F.col("total_grams").alias("n1"), F.col("hit_grams").alias("n2"),
-        F.col("contamination").alias("v"),
-    )
-    budget = q_budget_select(spark, sf_dir).select(
-        F.lit("budget").alias("leg"), "doc_id",
-        F.col("source").alias("key"),
-        F.col("n_tokens").alias("n1"), F.lit(0).cast("long").alias("n2"),
-        F.col("score").alias("v"),
-    )
-    bloom = q_dedup_bloom_incremental(spark, sf_dir).select(
-        F.lit("bloom").alias("leg"), "doc_id",
-        F.col("source").alias("key"),
-        F.lit(0).cast("long").alias("n1"), F.lit(0).cast("long").alias("n2"),
-        F.lit(0.0).alias("v"),
-    )
-    bm25 = q_bm25_search(spark, sf_dir).select(
-        F.lit("bm25").alias("leg"), "doc_id",
-        F.lit("").alias("key"),
-        F.col("n_hit_terms").alias("n1"), F.lit(0).cast("long").alias("n2"),
-        F.col("score").alias("v"),
-    )
-    lsh = q_dedup_lsh_incremental(spark, sf_dir).select(
-        F.lit("lsh_incr").alias("leg"), F.col("doc_a").alias("doc_id"),
-        F.lit("").alias("key"),
-        F.col("doc_b").alias("n1"), F.lit(0).cast("long").alias("n2"),
-        F.col("est_jaccard").alias("v"),
-    )
-    urls = q_url_dedup(spark, sf_dir).select(
-        F.lit("url").alias("leg"), "doc_id",
-        F.col("canonical_url").alias("key"),
-        F.col("group_size").alias("n1"),
-        F.when(F.col("keep"), F.lit(1)).otherwise(F.lit(0)).cast("long").alias("n2"),
-        F.lit(0.0).alias("v"),
-    )
-    domains = q_domain_blocklist(spark, sf_dir).select(
-        F.lit("domain").alias("leg"), "doc_id",
-        F.col("host").alias("key"),
-        F.lit(0).cast("long").alias("n1"),
-        F.when(F.col("blocked"), F.lit(1)).otherwise(F.lit(0)).cast("long").alias("n2"),
-        F.lit(0.0).alias("v"),
-    )
-    return (
-        cont.unionByName(budget).unionByName(bloom)
-        .unionByName(bm25).unionByName(lsh).unionByName(urls)
-        .unionByName(domains)
-    )
-
-
-ORACLES["selection_suite"] = f"""
-    SELECT 'contamination' AS leg, doc_id, '' AS key,
-           total_grams AS n1, hit_grams AS n2, contamination AS v
-    FROM ({ORACLES["contamination_score"]})
-    UNION ALL
-    SELECT 'budget', doc_id, source, n_tokens, CAST(0 AS BIGINT), score
-    FROM ({ORACLES["budget_select"]})
-    UNION ALL
-    SELECT 'bloom', doc_id, source, CAST(0 AS BIGINT), CAST(0 AS BIGINT), 0.0
-    FROM ({ORACLES["dedup_bloom_incremental"]})
-    UNION ALL
-    SELECT 'bm25', doc_id, '', n_hit_terms, CAST(0 AS BIGINT), score
-    FROM ({ORACLES["bm25_search"]})
-    UNION ALL
-    SELECT 'lsh_incr', doc_a, '', doc_b, CAST(0 AS BIGINT), est_jaccard
-    FROM ({ORACLES["dedup_lsh_incremental"]})
-    UNION ALL
-    SELECT 'url', doc_id, canonical_url, group_size,
-           CAST(CASE WHEN keep THEN 1 ELSE 0 END AS BIGINT), 0.0
-    FROM ({ORACLES["url_dedup"]})
-    UNION ALL
-    SELECT 'domain', doc_id, host, CAST(0 AS BIGINT),
-           CAST(CASE WHEN blocked THEN 1 ELSE 0 END AS BIGINT), 0.0
-    FROM ({ORACLES["domain_blocklist"]})
-"""
-# the lsh_incr leg reads the banding-replay golden → sf0.01-only
-GOLDEN_ORACLE_QUERIES.add("selection_suite")
-
-
-@_q("extract_variants", None)
-def q_extract_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of U1's two physical plans — `extract_spans` (doc-level
-    narrow kernel, the flagship) and `extract_spans_wide` (span-level
-    posexplode path for mega-doc stragglers) — each leg the member query
-    VERBATIM, tagged with a leg column. The two must be row-for-row
-    identical by contract (also pinned by tests/test_extract_e2e.py), so
-    both legs compare against the same pure-Python golden. Folding the
-    wide variant here keeps the driver-facing surface at 50 names
-    (the driver's correctness record holds 50 rows)."""
-    base = q_extract_spans(spark, sf_dir).select(
-        F.lit("base").alias("leg"), "doc_id", "kind", "text", "media_ref", "offset"
-    )
-    wide = q_extract_spans_wide(spark, sf_dir).select(
-        F.lit("wide").alias("leg"), "doc_id", "kind", "text", "media_ref", "offset"
-    )
-    return base.unionByName(wide)
-
-
-ORACLES["extract_variants"] = f"""
-    SELECT 'base' AS leg, doc_id, kind, text, media_ref, "offset"
-    FROM read_parquet('{_GOLDEN_DIR}/extract_spans.parquet')
-    UNION ALL
-    SELECT 'wide' AS leg, doc_id, kind, text, media_ref, "offset"
-    FROM read_parquet('{_GOLDEN_DIR}/extract_spans.parquet')
-"""
-GOLDEN_ORACLE_QUERIES.add("extract_variants")
+# §3.1 corpus-ingest lifecycle: S1/S2/W4 scan_limit, S3/J5 sample_explode,
+# J4 sample_gate, P1 source_filter (one row per metric), P6 confidence_bands
+_composite("scan_lifecycle", [
+    # null-propagating || (not concat_ws): a NULL lang or source nulls attr
+    ("scan_limit", ["'scan' AS leg", "doc_id", "lang || '|' || source AS attr",
+                    "CAST(n_chars AS BIGINT) AS n"]),
+    ("sample_explode", ["'sample' AS leg", "doc_id", "'' AS attr",
+                        "CAST(sample_id AS BIGINT) AS n"]),
+    ("sample_gate", ["'gate' AS leg", "doc_id", "'' AS attr",
+                     "CAST(n_samples AS BIGINT) AS n"]),
+    ("source_filter", ["'source_docs' AS leg", _NO_ID, "source AS attr",
+                       "CAST(n_docs AS BIGINT) AS n"]),
+    ("source_filter", ["'source_chars' AS leg", _NO_ID, "source AS attr",
+                       "CAST(total_chars AS BIGINT) AS n"]),
+    ("confidence_bands", ["'bands' AS leg", _NO_ID, "band AS attr",
+                          "CAST(n AS BIGINT) AS n"]),
+])
+# O4/K4: hash-bucket split and exact-count split with tiny-corpus degeneracy
+_composite("split_datasets", [
+    ("split_assignment", ["'hash' AS leg", "split", "n_docs"]),
+    ("split_sized", ["'sized' AS leg", "split", "n_docs"]),
+])
+# per-document text signals: language ID, quality, token accounting, vocab
+# fingerprint, repetition, Gopher gates (v1 = docs passing ALL gates, v2 =
+# individual-gate passes), corpus drift
+_composite("text_signals", [
+    ("text_lang_id", ["'lang' AS leg", "lang_hat AS key", "n_docs",
+                      f"{_DOUBLE0} AS v1", f"{_DOUBLE0} AS v2"]),
+    ("text_quality", ["'quality' AS leg",
+                      "CAST(CAST(round(quality * 4) AS INT) AS STRING) AS key",
+                      "n_docs", "round(quality, 6) AS v1", f"{_DOUBLE0} AS v2"]),
+    ("text_token_stats", ["'tokens' AS leg", "source AS key", "n_docs",
+                          "CAST(ws_tokens AS DOUBLE) AS v1",
+                          "CAST(bpe_tokens AS DOUBLE) AS v2"]),
+    ("text_fingerprint", ["'fingerprint' AS leg", "fp AS key", "n_docs",
+                          "CAST(keep_id AS DOUBLE) AS v1", f"{_DOUBLE0} AS v2"]),
+    ("text_repetition", ["'repetition' AS leg", "source AS key", "n_docs",
+                         "avg_repetition AS v1",
+                         "CAST(n_repetitive AS DOUBLE) AS v2"]),
+    ("gopher_gates", ["'gopher' AS leg", "source AS key", "count(*) AS n_docs",
+                      "CAST(sum(CAST(keep AS INT)) AS DOUBLE) AS v1",
+                      "CAST(sum(CAST(g_word_count AS INT) + CAST(g_mean_word_len AS INT)"
+                      " + CAST(g_symbol_ratio AS INT) + CAST(g_alpha_words AS INT)"
+                      " + CAST(g_stopwords AS INT) + CAST(g_repetition AS INT))"
+                      " AS DOUBLE) AS v2"], "source"),
+    ("corpus_drift", ["'drift' AS leg", "term AS key", "n_cand + n_ref AS n_docs",
+                      "kl_contrib AS v1", "tv_contrib AS v2"]),
+])
+# multimodal plan legs: decode→typed metadata, every-Nth-frame sampling, U7
+# resize guard. media_payload_decode stays a standalone driver query — it is
+# the one that exercises kernel/imagecodec.py
+_composite("media_pipeline", [
+    ("media_features", ["'features' AS leg", "doc_id", "media_ref", "width AS a",
+                        "height AS b", "n_frames AS c"]),
+    ("media_frame_sample", ["'frame' AS leg", "doc_id", "media_ref",
+                            "frame_idx AS a", "0 AS b", "0 AS c"]),
+    ("media_resize_plan", ["'resize' AS leg", "doc_id", "media_ref",
+                           "halvings AS a", "target_width AS b",
+                           "target_height AS c"]),
+])
+# A5/W2 per-doc sampling stats + A6 global best-vs-mean effectiveness
+_composite("sampling_suite", [
+    ("sampling_stats", ["'per_doc' AS leg", "doc_id", "mean_accuracy AS m1",
+                        "max_accuracy AS m2", "min_accuracy AS m3",
+                        "any_exact_match AS flag", "CAST(n_samples AS BIGINT) AS n",
+                        "CAST(best_sample_id AS BIGINT) AS best"]),
+    ("sampling_effectiveness", ["'overall' AS leg", _NO_ID,
+                                "mean_improvement AS m1", "max_improvement AS m2",
+                                "min_improvement AS m3", "false AS flag",
+                                f"{_LONG0} AS n", f"{_LONG0} AS best"]),
+])
+# A3 per-doc accuracy + A4/A7 overall rollup; the per-field matrix stays
+# standalone in eval_field_accuracy (flagship J2/F6)
+_composite("eval_accuracy", [
+    ("eval_doc_accuracy", ["'per_doc' AS leg", "doc_id", "accuracy AS v1",
+                           f"{_DOUBLE0} AS v2", "exact_match AS flag",
+                           "CAST(n_fields AS BIGINT) AS n"]),
+    ("eval_overall", ["'overall' AS leg", _NO_ID, "mean_accuracy AS v1",
+                      "exact_match_rate AS v2", "false AS flag",
+                      "CAST(n_docs AS BIGINT) AS n"]),
+])
+# A2/W3 majority vote with pinned tie-break + the reference's declared-but-
+# unimplemented highest-confidence voter; flagship A1 weighted vote stays out
+_composite("vote_variants", [
+    ("majority_vote", ["'majority' AS leg", "doc_id", "field_name", "value",
+                       "CAST(n_votes AS DOUBLE) AS score"]),
+    ("highest_confidence_vote", ["'confidence' AS leg", "doc_id", "field_name",
+                                 "value", "confidence AS score"]),
+])
+# top-k variants: brute-force exactness baseline (SQL all-pairs oracle) and
+# the scale paths — LSH buckets + exact rerank, IVF cell probing, IVFADC,
+# incremental PQ — which keep their pure-Python-replay goldens
+_composite("similarity_ann", [
+    (m, [f"'{leg}' AS leg", "query_id", "neighbor_id", "rank", "cosine"])
+    for leg, m in [("brute", "similarity_topk"), ("lsh", "similarity_lsh_topk"),
+                   ("ivf", "similarity_ivf_topk"), ("pq", "similarity_ivf_pq_topk"),
+                   ("pq_incr", "similarity_pq_incremental")]
+])
+# temperature-mixing surface: τ=0.5 rates, τ=0.25/0.75 rates, τ=0.5 budget
+# share + epochs. Dyadic exponents as sqrt compositions and an order-pinned
+# fold keep the oracle value-exact SQL, with no golden and no libm pow()
+_composite("mixture_temperatures", [
+    (m, [t, f"'{metric}' AS metric", "stratum", "n_docs", f"{metric} AS v"])
+    for m, t, metric in [
+        ("mixture_rates", "CAST(0.5 AS DOUBLE) AS tau", "rate"),
+        ("mixture_rates_tau", "tau", "rate"),
+        ("mixture_epochs", "CAST(0.5 AS DOUBLE) AS tau", "share"),
+        ("mixture_epochs", "CAST(0.5 AS DOUBLE) AS tau", "epochs"),
+    ]
+])
+# shard packing: whitespace-token boundary + dense legs, real-BPE budget
+# (golden tokenizer counts), GPT-style 256-token fixed windows. Folding the
+# pack names freed a record slot for selection_suite under the 50-row cap
+_composite("packing", [
+    ("pack_sequences", ["leg", "source", "pack_id",
+                        "CAST(n_docs AS BIGINT) AS n_docs", "pack_tokens"]),
+    ("pack_sequences_bpe", ["'bpe' AS leg", "source", "pack_id",
+                            "CAST(n_docs AS BIGINT) AS n_docs", "pack_tokens"]),
+    ("fixed_windows", ["'window' AS leg", "source", "window_id AS pack_id",
+                       "CAST(n_docs AS BIGINT) AS n_docs",
+                       "window_tokens AS pack_tokens"]),
+])
+# round-4 retrieval-based data selection: graded contamination, per-source
+# token budgets, Bloom-prefiltered incremental dedup, BM25 (fixed-order
+# left-fold score), incremental LSH vs committed history (doc_id = doc_a,
+# n1 = doc_b), URL dedup (RefinedWeb stage 1), C4 domain blocklist
+_composite("selection_suite", [
+    ("contamination_score", ["'contamination' AS leg", "doc_id", "'' AS key",
+                             "total_grams AS n1", "hit_grams AS n2",
+                             "contamination AS v"]),
+    ("budget_select", ["'budget' AS leg", "doc_id", "source AS key",
+                       "n_tokens AS n1", f"{_LONG0} AS n2", "score AS v"]),
+    ("dedup_bloom_incremental", ["'bloom' AS leg", "doc_id", "source AS key",
+                                 f"{_LONG0} AS n1", f"{_LONG0} AS n2",
+                                 f"{_DOUBLE0} AS v"]),
+    ("bm25_search", ["'bm25' AS leg", "doc_id", "'' AS key", "n_hit_terms AS n1",
+                     f"{_LONG0} AS n2", "score AS v"]),
+    ("dedup_lsh_incremental", ["'lsh_incr' AS leg", "doc_a AS doc_id",
+                               "'' AS key", "doc_b AS n1", f"{_LONG0} AS n2",
+                               "est_jaccard AS v"]),
+    ("url_dedup", ["'url' AS leg", "doc_id", "canonical_url AS key",
+                   "group_size AS n1",
+                   "CAST(CASE WHEN keep THEN 1 ELSE 0 END AS BIGINT) AS n2",
+                   f"{_DOUBLE0} AS v"]),
+    ("domain_blocklist", ["'domain' AS leg", "doc_id", "host AS key",
+                          f"{_LONG0} AS n1",
+                          "CAST(CASE WHEN blocked THEN 1 ELSE 0 END AS BIGINT) AS n2",
+                          f"{_DOUBLE0} AS v"]),
+])
+# U1's two physical plans — doc-level narrow kernel (the flagship) and the
+# span-level posexplode path for mega-doc stragglers. They are row-for-row
+# identical by contract, so both legs compare against the same golden
+_composite("extract_variants", [
+    (m, [f"'{leg}' AS leg", "doc_id", "kind", "text", "media_ref", "offset"])
+    for leg, m in [("base", "extract_spans"), ("wide", "extract_spans_wide")]
+])
+# operational profiling: per-source stats (n3/n4 = min/max chars, v2 = exact
+# median), heavy-hitter skew report, HLL++-vs-exact distinct audit
+_composite("profiling", [
+    ("corpus_profile", ["'profile' AS leg", "source AS key",
+                        "CAST(n_docs AS BIGINT) AS n1", "total_chars AS n2",
+                        "CAST(min_chars AS BIGINT) AS n3",
+                        "CAST(max_chars AS BIGINT) AS n4", "mean_chars AS v1",
+                        "median_chars AS v2"]),
+    ("skew_report", ["'skew' AS leg", "key", "n AS n1", "rank AS n2",
+                     f"{_LONG0} AS n3", f"{_LONG0} AS n4", "frac AS v1",
+                     f"{_DOUBLE0} AS v2"]),
+    ("cardinality_audit", ["'cardinality' AS leg", "grp AS key",
+                           "exact_distinct AS n1", "CAST(within_tol AS BIGINT) AS n2",
+                           f"{_LONG0} AS n3", f"{_LONG0} AS n4",
+                           f"{_DOUBLE0} AS v1", f"{_DOUBLE0} AS v2"]),
+])
+# event-time windows: tumbling rollups + per-user sessions, both batch twins
+# of watermarked streaming jobs; bounds stay strings (cross-engine timestamps)
+_composite("event_windows", [
+    ("windowed_rollup", ["'tumbling' AS leg", "event_type AS key",
+                         "window_start AS win_start", "window_end AS win_end",
+                         "n_events", "total_value"]),
+    ("sessionize", ["'session' AS leg", "CAST(user_id AS STRING) AS key",
+                    "session_start AS win_start", "session_end AS win_end",
+                    "n_events", "total_value"]),
+])
 
 
 # Driver-facing surface: ≤50 names (the round driver's correctness record
