@@ -193,9 +193,12 @@ def repetition_score(text: Column, n: int = 3) -> Column:
     """
     from ..operators.dedup import ngram_tokens
 
-    # total uses the SAME unfiltered word basis as ngram_tokens (split on
-    # ' ' without dropping empties), so distinct ≤ total always holds
-    total = F.greatest(F.size(words(text)) - (n - 1), F.lit(0))
+    # total uses the SAME empty-filtered word basis as ngram_tokens (extra
+    # spaces are not tokens), so distinct ≤ total always holds and the
+    # DuckDB twins (text_repetition, gopher_gates) split the same way
+    total = F.greatest(
+        F.size(F.filter(words(text), lambda w: w != "")) - (n - 1), F.lit(0)
+    )
     distinct = F.size(ngram_tokens(text, n))
     return F.when(
         total > 0, F.lit(1.0) - distinct.cast("double") / total.cast("double")

@@ -1732,7 +1732,9 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition",
     """
     WITH toks AS (
-      SELECT source, string_split(lower(text), ' ') AS w FROM documents
+      SELECT source,
+             list_filter(string_split(lower(text), ' '), x -> x <> '') AS w
+      FROM documents
     ),
     rep AS (
       SELECT source,
@@ -2953,8 +2955,7 @@ def q_streaming_digest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH toks AS (
       SELECT doc_id, source, lower(text) AS lt, text,
-             list_filter(string_split(lower(text), ' '), x -> x <> '') AS w,
-             string_split(lower(text), ' ') AS w0
+             list_filter(string_split(lower(text), ' '), x -> x <> '') AS w
       FROM documents
     ),
     g AS (
@@ -2971,11 +2972,11 @@ def q_streaming_digest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
           + len(regexp_extract_all(text, '…')) AS symbols,
         len(list_distinct(list_filter(w, x -> x IN
           ('the','be','to','of','and','that','have','with')))) AS dstop,
-        CASE WHEN len(w0) >= 3
+        CASE WHEN len(w) >= 3
              THEN 1.0 - CAST(len(list_distinct(
-                    [array_to_string(w0[i : i + 2], ' ')
-                     for i in generate_series(1, len(w0) - 2)])) AS DOUBLE)
-                  / CAST(len(w0) - 2 AS DOUBLE)
+                    [array_to_string(w[i : i + 2], ' ')
+                     for i in generate_series(1, len(w) - 2)])) AS DOUBLE)
+                  / CAST(len(w) - 2 AS DOUBLE)
              ELSE 0.0 END AS rep
       FROM toks
     ),

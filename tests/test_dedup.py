@@ -334,19 +334,39 @@ def test_dedup_clusters_iteration_guard(spark):
 
 
 def test_repetition_score_values(spark):
+    import duckdb
     from pyspark.sql import functions as F
 
-    from openllm_ocr_annotator_spark.functions.text import repetition_score
+    from openllm_ocr_annotator_spark.functions.text import gopher_gates, repetition_score
+    from openllm_ocr_annotator_spark.queries_catalog import ORACLES
 
     rows = [
         ("rep", "a b c a b c a b c"),     # 7 grams, 3 distinct → 4/7
         ("uniq", "one two three four five"),  # 3 grams, all distinct → 0
         ("tiny", "x y"),                   # < n words → 0
+        ("spaced", "a  b c d"),            # the doubled space is no token → 0
     ]
+    want = {"rep": round(4 / 7, 6), "uniq": 0.0, "tiny": 0.0, "spaced": 0.0}
     df = spark.createDataFrame(rows, "id string, text string")
     got = {r.id: round(r.r, 6) for r in
            df.select("id", repetition_score(F.col("text"), 3).alias("r")).collect()}
-    assert got == {"rep": round(4 / 7, 6), "uniq": 0.0, "tiny": 0.0}
+    assert got == want
+    # the DuckDB twins split the same way: text_repetition's per-source mean
+    # (one doc per source here) and gopher_gates' g_repetition gate
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, source VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)",
+                    [(i, s, t) for i, (s, t) in enumerate(rows)])
+    duck = dict(con.execute(
+        f"SELECT source, avg_repetition FROM ({ORACLES['text_repetition']})"
+    ).fetchall())
+    assert duck == want
+    spark_gate = {r.id: r.g for r in df.select(
+        "id", gopher_gates(F.col("text"))["g_repetition"].alias("g")).collect()}
+    duck_gate = dict(con.execute(
+        f"SELECT source, g_repetition FROM ({ORACLES['gopher_gates']})"
+    ).fetchall())
+    assert duck_gate == spark_gate == {k: v <= 0.2 for k, v in want.items()}
 
 
 def test_caches_handback_and_release(spark):
