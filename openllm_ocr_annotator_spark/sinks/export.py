@@ -18,6 +18,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -109,11 +111,12 @@ def split_column(
     Thresholds round half-up (same as ``stratified_sample``): ``int()``
     floors, and train=0.29 floors int(28.999…) to 28 — a band one
     percentage point short for any ratio whose ×100 is not exactly
-    representable."""
+    representable; Python's ``round()`` is banker's rounding, and
+    train=0.125 would get 12 buckets instead of 13."""
     b = split_bucket(key, seed)
     return (
-        F.when(b < int(round(train * 100)), "train")
-        .when(b < int(round((train + test) * 100)), "test")
+        F.when(b < math.floor(train * 100 + 0.5), "train")
+        .when(b < math.floor((train + test) * 100 + 0.5), "test")
         .otherwise("validation")
     )
 
@@ -160,8 +163,6 @@ def sized_split(
     holdout_ratio = test + validation
     if total < 2 or holdout_ratio <= 0 or holdout_ratio >= 1:
         return df.withColumn("split", F.lit("train"))
-    import math
-
     holdout = max(1, min(total - 1, round(total * holdout_ratio)))
     val_n = 0
     if validation > 0 and test > 0 and holdout > 1:

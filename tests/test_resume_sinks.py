@@ -113,6 +113,15 @@ def test_split_deterministic_and_partitioned(spark, tmp_path):
     assert abs(pct["train"] - 0.80) < 0.01, pct
     assert abs(pct["test"] - 0.10) < 0.01, pct
     assert abs(pct["validation"] - 0.10) < 0.01, pct
+    # thresholds round half-up: train=0.125 is 13 buckets (banker's
+    # rounding would give round(12.5) = 12)
+    from openllm_ocr_annotator_spark.sinks.export import split_bucket
+
+    eighth = spark.range(2000).select(
+        split_bucket(F.col("id")).alias("b"),
+        split_column(F.col("id"), train=0.125).alias("split"),
+    ).filter(F.col("split") == "train")
+    assert {r.b for r in eighth.select("b").distinct().collect()} == set(range(13))
     out = str(tmp_path / "ds")
     write_split_parquet(docs, out, key_col="doc_id")
     assert sorted(d for d in os.listdir(out) if d.startswith("split=")) == [
