@@ -158,7 +158,9 @@ class _HadoopFS:
             self.fs.delete(jpath, False)
             raise
         written = self.read_json_or_none(path)
-        if written != obj:
+        # compare with the JSON round-trip of obj, not obj: tuples come back
+        # as lists and int keys as strings on a body that did land intact
+        if written != json.loads(json.dumps(obj)):
             raise IOError(
                 f"claim at {path} was reclaimed mid-write: the body on "
                 "store is not the manifest this committer wrote"

@@ -364,6 +364,19 @@ def test_cas_stale_bodyless_claim_unwedges_commit_cas(spark, tmp_path):
     assert {r.doc_id for r in t.read_committed().collect()} == {0, 1, 9, 10}
 
 
+def test_create_exclusive_accepts_non_json_native_extra(spark, tmp_path):
+    """A manifest extra that does not survive JSON unchanged (a tuple, an
+    int key) is still a published commit: the post-write re-read compares
+    against the JSON round-trip, so it must not report a reclaimed claim."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    extra = {"shape": (2, 3), "by_id": {7: "seven"}}
+    assert t._fs.create_exclusive(str(tmp_path / "claim.json"), extra) is True
+    snap = t.commit(spark.range(2).selectExpr("id AS doc_id"), extra=extra)
+    tip = t.latest()
+    assert tip["snapshot_id"] == snap
+    assert tip["shape"] == [2, 3] and tip["by_id"] == {"7": "seven"}
+
+
 def test_expire_orphans_spares_actively_written_dirs(spark, tmp_path):
     """An unreferenced staging dir whose snapshot-id timestamp is ancient
     but whose CONTENT is fresh is an in-flight commit whose write outlasted
