@@ -221,6 +221,31 @@ def test_sampling_markdown_report_structure(spark):
     assert "- Min Improvement: 25.00%" in report
 
 
+def test_markdown_report_structure(spark):
+    """K5 field report: header, document-level rollup, one table row per
+    field in name order — and an empty evaluation still renders (avg()
+    over zero rows is NULL; the report prints 0 instead of raising)."""
+    from openllm_ocr_annotator_spark.operators.evaluate import markdown_report
+
+    ev = spark.createDataFrame(
+        [("d1", "f1", False), ("d1", "f0", True),   # acc .5
+         ("d2", "f0", True), ("d2", "f1", True)],   # acc 1.0, exact
+        "doc_id string, field_name string, correct boolean",
+    )
+    table_head = ["", "| field | correct | total | accuracy |", "|---|---|---|---|"]
+    assert markdown_report(ev).splitlines() == [
+        "# Field Evaluation Report", "",
+        "- documents: 2", "- mean accuracy: 0.7500", "- exact-match rate: 0.5000",
+        *table_head,
+        "| f0 | 2 | 2 | 1.0000 |", "| f1 | 1 | 2 | 0.5000 |",
+    ]
+    assert markdown_report(ev.limit(0)).splitlines() == [
+        "# Field Evaluation Report", "",
+        "- documents: 0", "- mean accuracy: 0.0000", "- exact-match rate: 0.0000",
+        *table_head,
+    ]
+
+
 def test_sized_split_testless_validation_quirk(spark):
     """Replicated reference quirk (dataset_converter.py:133): validation is
     carved only when BOTH test and validation ratios are > 0 — with test=0
