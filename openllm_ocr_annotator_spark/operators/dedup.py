@@ -867,7 +867,7 @@ def substring_dedup(
       ``xxhash64`` over the k-long slice (seed-chained element hashing) —
       measured 1.31× faster than the concat_ws(string)→hash shape at 600k
       docs / 30M tokens with an identical dup set
-      (``scripts/substring_fingerprint_probe.py``), because the string
+      (BASELINE.md, "Gram fingerprint swap, measured"), because the string
       shape allocates ~k×token bytes per position before hashing; the
       shuffle carries 8-byte fingerprints + (doc, pos) either way;
     - first-occurrence = min(struct(doc, pos)) per hash: MERGEABLE, so a
