@@ -7,14 +7,13 @@
 The driver's correctness record holds at most 50 rows (rounds 2 and 3 both
 recorded exactly 50 while the catalog grew 52→62 — a count cap, not a time
 budget), so this surface exposes the consolidated catalog
-(``queries_catalog.DRIVER_QUERY_NAMES``): ≤50 names ordered
-IMPORTANCE-FIRST (flagships first, so any future cap tightening evicts
-single-aspect tail entries). Single-aspect member queries folded into the
-union composites (scan_lifecycle, text_signals, media_pipeline,
-sampling_suite, eval_accuracy, vote_variants, similarity_ann,
-split_datasets) remain registered in the full catalog —
-``scripts/verify_contract.py`` value-checks all of them locally, and
-pytest pins each member individually.
+(``queries_catalog.DRIVER_QUERY_NAMES``): 50 value-checked names plus the
+rows-only ``extract_lineage`` tail, ordered IMPORTANCE-FIRST (flagships
+first, so any future cap tightening evicts single-aspect tail entries).
+Single-aspect member queries folded into the union composites (the
+``_composite(...)`` declarations in ``queries_catalog``) remain registered
+in the full catalog — ``scripts/verify_contract.py`` value-checks all of
+them locally, and pytest pins each member individually.
 
 Non-SQL-expressible entries (per-partition lineage audit) intentionally
 have no oracle — the driver records a rows-only check and pytest covers

@@ -3627,9 +3627,10 @@ _composite("event_windows", [
 ])
 
 
-# Driver-facing surface: ≤50 names (the round driver's correctness record
-# holds at most 50 rows), ordered IMPORTANCE-FIRST so that if the cap ever
-# tightens, evictions hit single-aspect tail entries — never the flagships.
+# Driver-facing surface: 50 value-checked names plus the rows-only
+# `extract_lineage` tail (the driver's correctness record holds at most 50
+# rows), ordered IMPORTANCE-FIRST so that if the cap ever tightens,
+# evictions hit single-aspect tail entries — never the flagships.
 # Every name not listed here is a member of one of the composites above
 # (still registered in QUERIES; verify_contract.py checks the full catalog).
 DRIVER_QUERY_NAMES = [
