@@ -3433,7 +3433,7 @@ def _composite(name: str, legs: list[tuple]) -> None:
     QUERIES[name] = query
     ORACLES[name] = "\nUNION ALL BY NAME\n".join(
         f"SELECT {', '.join(map(duck, exprs))} FROM ({ORACLES[m]})"
-        + "".join(f" GROUP BY {k}" for k in key)
+        + (f" GROUP BY {key[0]}" if key else "")
         for m, exprs, *key in legs
     )
     if any(m in GOLDEN_ORACLE_QUERIES for m, *_ in legs):
