@@ -15,83 +15,97 @@ truncated to invalid JSON and the row nulls — the reference mangles such
 payloads identically at all three steps, and this engine replicates it
 rather than "fixing" divergently (same class as the P4 falsy filter).
 
-Spark mapping: steps 1-2 are pure expressions (`regexp_extract` +
-`from_json` + `coalesce`); step 3 is inherently iterative → an
-Arrow-batched pandas UDF that returns the first decodable JSON *substring*
-(so the typed parse still happens JVM-side via `from_json` with the caller's
-schema — Python only slices strings, never builds rows).
+Spark mapping: the whole chain is one Arrow-batched pandas UDF,
+``first_decodable_json``, that runs steps 1-3 once per row with the
+reference's own parsers (Python ``re`` + ``json``) and returns the first
+decodable JSON *string*, or NULL for step 4. The typed parse stays in the
+JVM: ``parse_result`` applies ``from_json`` with the caller's schema, so
+Python only slices strings and never builds rows.
+
+Because validity is Python's ``json`` and not Jackson, the chain agrees
+with the reference where the two parsers differ: single-quoted keys and
+raw control characters inside strings are not JSON (NULL), ``NaN`` is,
+and a CR ends no ``//`` comment (Python's ``.`` consumes ``\\r``).
+Text with prose after the object fails step 2 and step 3 returns the
+object alone; a leading scalar or array followed by prose (which
+Jackson read as its prefix) holds no object and is NULL.
 """
 
 from __future__ import annotations
 
 import json
+import re
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 # Fenced block: ```json\n...\n``` or ```\n...\n```  (formatter.py:40)
 FENCE_RE = r"(?s)```(?:json)?\n(.*?)\n```"
 LINE_COMMENT_RE = r"(?m)//.*$"
 BLOCK_COMMENT_RE = r"(?s)/\*.*?\*/"
 
+_FENCE = re.compile(FENCE_RE)
+_LINE_COMMENT = re.compile(LINE_COMMENT_RE)
+_BLOCK_COMMENT = re.compile(BLOCK_COMMENT_RE)
+_DECODER = json.JSONDecoder()
 
-def remove_comments(col: Column) -> Column:
-    """U3: strip C-style // and /* */ comments (formatter.py:12-25)."""
-    return F.regexp_replace(F.regexp_replace(col, BLOCK_COMMENT_RE, ""), LINE_COMMENT_RE, "")
+
+def remove_comments(text: str) -> str:
+    """U3: strip C-style /* */ then // comments (formatter.py:12-25)."""
+    if "/" not in text:  # both patterns need a '/'
+        return text
+    return _LINE_COMMENT.sub("", _BLOCK_COMMENT.sub("", text))
 
 
-def _scan_first_json(text: str | None) -> str | None:
-    decoder = json.JSONDecoder()
-    if not text:
-        return None
-    for i, ch in enumerate(text):
-        if ch != "{":
-            continue
+def _scan_first_json(text: str) -> str | None:
+    """First '{' from which a JSON value decodes, as a substring; else None.
+
+    Decodes in place from each brace (no per-brace copy of the tail); a
+    value that starts at '{' and decodes is always an object.
+    """
+    i = text.find("{")
+    while i >= 0:
         try:
-            parsed, end = decoder.raw_decode(text[i:])
+            _, end = _DECODER.raw_decode(text, i)
         except json.JSONDecodeError:
-            continue
-        if isinstance(parsed, dict):
-            return text[i : i + end]
+            i = text.find("{", i + 1)
+        else:
+            return text[i:end]
     return None
 
 
-def first_decodable_json(col: Column) -> Column:
-    """Step-3 fallback: first decodable '{...}' substring, else NULL.
-
-    pandas UDF created lazily (DDL type parsing needs an active session).
-    """
-
-    @F.pandas_udf("string")
-    def scan_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(_scan_first_json)
-
-    return scan_udf(col)
+def _decodes(text: str) -> bool:
+    try:
+        _DECODER.decode(text)
+    except json.JSONDecodeError:
+        return False
+    return True
 
 
-def extract_json_str(col: Column) -> Column:
-    """Raw text → best-effort JSON string (comment-stripped), NULL if none.
+def _first_json(text: str | None) -> str | None:
+    """Steps 1-3 for one text: the first decodable JSON string, else None."""
+    if not text:
+        return None
+    if "```" in text:
+        fenced = _FENCE.search(text)
+        if fenced:
+            block = remove_comments(fenced.group(1))
+            if _decodes(block):
+                return block
+    whole = remove_comments(text)
+    if _decodes(whole):
+        return whole
+    return _scan_first_json(whole)
 
-    The caller applies ``from_json(result, schema)`` — keeping the typed
-    parse in the JVM. `get_json_object(x, '$')` is the cheap JVM-side
-    validity probe standing in for Python's json.loads success check.
-    """
-    fenced = remove_comments(F.regexp_extract(col, FENCE_RE, 1))
-    whole = remove_comments(col)
-    valid = lambda c: F.when(  # noqa: E731
-        (c != "") & F.get_json_object(c, "$").isNotNull(), c
-    )
-    # the pandas-UDF node evaluates for every row no matter where it sits in
-    # the coalesce — so feed it NULL on rows steps 1-2 already satisfied;
-    # the Python scan then costs O(1) except on genuine fallback rows
-    fallback_input = F.when(
-        valid(fenced).isNull() & valid(whole).isNull(), whole
-    )
-    scanned = first_decodable_json(fallback_input)
-    return F.coalesce(valid(fenced), valid(whole), valid(scanned))
+
+@F.pandas_udf(StringType())
+def first_decodable_json(texts: pd.Series) -> pd.Series:
+    """Raw text → best-effort JSON string (comment-stripped), NULL if none."""
+    return texts.map(_first_json)
 
 
 def parse_result(col: Column, schema: str) -> Column:
     """U2+U4: full chain → typed struct; NULL when nothing decodable."""
-    return F.from_json(extract_json_str(col), schema)
+    return F.from_json(first_decodable_json(col), schema)

@@ -72,9 +72,11 @@ def weighted_vote(
     Returns (doc_id, field_name, value, confidence).
 
     Plan shape: [scan → broadcast-hash join → partial agg → shuffle on
-    (doc_id, field_name, value) → final agg → window re-agg on
-    (doc_id, field_name)]. The second groupBy reuses the first shuffle's
-    partitioning prefix, so AQE plans it without a second full exchange.
+    (doc_id, field_name, value) → final agg → shuffle on
+    (doc_id, field_name) → window re-agg + top-1]. Two exchanges: hash
+    partitioning on the three agg keys does not satisfy the window's
+    two-key distribution, so the window shuffles the (already aggregated)
+    scored rows again.
     """
     voting = falsy_field_filter(annotations).withColumn(
         "_conf", F.coalesce(F.col("confidence").cast("double"), F.lit(1.0))

@@ -37,7 +37,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # one mega-doc must not blow an Arrow batch: cap rows per batch so the
-        # pandas kernel sees bounded memory even for heavy-tail documents.
+        # mapInArrow extraction kernel sees bounded memory even for
+        # heavy-tail documents.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))

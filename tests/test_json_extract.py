@@ -4,11 +4,13 @@
 from __future__ import annotations
 
 import json
+import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from openllm_ocr_annotator_spark.functions.json_extract import (
-    extract_json_str,
+    first_decodable_json,
     parse_result,
     remove_comments,
 )
@@ -20,7 +22,7 @@ RESULT_SCHEMA = (
 
 def _extract(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "raw string")
-    return [r.j for r in df.select(extract_json_str(F.col("raw")).alias("j")).collect()]
+    return [r.j for r in df.select(first_decodable_json(F.col("raw")).alias("j")).collect()]
 
 
 def test_markdown_json_block(spark):
@@ -65,11 +67,42 @@ def test_parse_result_typed(spark):
     assert row.fields[0].confidence == 0.5
 
 
-def test_remove_comments_expression(spark):
-    df = spark.createDataFrame([('{"a": 1} // tail\n/* block */ rest',)], "s string")
-    got = df.select(remove_comments(F.col("s")).alias("c")).first().c
+def test_remove_comments_expression():
+    got = remove_comments('{"a": 1} // tail\n/* block */ rest')
     assert "//" not in got and "/*" not in got
     assert '{"a": 1}' in got
+
+
+def _ref_parse(text):
+    """formatter.py:28-68, replayed with '//' stripped before '/* */'."""
+    import re
+
+    def rm(s):
+        s = re.sub(r"//.*$", "", s, flags=re.MULTILINE)
+        return re.sub(r"/\*.*?\*/", "", s, flags=re.DOTALL)
+
+    m = re.search(r"```(?:json)?\n(.*?)\n```", text, re.DOTALL)
+    if m:
+        try:
+            return json.loads(rm(m.group(1)))
+        except json.JSONDecodeError:
+            pass
+    try:
+        return json.loads(rm(text))
+    except json.JSONDecodeError:
+        pass
+    dec = json.JSONDecoder()
+    clean = rm(text)
+    for i, ch in enumerate(clean):
+        if ch != "{":
+            continue
+        try:
+            parsed, _ = dec.raw_decode(clean[i:])
+            if isinstance(parsed, dict):
+                return parsed
+        except json.JSONDecodeError:
+            continue
+    return {}
 
 
 def test_url_values_null_like_the_reference(spark):
@@ -77,43 +110,55 @@ def test_url_values_null_like_the_reference(spark):
     regex is string-blind, so a JSON value containing '//' (URLs, file
     paths) is truncated to invalid JSON at EVERY step — fenced, whole-text,
     and the brace scan (the reference re-strips before scanning). The
-    reference replay below proves parity: both engines null the row rather
+    reference replay proves parity: both engines null the row rather
     than one 'fixing' it divergently."""
-    import re
-
-    def ref_parse(text):  # formatter.py:28-68, replayed
-        def rm(s):
-            s = re.sub(r"//.*$", "", s, flags=re.MULTILINE)
-            return re.sub(r"/\*.*?\*/", "", s, flags=re.DOTALL)
-
-        m = re.search(r"```(?:json)?\n(.*?)\n```", text, re.DOTALL)
-        if m:
-            try:
-                return json.loads(rm(m.group(1)))
-            except json.JSONDecodeError:
-                pass
-        try:
-            return json.loads(rm(text))
-        except json.JSONDecodeError:
-            pass
-        dec = json.JSONDecoder()
-        clean = rm(text)
-        for i, ch in enumerate(clean):
-            if ch != "{":
-                continue
-            try:
-                parsed, _ = dec.raw_decode(clean[i:])
-                if isinstance(parsed, dict):
-                    return parsed
-            except json.JSONDecodeError:
-                continue
-        return {}
-
     url_payload = '{"url": "http://x.com/a", "v": 1}'
-    assert ref_parse(url_payload) == {}, "reference nulls URL-bearing JSON"
+    assert _ref_parse(url_payload) == {}, "reference nulls URL-bearing JSON"
     got = _extract(spark, [url_payload, '<think>…</think> ' + url_payload])
     assert got == [None, None], "engine must replicate the reference quirk"
     # sanity: the same payload WITHOUT '//' parses fine in both
     ok = '{"path": "x.com/a", "v": 1}'
-    assert ref_parse(ok) == {"path": "x.com/a", "v": 1}
+    assert _ref_parse(ok) == {"path": "x.com/a", "v": 1}
     assert json.loads(_extract(spark, [ok])[0]) == {"path": "x.com/a", "v": 1}
+
+
+# One row per chain step and per input where Python's json and the JVM's
+# Jackson disagree (the chain validates with json, as the reference does).
+CHAIN_CASES = [
+    ('prefix\n```json\n{"fields": []}\n```\nsuffix', '{"fields": []}'),
+    ('```json\nnot json\n```\n{"d": 4}', '{"d": 4}'),
+    ('{"b": 2}', '{"b": 2}'),
+    ('[1, 2]', '[1, 2]'),
+    ('<think>reasoning {not json} more</think> answer: {"c": 3}', '{"c": 3}'),
+    ('{"url": "http://x.com/a", "v": 1}', None),
+    ("", None),
+    (None, None),
+    ("{'a': 1}", None),  # single-quoted keys are not JSON
+    ('{"a": NaN}', '{"a": NaN}'),  # json accepts NaN; Jackson's probe did not
+    ('{"a": "x\ty"}', None),  # raw control character inside a string
+    ('// c\r{"a": 1}', None),  # '.' consumes CR, so the comment eats the line
+    ('{"a": 1} and more', '{"a": 1}'),  # trailing prose: the scan finds the object
+    ("1 item refused", None),  # Jackson decoded the leading 1 and ignored the rest
+]
+
+
+@pytest.mark.parametrize("raw,expected", CHAIN_CASES)
+def test_chain_cases(spark, raw, expected):
+    assert _extract(spark, [raw]) == [expected]
+
+
+def test_nan_parses_to_typed_nan(spark):
+    df = spark.createDataFrame([('{"a": NaN}',)], "raw string")
+    row = df.select(parse_result(F.col("raw"), "struct<a double>").alias("r")).first().r
+    assert math.isnan(row.a)
+
+
+def test_comment_strip_order_is_an_open_question(spark):
+    """The engine strips block comments before line comments; the replay in
+    ``_ref_parse`` strips '//' first. They disagree when a '//' sits inside
+    a block comment. The reference source is not available to settle which
+    order formatter.py:12-25 uses, so this pins today's engine result and
+    records the disagreement (see ROADMAP)."""
+    text = '{"a": 1 /* x // y */}'
+    assert json.loads(_extract(spark, [text])[0]) == {"a": 1}
+    assert _ref_parse(text) == {}

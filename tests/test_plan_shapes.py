@@ -39,7 +39,17 @@ def test_weighted_vote_plan(spark):
     # falsy-field filter must reach the scan (P4 below the derivation)
     assert "l_returnflag" in plan.split("PushedFilters")[1][:200]
     assert "WindowGroupLimit" in plan, "top-1 must not full-sort each group"
-    assert _n_exchanges(plan) <= 3, "agg + window shuffles only"
+    assert _n_exchanges(plan) == 2, "agg + window shuffles only"
+
+
+def test_json_parse_chain_is_one_python_pass(spark):
+    plan = _plan(qc.QUERIES["json_parse_chain"](spark, SF_DIR))
+    # formatted plans list each node twice; count the detail headers
+    import re
+
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, flags=re.M)) == 1
+    for jvm_probe in ("regexp_extract", "regexp_replace", "get_json_object"):
+        assert jvm_probe not in plan
 
 
 def test_scan_limit_projection_pruned(spark):

@@ -62,15 +62,41 @@ def test_extract_document_is_permutation_invariant(spans, rnd):
     assert [s["offset"] for s in base] == list(range(len(base)))
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.text(max_size=300))
+@settings(max_examples=300, deadline=None)
+@given(
+    st.one_of(
+        st.text(max_size=300),
+        # brace-heavy: JSON fragments that often nest a decodable object
+        # right after a brace that fails to decode
+        st.lists(
+            st.sampled_from(['{', '}', '{}', '{"a": 1}', '"', ':', ',', '[', ']', 'x', ' ', '\n']),
+            max_size=60,
+        ).map("".join),
+    )
+)
 def test_json_brace_scan_never_crashes(s):
+    """The in-place scan returns what slicing the tail at every '{' and
+    decoding it returns, on arbitrary and on brace-heavy text."""
+    import json
+
     from openllm_ocr_annotator_spark.functions.json_extract import _scan_first_json
 
-    out = _scan_first_json(s)
-    if out is not None:
-        import json
+    def sliced(text):
+        decoder = json.JSONDecoder()
+        for i, ch in enumerate(text):
+            if ch != "{":
+                continue
+            try:
+                parsed, end = decoder.raw_decode(text[i:])
+            except json.JSONDecodeError:
+                continue
+            if isinstance(parsed, dict):
+                return text[i : i + end]
+        return None
 
+    out = _scan_first_json(s)
+    assert out == sliced(s)
+    if out is not None:
         json.loads(out)  # whatever it returns must be valid JSON
 
 

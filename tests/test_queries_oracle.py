@@ -128,6 +128,9 @@ def test_driver_surface_caps_at_50_and_leads_with_flagships():
     # every driver query with an oracle uses the registered oracle text
     osql = entry_mod.oracle_sql()
     assert set(osql) <= set(q)
+    # the first 50 names are the value-checked surface: each needs an oracle
+    missing = [n for n in names[:50] if n not in osql]
+    assert not missing, f"surface names without an oracle: {missing}"
     for n, sql in osql.items():
         assert sql == ORACLES[n]
     # folded members remain individually registered in the full catalog
