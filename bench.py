@@ -70,7 +70,7 @@ def run_extract_bench(spark, input_dir: str, num_partitions: int):
 
     docs = spark.read.parquet(input_dir)
     t0 = time.perf_counter()
-    out = extract_pipeline(docs, num_partitions=num_partitions, with_lineage=True)
+    out = extract_pipeline(docs, num_partitions=num_partitions)
     stats = out.agg(
         F.countDistinct("doc_id").alias("docs"), F.count(F.lit(1)).alias("spans")
     ).first()

@@ -171,29 +171,6 @@ def minhash_signatures_batch(
     return out
 
 
-def band_hashes(signature: np.ndarray, num_bands: int) -> np.ndarray:
-    """LSH banding: hash each contiguous band of the signature to one bucket key."""
-    rows = signature.size // num_bands
-    bands = signature[: rows * num_bands].reshape(num_bands, rows)
-    with np.errstate(over="ignore"):
-        acc = np.zeros(num_bands, dtype=np.uint64)
-        for r in range(rows):
-            acc = (acc * _POLY_P + bands[:, r]) & MASK64
-        return _splitmix64(acc)
-
-
-def band_hashes_batch(sigs: np.ndarray, num_bands: int) -> np.ndarray:
-    """(n_docs, num_bands) LSH bucket keys — batch twin of ``band_hashes``."""
-    n, num_perm = sigs.shape
-    rows = num_perm // num_bands
-    bands = sigs[:, : rows * num_bands].reshape(n, num_bands, rows)
-    with np.errstate(over="ignore"):
-        acc = np.zeros((n, num_bands), dtype=np.uint64)
-        for r in range(rows):
-            acc = (acc * _POLY_P + bands[:, :, r]) & MASK64
-        return _splitmix64(acc)
-
-
 def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(sig_a == sig_b))
 

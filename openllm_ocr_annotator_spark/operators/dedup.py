@@ -8,14 +8,17 @@ pipeline/image_dataset.py:43-47) — added as first-class engine capability:
                     the quadratic self-join is the *verifier*, not the scale
                     path).
 - minhash_lsh:      MinHash signatures (numpy kernel per Arrow batch) →
-                    LSH banding → candidate pairs via band-bucket self-join
-                    → signature-estimated Jaccard filter. The scale path:
-                    cost is O(docs × bands) + Σ bucket², never all-pairs.
+                    LSH banding (a JVM posexplode of xxhash64 over each
+                    band's signature slice) → candidate pairs via
+                    band-bucket self-join → signature-estimated Jaccard
+                    filter. The scale path: cost is O(docs × bands) +
+                    Σ bucket², never all-pairs.
 - simhash_pairs:    64-bit SimHash + pigeonhole banding (k chunks; hamming
                     distance ≤ d pairs must share ≥1 of d+1 chunks).
 
 Scale notes (100 TB):
 - signatures are computed in one narrow mapInPandas pass (no shuffle);
+  banding is a JVM projection of those signatures, with no Python stage;
 - the only shuffles are the band-bucket exchanges, keyed by (band_idx,
   band_hash) — uniformly distributed by construction; a pathological bucket
   (identical boilerplate across millions of docs) is bounded by
@@ -234,37 +237,22 @@ def minhash_signatures(
     )
 
 
-def _band_rows(
-    sigs: DataFrame, num_bands: int, carry: dict[str, str] | None = None
-) -> DataFrame:
-    """Narrow pass: (doc_id, signature) → one row per (doc, band) with the
-    band's bucket hash — the LSH posting relation. ``carry`` maps extra
-    input column names to their Spark SQL types; they ride the explode
-    row-aligned (repeated per band) so callers never need a post-banding
-    join back to the signature relation — at 10^12 docs that join would
-    shuffle the num_bands×-exploded posting relation just to re-attach a
-    flag the kernel already held."""
-    carry = carry or {}
-
-    def band_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sig_mat = np.array(pdf["signature"].tolist(), dtype=np.int64).view(np.uint64)
-            bh = K.band_hashes_batch(sig_mat, num_bands)  # (n_docs, num_bands)
-            out = {
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy(), num_bands),
-                "band_idx": np.tile(np.arange(num_bands), len(pdf)),
-                "band_hash": bh.reshape(-1).astype(np.int64),
-            }
-            for col in carry:
-                out[col] = np.repeat(pdf[col].to_numpy(), num_bands)
-            yield pd.DataFrame(out)
-
-    schema = "doc_id long, band_idx int, band_hash long" + "".join(
-        f", {col} {typ}" for col, typ in carry.items()
+def _band_rows(sigs: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
+    """JVM projection: (doc_id, signature, ...) → one row per (doc, band)
+    whose bucket key is ``xxhash64`` of the band's ``num_perm // num_bands``
+    signature slots — the LSH posting relation. Every column except
+    ``signature`` rides the explode row-aligned (the incremental path's
+    ``_new`` flag), so callers never join back to the signature relation;
+    ``signature`` itself stays behind, or num_perm longs per row would
+    enter the band-bucket exchange."""
+    r = num_perm // num_bands
+    band_keys = [
+        F.xxhash64(F.slice("signature", i * r + 1, r)) for i in range(num_bands)
+    ]
+    return sigs.select(
+        *[c for c in sigs.columns if c != "signature"],
+        F.posexplode(F.array(*band_keys)).alias("band_idx", "band_hash"),
     )
-    return sigs.mapInPandas(band_kernel, schema=schema)
 
 
 def _banded_pair_estimates(
@@ -342,7 +330,7 @@ def minhash_lsh_pairs(
     if caches is not None:
         caches.append(sigs)
 
-    bands = _band_rows(sigs, num_bands)
+    bands = _band_rows(sigs, num_perm, num_bands)
 
     # oversized buckets (mega-boilerplate clusters) take the star escape
     # hatch instead of the bucket² join — see _split_viral_buckets
@@ -396,7 +384,7 @@ def minhash_lsh_incremental(
     if caches is not None:
         caches.append(sigs)
 
-    bands = _band_rows(sigs, num_bands, carry={"_new": "boolean"})
+    bands = _band_rows(sigs, num_perm, num_bands)
     # same star escape hatch as the full-corpus run: the combined banding
     # relation sees identical buckets, so hubs match a one-shot run and
     # the incremental output stays exactly full-minus-history×history

@@ -303,18 +303,11 @@ def extract_spans_wide(
     return out
 
 
-def extract_pipeline(
-    docs: DataFrame,
-    num_partitions: int | None = None,
-    with_lineage: bool = True,
-) -> DataFrame:
-    """Salted-repartition → extract → (optionally) tag partition lineage."""
+def extract_pipeline(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Salted-repartition → extract → tag partition lineage (``part_id``)."""
     if num_partitions:
         docs = salted_repartition(docs, num_partitions)
-    out = extract_spans(docs)
-    if with_lineage:
-        out = out.withColumn("part_id", F.spark_partition_id())
-    return out
+    return extract_spans(docs).withColumn("part_id", F.spark_partition_id())
 
 
 def lineage_metrics(extracted: DataFrame) -> DataFrame:

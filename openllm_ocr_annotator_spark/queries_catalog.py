@@ -130,7 +130,7 @@ def q_extract_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     with physical layout (that is what it audits); the layout-independent
     invariant is the global rollup — value-checked as extract_lineage_global."""
     docs = synth.synthesize_documents(spark, sf_dir)
-    out = extract.extract_pipeline(docs, num_partitions=8, with_lineage=True)
+    out = extract.extract_pipeline(docs, num_partitions=8)
     return extract.lineage_metrics(out)
 
 

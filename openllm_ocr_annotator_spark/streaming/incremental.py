@@ -29,7 +29,7 @@ def process_increment(docs: DataFrame, table: SnapshotTable, num_partitions: int
     try:
         if todo.isEmpty():
             return 0
-        extracted = extract_pipeline(todo, num_partitions=num_partitions, with_lineage=True)
+        extracted = extract_pipeline(todo, num_partitions=num_partitions)
         extracted = extracted.cache()
         try:
             # keys = the processed INPUT set: empty-span docs commit as done

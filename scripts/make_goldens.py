@@ -221,10 +221,13 @@ texts = [str(t) for t in flat_all["text"]]
 a_p, b_p = K.perm_params(64, 42)
 sigs = {d: K.minhash_signature(K.shingle_hashes(t, 3), a_p, b_p)
         for d, t in zip(doc_ids, texts)}
-buckets: dict[tuple[int, int], list[int]] = {}
+# the engine buckets on xxhash64 of each 4-slot band; the exact relation
+# that hash stands for is equality of the band's slot tuple
+buckets: dict[tuple[int, tuple], list[int]] = {}
 for d in doc_ids:
-    for band_idx, bh in enumerate(K.band_hashes(sigs[d], 16)):
-        buckets.setdefault((band_idx, int(bh)), []).append(d)
+    for band_idx in range(16):
+        band = tuple(int(v) for v in sigs[d][4 * band_idx : 4 * band_idx + 4])
+        buckets.setdefault((band_idx, band), []).append(d)
 cand = set()
 for members in buckets.values():
     ms = sorted(members)

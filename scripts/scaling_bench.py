@@ -67,7 +67,7 @@ n_docs = docs.count()
 times = []
 for trial in range(n_trials):  # first is warmup (JIT + executor/python spin-up)
     t0 = time.perf_counter()
-    out = extract_pipeline(docs, num_partitions=None, with_lineage=True)
+    out = extract_pipeline(docs, num_partitions=None)
     out.agg(F.count(F.lit(1)).alias("n")).first()
     times.append(time.perf_counter() - t0)
 spark.stop()

@@ -58,7 +58,7 @@ def test_span_sequence_equality_vs_oracle(spark, oracle_sequences):
 
 def test_salted_repartition_preserves_sequences(spark, oracle_sequences):
     docs = synthesize_documents(spark, SF_DIR)
-    out = extract_pipeline(docs, num_partitions=7, with_lineage=True)
+    out = extract_pipeline(docs, num_partitions=7)
     got = _spark_sequences(out)
     want = {d: s for d, s in oracle_sequences.items() if s}
     assert got == want
@@ -66,7 +66,7 @@ def test_salted_repartition_preserves_sequences(spark, oracle_sequences):
 
 def test_lineage_metrics_account_for_everything(spark):
     docs = synthesize_documents(spark, SF_DIR)
-    out = extract_pipeline(docs, num_partitions=7, with_lineage=True).cache()
+    out = extract_pipeline(docs, num_partitions=7).cache()
     try:
         lm = lineage_metrics(out).collect()
         assert sum(r.span_count for r in lm) == out.count()
@@ -75,7 +75,7 @@ def test_lineage_metrics_account_for_everything(spark):
         for r in lm:
             total ^= r.checksum
         lm2 = lineage_metrics(
-            extract_pipeline(docs, num_partitions=3, with_lineage=True)
+            extract_pipeline(docs, num_partitions=3)
         ).collect()
         total2 = 0
         for r in lm2:

@@ -330,6 +330,28 @@ def test_substring_dedup_stays_jvm_side(spark):
     assert "gram" not in plan.split("Exchange")[1][:400]
 
 
+@pytest.mark.parametrize(
+    "name,sig_passes,max_exchanges",
+    [("dedup_minhash_lsh", 1, 7), ("dedup_lsh_incremental", 2, 8)],
+)
+def test_minhash_banding_stays_jvm_side(spark, name, sig_passes, max_exchanges):
+    """MinHash LSH banding is one JVM projection (posexplode over
+    xxhash64 of signature slices): the only Python stages left are the
+    signature passes (one per signed input — the incremental query signs
+    its new batch and its history), and banding adds no exchange."""
+    import re
+
+    plan = _plan(qc.QUERIES[name](spark, SF_DIR))
+    assert "xxhash64" in plan, "band keys must be hashed JVM-side"
+    py = re.findall(
+        r"^\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
+        r"|FlatMapGroupsInPandas)",
+        plan, flags=re.M,
+    )
+    assert len(py) == sig_passes, f"{name}: {len(py)} Python stages"
+    assert _n_exchanges(plan) <= max_exchanges
+
+
 def test_source_mixing_is_scan_level_filter(spark):
     """Stratified sampling must stay a shuffle-free filter (plus its one
     rollup agg): the mixing step cannot cost an exchange per stratum."""

@@ -28,7 +28,7 @@ def test_snapshot_commit_and_resume(spark, tmp_path):
 
     # first run: commit half the docs
     first = docs.filter(F.col("doc_id") < "doc_0000000025")
-    out1 = extract_pipeline(first, with_lineage=True)
+    out1 = extract_pipeline(first)
     # keys = processed inputs: doc_0000000007 yields ZERO spans (empty doc)
     # and must still count as done
     snap1 = table.commit(out1, lineage=lineage_metrics(out1), keys=first.select("doc_id"))
@@ -42,7 +42,7 @@ def test_snapshot_commit_and_resume(spark, tmp_path):
     all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
     assert todo_ids == all_ids - done_ids
 
-    out2 = extract_pipeline(todo, with_lineage=True)
+    out2 = extract_pipeline(todo)
     snap2 = table.commit(out2, lineage=lineage_metrics(out2), keys=todo.select("doc_id"))
     assert table.latest()["parent"] == snap1 and table.latest()["snapshot_id"] == snap2
 
