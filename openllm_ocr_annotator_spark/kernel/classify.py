@@ -7,9 +7,9 @@ uni+bi-grams into a fixed feature space, score with a logistic linear
 model. Everything here is deterministic pure numpy, shared verbatim by the
 Spark operator (broadcast weights + mapInPandas) and the golden generator:
 
-- ``hashed_features``: word n-grams → (indices, counts) via the engine's
-  splitmix-based token hash (kernel/dedup.hash_token) mod ``n_features``,
-  L2-normalized — no external tokenizer, no floating hash.
+- ``hashed_features``: DSIR's hashed word uni+bi-gram counts
+  (kernel/dsir.ngram_bucket_counts, splitmix token hash mod
+  ``n_features``), L2-normalized — no external tokenizer, no floating hash.
 - ``score_text``: sigmoid(w·x + b), computed per document with a
   SEQUENTIAL fold over the doc's own sparse features — batch-size
   independent, so the distributed scores equal a sequential replay.
@@ -25,35 +25,25 @@ import math
 
 import numpy as np
 
-from .dedup import hash_tokens
+from .dsir import ngram_bucket_counts
 
 
 def hashed_features(
-    text: str, n_features: int = 1 << 18, use_bigrams: bool = True
+    text: str, n_features: int = 1 << 18
 ) -> tuple[np.ndarray, np.ndarray]:
     """(sorted unique indices, L2-normalized counts) for one document."""
-    words = [w for w in (text or "").lower().split() if w]
-    grams = list(words)
-    if use_bigrams:
-        grams += [f"{a} {b}" for a, b in zip(words, words[1:])]
-    if not grams:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    # batch hash — value-identical to hash_token per gram (same splitmix
-    # finalizer) without the per-call numpy-scalar/errstate overhead
-    idx = (hash_tokens(grams) % np.uint64(n_features)).astype(np.int64)
-    uniq, counts = np.unique(idx, return_counts=True)
+    idx, counts = ngram_bucket_counts(text, n_features)
     vals = counts.astype(np.float64)
-    vals /= math.sqrt(float((vals * vals).sum()))
-    return uniq, vals
+    vals /= math.sqrt(float((vals * vals).sum()))  # empty text: empty vals
+    return idx, vals
 
 
 def score_text(
-    text: str, weights: np.ndarray, bias: float,
-    n_features: int | None = None, use_bigrams: bool = True,
+    text: str, weights: np.ndarray, bias: float, n_features: int | None = None
 ) -> float:
     """sigmoid(w·x + b) with a sequential sparse fold (batch-independent)."""
     nf = n_features if n_features is not None else len(weights)
-    idx, vals = hashed_features(text, nf, use_bigrams)
+    idx, vals = hashed_features(text, nf)
     z = bias
     for i, v in zip(idx, vals):
         z += float(weights[i]) * float(v)
@@ -62,11 +52,11 @@ def score_text(
 
 def train_logreg(
     texts: list[str], labels: list[int],
-    n_features: int = 1 << 18, use_bigrams: bool = True,
+    n_features: int = 1 << 18,
     lr: float = 0.5, steps: int = 200, l2: float = 1e-4,
 ) -> tuple[np.ndarray, float]:
     """Full-batch GD logistic regression; zero init → deterministic."""
-    feats = [hashed_features(t, n_features, use_bigrams) for t in texts]
+    feats = [hashed_features(t, n_features) for t in texts]
     y = np.array(labels, dtype=np.float64)
     w = np.zeros(n_features, dtype=np.float64)
     b = 0.0

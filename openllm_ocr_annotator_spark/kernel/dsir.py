@@ -15,7 +15,8 @@ generator:
 - ``ngram_bucket_counts``: word uni+bi-grams → (sorted unique bucket ids,
   RAW integer counts) via the engine's splitmix token hash
   (kernel/dedup.hash_token) mod ``n_buckets`` — DSIR's likelihood uses raw
-  counts, unlike the L2-normalized classifier features.
+  counts; the quality classifier (kernel/classify.hashed_features)
+  L2-normalizes the same counts.
 - ``train_ngram_dist``: Laplace-smoothed log-probabilities from summed
   counts over a training sample — integer accumulation, so the vector is
   bit-deterministic for a given sample.
@@ -39,13 +40,11 @@ TWO53 = float(1 << 53)
 
 
 def ngram_bucket_counts(
-    text: str, n_buckets: int = 1 << 14, use_bigrams: bool = True
+    text: str, n_buckets: int = 1 << 14
 ) -> tuple[np.ndarray, np.ndarray]:
     """(sorted unique bucket ids, raw int64 counts) for one document."""
     words = [w for w in (text or "").lower().split() if w]
-    grams = list(words)
-    if use_bigrams:
-        grams += [f"{a} {b}" for a, b in zip(words, words[1:])]
+    grams = words + [f"{a} {b}" for a, b in zip(words, words[1:])]
     if not grams:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     # batch hash (kernel/dedup.hash_tokens) — value-identical to the scalar
@@ -57,8 +56,7 @@ def ngram_bucket_counts(
 
 
 def train_ngram_dist(
-    texts: list[str], n_buckets: int = 1 << 14,
-    alpha: float = 1.0, use_bigrams: bool = True,
+    texts: list[str], n_buckets: int = 1 << 14, alpha: float = 1.0
 ) -> np.ndarray:
     """Laplace-smoothed log-probability vector over hash buckets.
 
@@ -67,22 +65,20 @@ def train_ngram_dist(
     """
     total = np.zeros(n_buckets, dtype=np.int64)
     for t in texts:
-        idx, counts = ngram_bucket_counts(t, n_buckets, use_bigrams)
+        idx, counts = ngram_bucket_counts(t, n_buckets)
         total[idx] += counts
     denom = float(int(total.sum())) + alpha * n_buckets
     return np.log((total.astype(np.float64) + alpha) / denom)
 
 
-def log_importance(
-    text: str, diff: np.ndarray, use_bigrams: bool = True
-) -> float:
+def log_importance(text: str, diff: np.ndarray) -> float:
     """Σ c_b·(log p_b − log q_b) via a sequential sparse fold.
 
     ``diff`` = logp − logq (precomputed once, elementwise). The fold runs
     over THIS document's buckets in sorted-id order — batch-independent,
     bit-equal to the golden replay.
     """
-    idx, counts = ngram_bucket_counts(text, len(diff), use_bigrams)
+    idx, counts = ngram_bucket_counts(text, len(diff))
     z = 0.0
     for i, c in zip(idx, counts):
         z += float(diff[i]) * float(c)

@@ -36,7 +36,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..kernel import dedup as K
@@ -541,9 +541,11 @@ def chunk_band_pairs(
 
 def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label round: neighbor-min (join + partial-agg'd groupBy on
-    node id) then pointer jump (``label ← label[label]``). Pure plan — the
-    caller checkpoints. Exchange count per round is bounded and pinned by
-    tests/test_plan_shapes.py."""
+    node id) then pointer jump (``label ← label[label]``). Returns ``(node,
+    label, prev)``, where ``prev`` is the node's label before the round, so
+    the caller counts changed labels without joining two rounds. Pure plan
+    — the caller checkpoints. Exchange count per round is bounded and
+    pinned by tests/test_plan_shapes.py."""
     nbr = (
         edges.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
         .groupBy("src")
@@ -554,6 +556,7 @@ def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     ).select(
         "node",
         F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
+        F.col("label").alias("prev"),
     )
     hop = stepped.select(
         F.col("node").alias("label_node"), F.col("label").alias("label2")
@@ -561,6 +564,7 @@ def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     return stepped.join(hop, stepped["label"] == hop["label_node"], "left").select(
         "node",
         F.least(stepped["label"], F.coalesce("label2", stepped["label"])).alias("label"),
+        stepped["prev"],
     )
 
 
@@ -570,7 +574,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
     max_iter: int = 30,
-    check_every: int = 2,
     metrics: dict | None = None,
 ) -> DataFrame:
     """Resolve near-dup *pairs* into connected components → a keep/drop list.
@@ -597,13 +600,10 @@ def dedup_clusters(
     ``localCheckpoint``-ed eagerly each round to truncate lineage — the
     standard guard for iterative Spark jobs (on a real cluster with
     unreliable executors, swap in ``checkpoint()`` + a checkpoint dir).
-    Convergence = zero changed labels (exact join-based count; a sum(label)
-    fixpoint probe would overflow int64 at 10^12-doc id ranges). The count
-    is an extra driver round-trip per probe, so it runs every
-    ``check_every`` rounds (default 2): with pointer jumping most real
-    workloads converge in 2-4 rounds, and probing half as often saves a
-    quarter of the driver-synchronized jobs at the worst-case cost of one
-    extra (cheap, already-converged) propagation round.
+    Convergence = the first round that changes no label (an exact count of
+    ``label != prev``; a sum(label) fixpoint probe would overflow int64 at
+    10^12-doc id ranges). The count rides the round's checkpoint as a
+    ``DataFrame.observe`` metric, so one round is one Spark action.
 
     Scale shape: per round a CONSTANT number of exchanges (4 joins/aggs →
     ~11 physical Exchange nodes incl. both join sides; pinned in
@@ -635,19 +635,16 @@ def dedup_clusters(
             .localCheckpoint(eager=True)
         )
         for it in range(max_iter):
-            new_labels = _propagate_round(edges, labels).localCheckpoint(eager=True)
-            probe = (it + 1) % max(check_every, 1) == 0 or it == max_iter - 1
-            if probe:
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "node")
-                    .filter(F.col("n.label") != F.col("o.label"))
-                    .count()
-                )
-            labels = new_labels
+            changed = Observation()
+            labels = (
+                _propagate_round(edges, labels)
+                .observe(changed, F.count_if(F.col("label") != F.col("prev")).alias("n"))
+                .select("node", "label")
+                .localCheckpoint(eager=True)
+            )
             if metrics is not None:
                 metrics["rounds"] = it + 1
-            if probe and changed == 0:
+            if changed.get["n"] == 0:
                 break
         else:
             raise RuntimeError(

@@ -141,22 +141,20 @@ def extract_spans(
     return docs.select("doc_id", "spans").mapInArrow(kernel, schema=EXTRACTED_SCHEMA)
 
 
-def extract_spans_wide(
-    docs: DataFrame,
-    renumber_buckets: int | None = None,
-    caches: list | None = None,
-) -> DataFrame:
+def extract_spans_wide(docs: DataFrame) -> DataFrame:
     """Span-level parallel variant: removes the one-doc-per-task floor.
 
     ``extract_spans`` processes a document's spans serially inside one task
     — fine until a single mega-doc dominates a partition's wall-clock. This
     variant explodes spans to rows first, runs the SAME per-span kernel on
     whatever partition each span lands on, then rebuilds the exact sequence
-    with one window:
+    with two windows:
 
-        posexplode(spans) → mapInArrow(extract_span per row)
-        → row_number over (doc_id ORDER BY offset, kind, media_ref, text,
-                           pos, item_idx) − 1
+        posexplode(spans)
+        → span_rank = row_number over (doc_id ORDER BY offset, kind,
+                                       media_ref, text, pos)
+        → repartition → mapInArrow(extract_span per row)
+        → offset = row_number over (doc_id ORDER BY span_rank, item_idx) − 1
 
     The sort key replays the sequential kernel's pinned total order:
     ``(offset, kind, media_ref, text)`` with the original array position
@@ -169,25 +167,11 @@ def extract_spans_wide(
     the heavy tail is extreme (single docs that would straggle a stage);
     the narrow path stays the default.
 
-    Residual floor (documented limit): by default the final renumber window
+    Residual floor (documented limit): the final renumber window
     re-collects each doc's OUTPUT items onto one task for the int-keyed
     sort — the kernel work (the dominant cost, measured 2.1× at 50% skew
     in scripts/skew_bench.py) is spread, but a giga-doc's output still
-    single-threads through that sort. ``renumber_buckets=B`` removes that
-    floor for the extreme case: items renumber within (doc_id,
-    span_rank//B) buckets in parallel, plus additive base offsets from a
-    tiny per-bucket count rollup — row-identical output (pinned by
-    tests/test_extract_e2e.py) at the cost of persisting the item stream
-    (it feeds both the count rollup and the join) plus two extra exchanges,
-    so it stays opt-in for corpora whose single-doc OUTPUT dominates a
-    task.
-
-    ``caches``: pass a list to receive the persisted intermediate
-    DataFrames (only the bucketed-renumber path persists one); the caller
-    unpersists them after consuming the result. A caller-owned list
-    survives any further transformation of the returned frame — unlike an
-    attribute on the DataFrame object, which vanishes on the first
-    ``.filter``/``.select``.
+    single-threads through that sort.
     """
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -267,40 +251,11 @@ def extract_spans_wide(
             "kind string, text string, media_ref string"
         ),
     )
-    if renumber_buckets is None:
-        w = Window.partitionBy("doc_id").orderBy("span_rank", "item_idx")
-        return items.select(
-            "doc_id", "kind", "text", "media_ref",
-            (F.row_number().over(w) - 1).cast("int").alias("offset"),
-        )
-    # bucketed renumber: contiguous span_rank ranges number independently in
-    # parallel; base offsets come from a per-bucket count rollup (rows ≈
-    # items/B — tiny) cumulated per doc. Global offset = base + local - 1.
-    # The item stream feeds BOTH the count rollup and the join — persist it,
-    # or the extraction kernel (the engine's most expensive stage) and its
-    # whole upstream would execute twice.
-    from pyspark import StorageLevel
-
-    items = items.withColumn(
-        "_bk", F.floor(F.col("span_rank") / F.lit(renumber_buckets)).cast("int")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    counts = items.groupBy("doc_id", "_bk").agg(F.count(F.lit(1)).alias("_n"))
-    base_w = Window.partitionBy("doc_id").orderBy("_bk")
-    bases = counts.withColumn(
-        "_base", (F.sum("_n").over(base_w) - F.col("_n")).cast("long")
-    ).drop("_n")
-    local_w = Window.partitionBy("doc_id", "_bk").orderBy("span_rank", "item_idx")
-    out = (
-        items.withColumn("_local", F.row_number().over(local_w))
-        .join(bases, ["doc_id", "_bk"])
-        .select(
-            "doc_id", "kind", "text", "media_ref",
-            (F.col("_base") + F.col("_local") - 1).cast("int").alias("offset"),
-        )
+    w = Window.partitionBy("doc_id").orderBy("span_rank", "item_idx")
+    return items.select(
+        "doc_id", "kind", "text", "media_ref",
+        (F.row_number().over(w) - 1).cast("int").alias("offset"),
     )
-    if caches is not None:
-        caches.append(items)
-    return out
 
 
 def extract_pipeline(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:

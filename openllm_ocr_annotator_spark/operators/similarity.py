@@ -18,6 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -703,7 +704,8 @@ def pq_save(
         for j in range(ksub)
     ]
     spark.createDataFrame(
-        rows, "kind string, idx int, sub int, values array<double>"
+        pa.table(list(zip(*rows)), names=["kind", "idx", "sub", "values"]),
+        "kind string, idx int, sub int, values array<double>",
     ).coalesce(1).write.mode("errorifexists").parquet(path)
 
 

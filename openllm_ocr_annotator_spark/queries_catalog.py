@@ -13,6 +13,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -322,7 +323,10 @@ def q_weighted_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.vote import weighted_vote
 
     ann = _derived_annotations(spark, sf_dir)
-    weights = spark.createDataFrame(_WEIGHTS, "annotator_id string, weight double")
+    weights = spark.createDataFrame(
+        pa.table(list(zip(*_WEIGHTS)), names=["annotator_id", "weight"]),
+        "annotator_id string, weight double",
+    )
     out = weighted_vote(ann, weights)
     return out.withColumn("confidence", F.round("confidence", 6))
 
@@ -460,7 +464,8 @@ def q_annotation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("result").isNotNull())
     exploded = explode_annotation_fields(nested)
     weights = spark.createDataFrame(
-        [("ann_A", 1.0), ("ann_B", 2.0)], "annotator_id string, weight double"
+        pa.table([["ann_A", "ann_B"], [1.0, 2.0]], names=["annotator_id", "weight"]),
+        "annotator_id string, weight double",
     )
     out = weighted_vote(exploded, weights)
     return out.withColumn("confidence", F.round("confidence", 6))

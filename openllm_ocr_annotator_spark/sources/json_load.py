@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -147,10 +148,8 @@ def load_annotation_legs(
         leg = read_json_docs(spark, path, schema, multiline)
         parts.append(leg.withColumn("annotator_id", F.lit(annotator_id)))
     if not parts:
-        empty = _with_corrupt(schema)
         return (
-            spark.createDataFrame([], empty)
-            .drop(CORRUPT_COL)
+            spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
             .withColumn("filename", F.lit(""))
             .withColumn("doc_id", F.lit(""))
             .withColumn("annotator_id", F.lit(""))

@@ -31,9 +31,9 @@ server-side create-exclusive on HDFS, and a conditional PUT on S3A
 (If-None-Match via ``fs.s3a.create.conditional.enabled``, Hadoop 3.4.1+ —
 required for this layer's guarantees on S3). A committer killed between
 claiming a version file and writing its body is reclaimed after
-``stale_claim_ms`` instead of wedging the chain. Pre-CAS tables (legacy
-``manifests/*.json``, rename-committed) remain readable; their entries
-order before the versioned chain.
+``stale_claim_ms`` instead of wedging the chain. A root that still holds
+pre-CAS ``manifests/*.json`` (the old rename commit) is refused with a
+``ValueError`` rather than read as an empty table.
 """
 
 from __future__ import annotations
@@ -193,26 +193,23 @@ class SnapshotTable:
         self.root = root.rstrip("/")
         self.stale_claim_ms = stale_claim_ms
         self._fs = _HadoopFS(spark, self.root)
+        if self._fs.list_json(f"{self.root}/manifests"):
+            raise ValueError(
+                f"{self.root}/manifests holds pre-CAS rename-committed "
+                "manifests, which this table layer no longer reads"
+            )
         self._fs.mkdirs(f"{self.root}/data")
-        self._fs.mkdirs(f"{self.root}/manifests")
         self._fs.mkdirs(f"{self.root}/versions")
 
     # -- manifest chain -------------------------------------------------------
-    # Legacy entries (manifests/*.json, rename-committed) order first, by
-    # snapshot id (ms-timestamp-prefixed names = commit order); the CAS
-    # version chain (versions/{N:012d}.json) orders by version number —
-    # a table upgraded mid-life reads both, old history before new.
+    # The CAS version chain (versions/{N:012d}.json) orders by version number.
 
     def snapshots(self) -> list[dict]:
-        legacy = [self._fs.read_json(p)
-                  for p in self._fs.list_json(f"{self.root}/manifests")]
         versioned = [self._fs.read_json_or_none(p)
                      for p in self._fs.list_json(f"{self.root}/versions")]
         # expired tombstones (expire_replaced) hold their version NUMBER so
         # a later claim can never reuse it, but carry no readable snapshot
-        return legacy + [
-            m for m in versioned if m is not None and not m.get("expired")
-        ]
+        return [m for m in versioned if m is not None and not m.get("expired")]
 
     def latest(self) -> dict | None:
         """Tip of the chain — the LAST READABLE entry, walking version files
@@ -228,8 +225,7 @@ class SnapshotTable:
             m = self._fs.read_json_or_none(p)
             if m is not None and not m.get("expired"):
                 return m
-        legacy = self._fs.list_json(f"{self.root}/manifests")
-        return self._fs.read_json(legacy[-1]) if legacy else None
+        return None
 
     def _next_version(self) -> int:
         paths = self._fs.list_json(f"{self.root}/versions")
@@ -254,8 +250,7 @@ class SnapshotTable:
         while True:
             paths = self._fs.list_json(f"{self.root}/versions")
             if not paths:
-                legacy = self._fs.list_json(f"{self.root}/manifests")
-                return (self._fs.read_json(legacy[-1]) if legacy else None), 1
+                return None, 1
             tail = paths[-1]
             n = int(tail.rsplit("/", 1)[-1].split(".")[0])
             for _ in range(20):
@@ -304,8 +299,8 @@ class SnapshotTable:
     ) -> str:
         """Append ``df`` as a new snapshot; returns the snapshot id.
 
-        Write-then-rename: data lands under a temp-invisible id; the manifest
-        write is the commit point (a crash before it leaves an orphan dir
+        Write-then-claim: data lands under a temp-invisible id; the version
+        claim is the commit point (a crash before it leaves an orphan dir
         that no read will ever see).
 
         ``keys``: the processed input keys. Pass it when an input can
@@ -405,14 +400,6 @@ class SnapshotTable:
             **(extra or {}),
         }
         return snap_id, manifest
-
-    def _claim(self, manifest: dict) -> bool:
-        """One compare-and-claim attempt at the next version number."""
-        n = self._next_version()
-        manifest["version"] = n
-        return self._fs.create_exclusive(
-            f"{self.root}/versions/{n:012d}.json", manifest
-        )
 
     # -- read path -------------------------------------------------------------
 
@@ -515,9 +502,7 @@ class SnapshotTable:
         number for reuse, and a slow committer that computed that number
         before the compaction could then win a create-exclusive on a
         chain that had long moved past its expected_parent — a false CAS
-        success that double-appends. Legacy manifests (rename-committed,
-        no version numbers) are still deleted outright. Returns the
-        expired snapshot ids."""
+        success that double-appends. Returns the expired snapshot ids."""
         snaps = self.snapshots()
         replaced: set[str] = set()
         for s in snaps:
@@ -530,19 +515,11 @@ class SnapshotTable:
             self._fs.delete(s["data_dir"])
             if s.get("keys_dir"):
                 self._fs.delete(s["keys_dir"])
-            if "version" in s:  # CAS chain entry; legacy = rename-committed
-                self._fs.write_json(
-                    f"{self.root}/versions/{s['version']:012d}.json",
-                    {"snapshot_id": sid, "version": s["version"],
-                     "expired": True},
-                )
-            else:
-                self._fs.delete(f"{self.root}/manifests/{sid}.json")
+            self._fs.write_json(
+                f"{self.root}/versions/{s['version']:012d}.json",
+                {"snapshot_id": sid, "version": s["version"], "expired": True},
+            )
             expired.append(sid)
-        if expired:
-            # the survivors' replaces lists now point at deleted manifests —
-            # harmless (they are only used to SKIP ids), left as history
-            pass
         return expired
 
     def expire_orphans(self, grace_ms: int = 3_600_000) -> list[str]:

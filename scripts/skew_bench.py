@@ -62,18 +62,10 @@ def main() -> None:
         variants = (
             ("narrow", extract_spans),
             ("wide", extract_spans_wide),
-            # bucketed renumber: removes the giga-doc output-sort floor too
-            ("wide_bucketed", lambda df: extract_spans_wide(df, renumber_buckets=4096)),
         )
         for label, fn in variants:
             best = float("inf")
             for _ in range(3):
-                # the bucketed variant persists its item stream and Spark's
-                # CacheManager matches identical plans across trials — clear
-                # between trials (keeping the cached input corpus) so every
-                # trial measures the full end-to-end cost
-                spark.catalog.clearCache()
-                corpus.cache().count()
                 t0 = time.perf_counter()
                 fn(corpus).agg(F.count(F.lit(1))).first()
                 best = min(best, time.perf_counter() - t0)
@@ -88,11 +80,7 @@ def main() -> None:
                     "giga_doc_spans": int(base_spans),
                     "narrow_seconds": results["narrow"],
                     "wide_seconds": results["wide"],
-                    "wide_bucketed_seconds": results["wide_bucketed"],
                     "wide_speedup": round(results["narrow"] / results["wide"], 2),
-                    "bucketed_speedup": round(
-                        results["narrow"] / results["wide_bucketed"], 2
-                    ),
                 }
             )
         )

@@ -35,7 +35,7 @@ def test_empty_and_degenerate_text():
     assert C.score_text("", w, 0.0) == 0.5  # sigmoid(bias) with no features
     idx, vals = C.hashed_features("", 1 << 14)
     assert len(idx) == 0 and len(vals) == 0
-    idx, vals = C.hashed_features("one", 1 << 14, use_bigrams=True)
+    idx, vals = C.hashed_features("one", 1 << 14)
     assert len(idx) == 1 and abs(float((vals * vals).sum()) - 1.0) < 1e-12
 
 

@@ -278,20 +278,49 @@ def test_dedup_clusters_transitive_chain(spark):
     assert out == {1: (1, True), 2: (1, False), 3: (1, False)}
 
 
+def _replay_cc_rounds(pairs):
+    """Pure-Python min-label propagation plus pointer jumping, the rounds
+    ``dedup_clusters`` runs: stops at the first round that changes no label
+    and returns how many rounds ran, that one included."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    labels = {n: n for n in adj}
+    rounds = 0
+    while True:
+        rounds += 1
+        stepped = {n: min(labels[n], min(labels[m] for m in adj[n])) for n in adj}
+        jumped = {n: min(lab, stepped[lab]) for n, lab in stepped.items()}
+        if jumped == labels:
+            return rounds
+        labels = jumped
+
+
 def test_dedup_clusters_long_chain_and_multiple_components(spark):
     """A 12-node path (worst case for naive propagation — pointer jumping
-    must converge it inside max_iter) plus a disjoint triangle and a star."""
+    must converge it inside max_iter) plus a disjoint triangle and a star.
+    The reported round count is exactly the replay's: the loop stops at the
+    first round that changes no label."""
     from openllm_ocr_annotator_spark.operators.dedup import dedup_clusters
 
     chain = [(i, i + 1) for i in range(10, 21)]            # path 10..21
     tri = [(100, 101), (101, 102), (100, 102)]             # triangle
     star = [(200, 201), (200, 202), (200, 203)]            # star
+    metrics: dict = {}
     out = {r.doc_id: (r.cluster_id, r.keep)
            for r in dedup_clusters(_pairs_df(spark, chain + tri + star),
-                                   max_iter=8).collect()}
+                                   max_iter=8, metrics=metrics).collect()}
     assert all(out[i] == (10, i == 10) for i in range(10, 22))
     assert all(out[i] == (100, i == 100) for i in (100, 101, 102))
     assert all(out[i] == (200, i == 200) for i in (200, 201, 202, 203))
+    assert metrics == {"rounds": _replay_cc_rounds(chain + tri + star)}
+    # path 10..14 converges on round 3: the loop must stop on an odd round too
+    short = chain[:4]
+    assert _replay_cc_rounds(short) == 3
+    metrics = {}
+    dedup_clusters(_pairs_df(spark, short), max_iter=8, metrics=metrics)
+    assert metrics == {"rounds": 3}
 
 
 def test_dedup_clusters_with_docs_includes_singletons(spark):

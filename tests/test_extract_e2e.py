@@ -271,24 +271,6 @@ def test_null_offset_vs_zero_tie_narrow_equals_wide(spark):
     assert len(narrow) >= 3
 
 
-def test_bucketed_renumber_row_identical(spark):
-    """The opt-in bucketed renumber (removes the giga-doc output-sort floor)
-    must be row-for-row identical to the single-window wide path and the
-    narrow kernel — including tiny bucket sizes that force many buckets per
-    document and buckets spanning item expansions."""
-    from openllm_ocr_annotator_spark.operators.extract import (
-        extract_spans,
-        extract_spans_wide,
-    )
-    from openllm_ocr_annotator_spark.synth import synthesize_documents
-
-    docs = synthesize_documents(spark, "/root/testdata/sf0.001").limit(80)
-    narrow = sorted(map(tuple, extract_spans(docs).collect()))
-    for b in (1, 3, 4096):
-        bucketed = sorted(map(tuple, extract_spans_wide(docs, renumber_buckets=b).collect()))
-        assert bucketed == narrow, f"renumber_buckets={b} diverged"
-
-
 def test_poison_document_isolation(spark):
     """Reference per-image log-and-continue (run_annotation.py:119-121):
     on_error='skip' drops a document whose extraction raises and keeps the

@@ -42,6 +42,22 @@ def test_weighted_vote_plan(spark):
     assert _n_exchanges(plan) == 2, "agg + window shuffles only"
 
 
+def test_literal_frames_plan_as_local_table_scan(spark, tmp_path):
+    """Driver-built literal frames (vote weights, the empty legs frame) plan
+    as a JVM LocalTableScan. A Python-list createDataFrame plans as
+    ``Scan ExistingRDD`` and runs Python tasks just to deserialize its rows."""
+    from openllm_ocr_annotator_spark.sources.json_load import load_annotation_legs
+
+    for df in (
+        qc.QUERIES["weighted_vote"](spark, SF_DIR),
+        qc.QUERIES["annotation_pipeline"](spark, SF_DIR),
+        load_annotation_legs(spark, {"ann_A": str(tmp_path / "missing")}),
+    ):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+
+
 def test_json_parse_chain_is_one_python_pass(spark):
     plan = _plan(qc.QUERIES["json_parse_chain"](spark, SF_DIR))
     # formatted plans list each node twice; count the detail headers

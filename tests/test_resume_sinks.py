@@ -313,7 +313,8 @@ def test_cas_commit_two_racing_committers(spark, tmp_path):
         spark.range(10, 13).selectExpr("id AS doc_id"), None, None, None
     )
     a_manifest["parent"] = base
-    assert t._claim(a_manifest)
+    a_manifest["version"] = n = t._next_version()
+    assert t._fs.create_exclusive(f"{t.root}/versions/{n:012d}.json", a_manifest)
     b = t.commit_cas(
         spark.range(20, 23).selectExpr("id AS doc_id"), expected_parent=base
     )
@@ -447,35 +448,30 @@ def test_cas_commit_refuses_opaque_inflight_tip(spark, tmp_path):
     assert set(t._fs.list_dirs(f"{t.root}/data")) == {s1}
 
 
-def test_cas_commit_legacy_manifest_compat(spark, tmp_path):
-    """A table written by the pre-CAS layer (rename-committed
-    manifests/*.json) stays readable: legacy history orders before the
-    versioned chain, resume/compaction/expiry see both."""
+def test_legacy_manifest_root_is_refused(spark, tmp_path):
+    """A root that still holds pre-CAS rename-committed ``manifests/*.json``
+    is refused with an error naming the directory instead of reading as an
+    empty table; the empty ``manifests/`` directory older tables carry is
+    harmless."""
     import json as _json
+    import re as _re
+
+    import pytest as _pytest
 
     root = tmp_path / "tbl"
-    t = SnapshotTable(spark, str(root))
-    # hand-write a legacy manifest exactly as the old rename path did
-    legacy_id = "00000000000001_aaaaaaaa"
-    spark.range(3).selectExpr("id AS doc_id").write.parquet(
-        str(root / "data" / legacy_id)
+    s1 = SnapshotTable(spark, str(root)).commit(
+        spark.range(3).selectExpr("id AS doc_id")
     )
+    (root / "manifests").mkdir(exist_ok=True)
+    assert [s["snapshot_id"] for s in SnapshotTable(spark, str(root)).snapshots()] == [s1]
+    legacy_id = "00000000000001_aaaaaaaa"
     (root / "manifests" / f"{legacy_id}.json").write_text(_json.dumps({
         "snapshot_id": legacy_id, "parent": None,
         "data_dir": str(root / "data" / legacy_id),
         "keys_dir": None, "n_rows": 3, "lineage": [],
     }))
-    s2 = t.commit(spark.range(10, 12).selectExpr("id AS doc_id"))
-    assert [s["snapshot_id"] for s in t.snapshots()] == [legacy_id, s2]
-    assert t.latest()["parent"] == legacy_id
-    assert {r.doc_id for r in t.read_committed().collect()} == {0, 1, 2, 10, 11}
-    # compaction replaces BOTH generations; expiry deletes the legacy
-    # manifest file and the versioned claim file alike
-    c = t.compact()
-    assert set(t.expire_replaced()) == {legacy_id, s2}
-    assert not (root / "manifests" / f"{legacy_id}.json").exists()
-    assert {r.doc_id for r in t.read_committed().collect()} == {0, 1, 2, 10, 11}
-    assert [s["snapshot_id"] for s in t.snapshots()] == [c]
+    with _pytest.raises(ValueError, match=_re.escape(f"{root}/manifests")):
+        SnapshotTable(spark, str(root))
 
 
 def test_demo_html_matches_reference_page_shape(spark, tmp_path):
