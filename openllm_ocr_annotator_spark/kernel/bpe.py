@@ -12,8 +12,8 @@ budgets must be denominated in REAL tokens:
   merge applies — the standard BPE encode loop, memoized by callers.
 - ``count_tokens``: Σ len(encode(word)) over whitespace words.
 
-The kernel is shared verbatim by the Spark operator (broadcast ranks +
-mapInPandas) and the pure-Python golden generator / pytest oracle — same
+The kernel is shared verbatim by the Spark operator (broadcast ranks + a
+column UDF over the text) and the pure-Python golden generator / pytest oracle — same
 single-source-of-truth pattern as kernel/merge.py.
 """
 

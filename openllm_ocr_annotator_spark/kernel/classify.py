@@ -5,7 +5,8 @@ heuristic gates (fastText-style classifiers in C4/CCNet lineage,
 linear-probe quality scorers in the FineWeb-Edu / DCLM lineage): hash word
 uni+bi-grams into a fixed feature space, score with a logistic linear
 model. Everything here is deterministic pure numpy, shared verbatim by the
-Spark operator (broadcast weights + mapInPandas) and the golden generator:
+Spark operator (broadcast weights + a column UDF over the text) and the
+golden generator:
 
 - ``hashed_features``: DSIR's hashed word uni+bi-gram counts
   (kernel/dsir.ngram_bucket_counts, splitmix token hash mod

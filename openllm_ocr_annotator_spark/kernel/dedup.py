@@ -1,7 +1,7 @@
 """Numpy kernels for near-duplicate detection: MinHash + SimHash.
 
 Pure functions shared between the Spark operators (called per Arrow batch
-inside ``mapInPandas``/``applyInPandas``) and the pytest oracles. No
+from a column UDF over the text) and the pytest oracles. No
 third-party hash libs: a splitmix64-style avalanche over a polynomial
 rolling hash gives deterministic, well-mixed 64-bit shingle hashes
 identically on every platform.

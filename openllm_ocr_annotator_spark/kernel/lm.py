@@ -16,8 +16,8 @@ the same shape with a driver-holdable model).
   replay (golden-checkable).
 - ``perplexity``: exp(−logprob / n_tokens); lower = more in-domain.
 
-Shared verbatim by the Spark operator (broadcast counts + mapInPandas)
-and the golden generator, like every other kernel in this package.
+Shared verbatim by the Spark operator (broadcast counts + a column UDF
+over the text) and the golden generator, like every other kernel in this package.
 """
 
 from __future__ import annotations

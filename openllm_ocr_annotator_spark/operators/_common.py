@@ -1,8 +1,12 @@
-"""Shared physical-plan helpers for operator modules."""
+"""Shared physical-plan and Python-boundary helpers for operator modules."""
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def spread_partitions(df: DataFrame, *keys: str) -> DataFrame:
@@ -20,15 +24,38 @@ def spread_partitions(df: DataFrame, *keys: str) -> DataFrame:
     return df
 
 
-def schema_ddl(df: DataFrame, *, drop: tuple[str, ...] = (), add: str = "") -> str:
-    """DDL output-schema string for a Pandas-UDF stage: the input fields
-    minus ``drop``, plus the ``add`` suffix (``"name type, ..."``). The one
-    shared builder for every mapInPandas/applyInPandas site — names are
-    backtick-quoted so columns with spaces/dots survive, and an escaping
-    fix lands everywhere at once instead of in five hand-rolled copies."""
-    cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name not in drop
-    )
-    return f"{cols}, {add}" if add else cols
+def text_or_empty(value) -> str:
+    """The engine's NULL-text rule: a NULL text is the empty document.
+
+    Bare ``str()`` would turn NULL into the word 'None': a NULL-text doc
+    would then be a near-dup of any real document whose text is 'none',
+    and a driver-side trainer would learn from a token its scorer never
+    sees. Every Python kernel and trainer that reads a text column goes
+    through this one definition."""
+    return "" if value is None else str(value)
+
+
+def column_udf(
+    return_type: str,
+    kernel: Callable[..., object],
+    setup: Callable[[], object] = lambda: None,
+    arg: Callable[[object], object] = text_or_empty,
+):
+    """Iterator pandas UDF over one (or a few) columns: one value per row.
+
+    ``kernel(values, state)`` maps a batch's values (each passed through
+    ``arg`` — the NULL-text rule unless the column is not text) to a
+    same-length sequence; called with k columns, the kernel gets k value
+    lists before ``state``. ``setup()`` runs once per task and its result
+    is ``state`` (broadcast ``.value`` reads, per-task memos). Only the
+    argument columns cross into Python (one ``ArrowEvalPython`` node); the
+    caller's pass-through columns stay in the JVM, where a ``mapInPandas``
+    over the whole row would ship them through pandas and back."""
+
+    def run(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        state = setup()
+        for batch in batches:
+            cols = batch if isinstance(batch, tuple) else (batch,)
+            yield pd.Series(kernel(*([arg(v) for v in c] for c in cols), state))
+
+    return F.pandas_udf(run, return_type)

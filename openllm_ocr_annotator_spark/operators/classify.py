@@ -3,7 +3,8 @@
 Wires kernel/classify.py into the engine: train the linear scorer on a
 bounded deterministic sample (driver-side, same rule as the BPE trainer /
 IVF quantizer), broadcast the weight vector (2^18 doubles = 2 MB — model,
-never corpus), score every document in one narrow ``mapInPandas`` pass.
+never corpus), score every document in one narrow column-UDF pass over
+the text column.
 
 Self-supervised bootstrap: ``train_from_heuristic`` derives labels from
 the heuristic gate (`functions/text.quality_score` ≥ threshold) on the
@@ -19,15 +20,12 @@ the ``quality_classifier`` driver query).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import classify as C
-from ._common import schema_ddl, spread_partitions
+from ._common import column_udf, spread_partitions, text_or_empty
 
 N_FEATURES = 1 << 18
 
@@ -60,7 +58,7 @@ def train_classifier(
         .collect()
     )
     return C.train_logreg(
-        [str(r.t) for r in rows], [int(r.y) for r in rows],
+        [text_or_empty(r.t) for r in rows], [int(r.y) for r in rows],
         n_features=N_FEATURES, steps=steps,
     )
 
@@ -95,17 +93,13 @@ def score_documents(
     if out_col in docs.columns:
         raise ValueError(f"score_documents: input already has {out_col!r}")
     bc = docs.sparkSession.sparkContext.broadcast((weights, float(bias)))
-    other_cols = [c for c in docs.columns if c != text_col]
-    schema = schema_ddl(docs, drop=(text_col,), add=f"{out_col} double")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, b = bc.value
-        for pdf in batches:
-            out = pdf[other_cols].copy()
-            out[out_col] = [
-                C.score_text(str(t) if t is not None else "", w, b)
-                for t in pdf[text_col]
-            ]
-            yield out
-
-    return spread_partitions(docs, id_col).mapInPandas(kernel, schema=schema)
+    score = column_udf(
+        "double",
+        lambda texts, wb: [C.score_text(t, *wb) for t in texts],
+        lambda: bc.value,
+    )
+    return (
+        spread_partitions(docs, id_col)
+        .select("*", score(text_col).alias(out_col))
+        .drop(text_col)
+    )

@@ -17,7 +17,8 @@ pipeline/image_dataset.py:43-47) — added as first-class engine capability:
                     distance ≤ d pairs must share ≥1 of d+1 chunks).
 
 Scale notes (100 TB):
-- signatures are computed in one narrow mapInPandas pass (no shuffle);
+- signatures are computed in one narrow column-UDF pass over the text
+  column (no shuffle);
   banding is a JVM projection of those signatures, with no Python stage;
 - the only shuffles are the band-bucket exchanges, keyed by (band_idx,
   band_hash) — uniformly distributed by construction; a pathological bucket
@@ -40,9 +41,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..kernel import dedup as K
-from ._common import spread_partitions
-
-SIG_SCHEMA = "doc_id long, signature array<long>"
+from ._common import column_udf, spread_partitions
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -218,22 +217,17 @@ def minhash_signatures(
 ) -> DataFrame:
     """Narrow pass: text → MinHash signature (numpy kernel per Arrow batch)."""
     a, b = K.perm_params(num_perm, seed)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL is absence-of-text, not the string 'None': bare str()
-            # would make a NULL-text doc a perfect near-dup of any real
-            # document whose text is the word 'none' (and of every other
-            # NULL doc via a 'None'-shingle match rather than emptiness)
-            allsh, counts = K.shingle_hashes_batch(
-                [str(t) if t is not None else "" for t in pdf[text_col]],
-                shingle_n,
-            )
-            sigs = K.minhash_signatures_batch(allsh, counts, a, b).astype(np.int64)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "signature": list(sigs)})
-
-    return spread_partitions(docs.select(id_col, text_col), id_col).mapInPandas(
-        kernel, schema=SIG_SCHEMA
+    sign = column_udf(
+        "array<long>",
+        lambda texts, _: list(
+            K.minhash_signatures_batch(
+                *K.shingle_hashes_batch(texts, shingle_n), a, b
+            ).astype(np.int64)
+        ),
+    )
+    return spread_partitions(docs.select(id_col, text_col), id_col).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        sign(text_col).alias("signature"),
     )
 
 
@@ -417,22 +411,13 @@ def simhash_pairs(
     relation for caller-owned ``unpersist()`` (same contract as
     ``ngram_jaccard_pairs``).
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # same NULL-vs-'None' distinction as minhash_signatures
-            hashes = K.simhash64_batch(
-                [str(t) if t is not None else "" for t in pdf[text_col]]
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    # store as signed int64 (two's complement view)
-                    "simhash": hashes.view(np.int64),
-                }
-            )
-
-    hashes = spread_partitions(docs.select(id_col, text_col), id_col).mapInPandas(
-        kernel, schema="doc_id long, simhash long"
+    simhash = column_udf(
+        # stored as signed int64 (two's complement view)
+        "long", lambda texts, _: K.simhash64_batch(texts).view(np.int64)
+    )
+    hashes = spread_partitions(docs.select(id_col, text_col), id_col).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        simhash(text_col).alias("simhash"),
     ).cache()
     if caches is not None:
         caches.append(hashes)

@@ -4,7 +4,7 @@ Wires kernel/dsir.py into the engine: estimate the target and raw hashed
 n-gram distributions on bounded deterministic samples (driver-side — the
 same rule as the BPE trainer / IVF quantizer / quality classifier),
 broadcast ONE diff vector (logp − logq: 2^14 doubles = 128 KB — model,
-never corpus), weight every document in one narrow ``mapInPandas`` pass,
+never corpus), weight every document in one narrow column-UDF pass,
 then select k documents without replacement via Gumbel-top-k
 (``orderBy(key).limit(k)`` → TakeOrderedAndProject: per-partition top-k +
 driver merge, never a global sort shuffle).
@@ -18,15 +18,12 @@ possible global operation.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import dsir as D
-from ._common import schema_ddl, spread_partitions
+from ._common import column_udf, spread_partitions, text_or_empty
 
 N_BUCKETS = 1 << 14
 
@@ -55,7 +52,7 @@ def train_importance_model(
             .limit(sample_docs)
             .collect()
         )
-        return [str(r.t) for r in rows]
+        return [text_or_empty(r.t) for r in rows]
 
     logp = D.train_ngram_dist(sample(docs.filter(target_filter)), n_buckets, alpha)
     logq = D.train_ngram_dist(sample(docs), n_buckets, alpha)
@@ -81,25 +78,19 @@ def importance_weights(
         if c in docs.columns:
             raise ValueError(f"importance_weights: input already has {c!r}")
     bc = docs.sparkSession.sparkContext.broadcast(diff)
-    other_cols = [c for c in docs.columns if c != text_col]
-    schema = schema_ddl(docs, drop=(text_col,), add="log_w double, sel_key double")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        d = bc.value
-        for pdf in batches:
-            out = pdf[other_cols].copy()
-            lw = [
-                D.log_importance(str(t) if t is not None else "", d)
-                for t in pdf[text_col]
-            ]
-            out["log_w"] = lw
-            out["sel_key"] = [
-                w + D.gumbel_key(str(i), seed)
-                for w, i in zip(lw, pdf[id_col])
-            ]
-            yield out
-
-    return spread_partitions(docs, id_col).mapInPandas(kernel, schema=schema)
+    weigh = column_udf(
+        "array<double>",
+        lambda texts, ids, d: [
+            [w, w + D.gumbel_key(i, seed)]
+            for w, i in zip((D.log_importance(t, d) for t in texts), ids)
+        ],
+        lambda: bc.value,
+    )(text_col, id_col)
+    return (
+        spread_partitions(docs, id_col)
+        .select("*", weigh[0].alias("log_w"), weigh[1].alias("sel_key"))
+        .drop(text_col)
+    )
 
 
 def dsir_select(

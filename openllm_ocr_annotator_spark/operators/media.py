@@ -4,7 +4,8 @@ The reference encodes images to base64 with an iterative resize guard
 (≤20 MB, ≤178,956,970 px, reference: annotators/base.py:21-163) before
 shipping them to the LLM. The engine treats media as opaque ``binary``
 payloads (or ``media_ref`` pointers) with typed metadata, processed by
-Arrow-batched ``mapInPandas`` kernels.
+Arrow-batched Python kernels: ``mapInPandas`` for decode, a column UDF
+over the payload for the perceptual hash.
 
 Decode is LAYERED: when the input carries a ``payload`` binary column,
 ``extract_media_features`` decodes for REAL — BMP/PPM/GIF/PNG/JPEG via
@@ -274,27 +275,30 @@ def perceptual_hash(media_rows: DataFrame) -> DataFrame:
     from ..kernel import imagecodec as _codec
     from ..kernel import phash as _ph
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if payload is None:
-                    raise ValueError(f"perceptual hash: NULL payload for {ref!r}")
-                w, h, gray = _codec.decode_gray(bytes(payload))
-                out.append(_ph.to_signed64(_ph.dhash64(w, h, gray)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "phash": pd.Series(out, dtype="int64"),
-                }
-            )
+    from ._common import column_udf, spread_partitions
 
-    from ._common import spread_partitions
-
+    dhash = column_udf(
+        "long",
+        lambda payloads, _: [
+            _ph.to_signed64(_ph.dhash64(*_codec.decode_gray(p))) for p in payloads
+        ],
+        arg=bytes,
+    )
+    # NULL is refused JVM-side, where the row's media_ref is at hand, before
+    # any payload reaches the UDF
+    payload = F.when(
+        F.col("payload").isNull(),
+        F.raise_error(
+            F.format_string("perceptual hash: NULL payload for '%s'", "media_ref")
+        ),
+    ).otherwise(F.col("payload"))
     return spread_partitions(
         media_rows.select("doc_id", "media_ref", "payload"), "media_ref"
-    ).mapInPandas(kernel, schema="doc_id string, media_ref string, phash long")
+    ).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("media_ref").cast("string").alias("media_ref"),
+        dhash(payload).alias("phash"),
+    )
 
 
 def phash_dedup(

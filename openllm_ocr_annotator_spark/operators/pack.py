@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._common import schema_ddl
-
 
 def pack_sequences(
     docs: DataFrame,
@@ -109,7 +107,12 @@ def pack_sequences_dense(
     """
     import pandas as pd
 
-    out_schema = schema_ddl(docs, add="pack_id long")
+    # input fields + pack_id; names backtick-quoted so columns with
+    # spaces/dots survive the DDL round trip
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in docs.schema.fields]
+        + ["pack_id long"]
+    )
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col, kind="mergesort")

@@ -4,11 +4,11 @@ Train a stupid-backoff LM (kernel/lm.py: bigram floor or KenLM-style
 5-gram via ``order``) on a bounded in-domain
 sample (driver-side — same rule as the BPE trainer / IVF quantizer /
 quality classifier: fit on a sample, broadcast the model), then score
-every document's perplexity in one narrow ``mapInPandas`` pass and gate on
-a threshold. In the CCNet recipe the in-domain sample is a curated corpus
-(Wikipedia) and documents land in head/middle/tail perplexity buckets;
-the same bucketing is expressed here as a plain ``ntile``/threshold over
-the scored column.
+every document's perplexity in one narrow column-UDF pass over the text
+column and gate on a threshold. In the CCNet recipe the in-domain sample
+is a curated corpus (Wikipedia) and documents land in head/middle/tail
+perplexity buckets; the same bucketing is expressed here as a plain
+``ntile``/threshold over the scored column.
 
 Scale shape: the model is sample-sized (counts dicts, driver-holdable by
 construction), scoring is shuffle-free, and the per-doc log-prob is a
@@ -18,14 +18,11 @@ replay, which is what the golden oracle checks.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import lm as L
-from ._common import schema_ddl, spread_partitions
+from ._common import column_udf, spread_partitions, text_or_empty
 
 
 def train_lm_from_sources(
@@ -50,7 +47,7 @@ def train_lm_from_sources(
         .limit(sample_docs)
         .collect()
     )
-    texts = [str(r.t) for r in rows]
+    texts = [text_or_empty(r.t) for r in rows]
     if order <= 2:
         return L.train_bigram_lm(texts)
     return L.train_ngram_lm(texts, order=order)
@@ -68,20 +65,16 @@ def score_perplexity(
         raise ValueError(f"score_perplexity: input already has {out_col!r}")
     bc = docs.sparkSession.sparkContext.broadcast(lm)
     scorer = L.ngram_perplexity if isinstance(lm, L.NgramLM) else L.perplexity
-    other_cols = [c for c in docs.columns if c != text_col]
-    schema = schema_ddl(docs, drop=(text_col,), add=f"{out_col} double")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = bc.value
-        for pdf in batches:
-            out = pdf[other_cols].copy()
-            out[out_col] = [
-                scorer(str(t) if t is not None else "", model)
-                for t in pdf[text_col]
-            ]
-            yield out
-
-    return spread_partitions(docs, id_col).mapInPandas(kernel, schema=schema)
+    score = column_udf(
+        "double",
+        lambda texts, model: [scorer(t, model) for t in texts],
+        lambda: bc.value,
+    )
+    return (
+        spread_partitions(docs, id_col)
+        .select("*", score(text_col).alias(out_col))
+        .drop(text_col)
+    )
 
 
 def perplexity_filter(

@@ -10,9 +10,10 @@ denominated in real tokens:
    broadcast to the fleet); the sample size bounds driver memory regardless
    of corpus scale.
 2. ``bpe_token_counts``: broadcast the merge ranks, count per doc in a
-   ``mapInPandas`` kernel (kernel/bpe.py). A per-task word-length memo
-   exploits Zipf: the unique-word set per task is tiny relative to the
-   token stream, so the Python cost is ~O(unique words), not O(tokens).
+   column UDF over the text column (kernel/bpe.py). A per-task
+   word-length memo exploits Zipf: the unique-word set per task is tiny
+   relative to the token stream, so the Python cost is ~O(unique words),
+   not O(tokens).
 
 Scale shape: training reads ``sample_docs`` rows once; counting is one
 narrow pass, no shuffle; the broadcast is merges only (KBs for typical
@@ -21,14 +22,11 @@ merge counts), never the corpus vocabulary.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import bpe as B
-from ._common import schema_ddl, spread_partitions
+from ._common import column_udf, spread_partitions
 
 
 def train_bpe_from_corpus(
@@ -63,18 +61,14 @@ def bpe_token_counts(
             "pass out_col to avoid a silent duplicate"
         )
     ranks_bc = docs.sparkSession.sparkContext.broadcast(B.merge_ranks(merges))
-    other_cols = [c for c in docs.columns if c != text_col]
-    schema = schema_ddl(docs, drop=(text_col,), add=f"{out_col} long")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ranks = ranks_bc.value
-        cache: dict[str, int] = {}  # per-task memo — Zipf makes this tiny
-        for pdf in batches:
-            out = pdf[other_cols].copy()
-            out[out_col] = [
-                B.count_tokens(str(t) if t is not None else "", ranks, cache)
-                for t in pdf[text_col]
-            ]
-            yield out
-
-    return spread_partitions(docs, id_col).mapInPandas(kernel, schema=schema)
+    count = column_udf(
+        "long",
+        lambda texts, st: [B.count_tokens(t, *st) for t in texts],
+        # per-task (ranks, word-length memo) — Zipf makes the memo tiny
+        lambda: (ranks_bc.value, {}),
+    )
+    return (
+        spread_partitions(docs, id_col)
+        .select("*", count(text_col).alias(out_col))
+        .drop(text_col)
+    )

@@ -2203,7 +2203,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real BPE token counting (kernel/bpe.py): train merges on a bounded
     deterministic sample (first 200 docs, 200 merges), broadcast the ranks,
-    count per doc in one narrow mapInPandas pass. Value-checked against a
+    count per doc in one narrow column-UDF pass. Value-checked against a
     golden computed by the pure-Python kernel WITHOUT Spark
     (scripts/make_goldens.py) — the greedy-merge loop is not
     SQL-expressible, so the golden pins it the same way the sink formats
@@ -2326,7 +2326,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates): hashed uni+bi-gram features → logistic linear scorer, trained
     driver-side on a bounded sample with CCNet-style weak labels
     (reference sources src0-src4 positive), weights broadcast, corpus
-    scored in one narrow mapInPandas pass. Value-checked against a
+    scored in one narrow column-UDF pass. Value-checked against a
     sequential pure-Python replay sharing kernel/classify.py verbatim
     (per-doc sequential sparse fold → batch-size-independent scores)."""
     from .operators.classify import score_documents, train_classifier

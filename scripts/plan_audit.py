@@ -2,8 +2,8 @@
 """Generate PLANS.md: a physical-plan audit of every catalog query.
 
 For each ``queries()`` entry: exchange count, join strategies, Python
-boundary (mapInArrow/mapInPandas), whether filters reach the scan, and
-whole-stage-codegen presence — the facts that decide 100 TB behavior,
+stages (every Arrow/pandas node plus row-at-a-time BatchEvalPython),
+whether filters reach the scan, and whole-stage-codegen presence — the facts that decide 100 TB behavior,
 in one reviewable table.
 """
 
@@ -39,8 +39,8 @@ def audit(plan: str) -> dict:
         "smj": n(r"^\(\d+\) SortMergeJoin"),
         "window_limit": n(r"^\(\d+\) WindowGroupLimit"),
         "python": n(
-            r"^\(\d+\) (?:ArrowEvalPython|MapInArrow|PythonMapInArrow"
-            r"|FlatMapGroupsInPandas|MapInPandas)"
+            r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython|MapInArrow"
+            r"|PythonMapInArrow|FlatMapGroupsInPandas|MapInPandas)"
         ),
         "pushed": n(r"PushedFilters: \[[^]]") > 0,
     }
@@ -72,10 +72,11 @@ def main() -> None:
         "# PLANS — physical-plan audit of every driver query",
         "",
         "Generated by `scripts/plan_audit.py` at sf0.001 (`local[8]`).",
-        "Exchanges = shuffle boundaries; Py = Arrow-batched Python stages",
-        "(the only places Python runs); WGL = WindowGroupLimit (top-1 without",
-        "sorting losers). Plan-shape regressions are pinned by",
-        "`tests/test_plan_shapes.py`; this file is the human-readable audit.",
+        "Exchanges = shuffle boundaries; Py = Python stages, Arrow-batched or",
+        "row-at-a-time BatchEvalPython (the only places Python runs); WGL =",
+        "WindowGroupLimit (top-1 without sorting losers). Plan-shape",
+        "regressions are pinned by `tests/test_plan_shapes.py`; this file is",
+        "the human-readable audit.",
         "",
         "`dedup_ngram_jaccard` is the EXACT-Jaccard verifier (its gram",
         "subtree is recomputed per consumer → high exchange count by design);",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from openllm_ocr_annotator_spark.kernel import classify as C
 
 POS = [f"excellent prose paragraph number {i} with fluent narrative text" for i in range(20)]
@@ -60,3 +62,34 @@ def test_spark_scoring_matches_kernel(spark):
     # schema contract: text dropped, other columns preserved
     cols = score_documents(docs, w, b).columns
     assert cols == ["doc_id", "source", "model_quality"]
+
+
+def _lm_state(lm):
+    return {s: getattr(lm, s) for s in lm.__slots__}
+
+
+@pytest.mark.parametrize("trainer", ["classify", "perplexity", "dsir"])
+def test_trainers_read_null_text_as_empty(spark, trainer):
+    """A NULL training text is the empty document, as in every scorer:
+    the driver-side trainers must not learn the word 'None' from it."""
+    from pyspark.sql import functions as F
+
+    from openllm_ocr_annotator_spark.operators.classify import train_classifier
+    from openllm_ocr_annotator_spark.operators.dsir import train_importance_model
+    from openllm_ocr_annotator_spark.operators.perplexity import train_lm_from_sources
+
+    def docs(blank):
+        rows = [(i, POS[i] if i % 2 else NEG[i], "src0" if i % 2 else "src9")
+                for i in range(8)]
+        rows[2:4] = [(2, blank, "src9"), (3, blank, "src0")]
+        return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+    def train(df):
+        if trainer == "classify":
+            w, b = train_classifier(df, F.col("source") == "src0", steps=20)
+            return w.tolist(), b
+        if trainer == "perplexity":
+            return _lm_state(train_lm_from_sources(df, ["src0"]))
+        return train_importance_model(df, F.col("source") == "src0", n_buckets=64).tolist()
+
+    assert train(docs(None)) == train(docs(""))

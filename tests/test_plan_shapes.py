@@ -32,6 +32,16 @@ def _n_exchanges(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M))
 
 
+def _n_python(plan: str) -> int:
+    import re
+
+    return len(re.findall(
+        r"^\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
+        r"|FlatMapGroupsInPandas)",
+        plan, flags=re.M,
+    ))
+
+
 def test_weighted_vote_plan(spark):
     plan = _plan(qc.QUERIES["weighted_vote"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, "weights dim must broadcast"
@@ -280,7 +290,110 @@ def test_bpe_counting_is_one_narrow_pass(spark):
     plan = _plan(bpe_token_counts(docs, merges))
     assert _n_exchanges(plan) <= 1
     assert "Join" not in plan
-    assert "FlatMapGroupsInPandas" not in plan  # mapInPandas, not grouped
+    assert "FlatMapGroupsInPandas" not in plan  # a column UDF, not grouped
+
+
+def _one_column_operators(spark):
+    """The seven per-row Python kernels declared through
+    ``operators._common.column_udf``: name → (output frame, Python input
+    columns, exchanges, Python nodes, output DDL). The counts are the
+    ones the whole-row ``mapInPandas`` versions planned."""
+    import numpy as np
+
+    from openllm_ocr_annotator_spark.kernel import lm as L
+    from openllm_ocr_annotator_spark.operators import (
+        classify, dedup, dsir, media, perplexity, tokenize,
+    )
+    from openllm_ocr_annotator_spark.synth import synthesize_media_variants
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    kept = "doc_id:bigint,lang:string,source:string,n_chars:bigint"
+    return {
+        "score_documents": (
+            lambda: classify.score_documents(docs, np.zeros(classify.N_FEATURES), 0.0),
+            {"text"}, 1, 1, f"struct<{kept},model_quality:double>"),
+        # sel_key's Gumbel noise is keyed on the doc id
+        "importance_weights": (
+            lambda: dsir.importance_weights(docs, np.zeros(dsir.N_BUCKETS)),
+            {"text", "doc_id"}, 1, 1, f"struct<{kept},log_w:double,sel_key:double>"),
+        "score_perplexity": (
+            lambda: perplexity.score_perplexity(docs, L.train_bigram_lm(["a b"])),
+            {"text"}, 1, 1, f"struct<{kept},perplexity:double>"),
+        "bpe_token_counts": (
+            lambda: tokenize.bpe_token_counts(docs, [("a", "b")]),
+            {"text"}, 1, 1, f"struct<{kept},n_tokens:bigint>"),
+        "simhash_pairs": (
+            lambda: dedup.simhash_pairs(docs),
+            {"text"}, 7, 1, "struct<doc_a:bigint,doc_b:bigint,hamming:int>"),
+        "minhash_signatures": (
+            lambda: dedup.minhash_signatures(docs),
+            {"text"}, 1, 1, "struct<doc_id:bigint,signature:array<bigint>>"),
+        # media_ref is read JVM-side only, by the NULL-payload error; the
+        # second Python node is the payload synthesis
+        "perceptual_hash": (
+            lambda: media.perceptual_hash(synthesize_media_variants(spark, SF_DIR)),
+            {"payload", "media_ref"}, 1, 2,
+            "struct<doc_id:string,media_ref:string,phash:bigint>"),
+    }
+
+
+_ONE_COLUMN_OPS = [
+    "score_documents", "importance_weights", "score_perplexity",
+    "bpe_token_counts", "simhash_pairs", "minhash_signatures", "perceptual_hash",
+]
+
+
+def _udf_args(plan: str) -> list[list[str]]:
+    """Per ArrowEvalPython node: the column names each top-level argument
+    of its (single) UDF call reads."""
+    import re
+
+    out = []
+    for call in re.findall(
+        r"^\(\d+\) ArrowEvalPython\n(?:.*\n)*?Arguments: \[\w+\((.*)\)#\d+L?\], \[",
+        plan, flags=re.M,
+    ):
+        args, depth, cur = [], 0, ""
+        for ch in call:
+            depth += (ch == "(") - (ch == ")")
+            if ch == "," and depth == 0:
+                args.append(cur)
+                cur = ""
+            else:
+                cur += ch
+        args.append(cur)
+        out.append([sorted(set(re.findall(r"(\w+)#\d+", a))) for a in args])
+    return out
+
+
+@pytest.mark.parametrize("name", _ONE_COLUMN_OPS)
+def test_one_column_kernels_ship_only_their_input(spark, name):
+    """Each per-row kernel is one ArrowEvalPython node whose UDF reads only
+    its text/payload column: pass-through columns stay in the JVM (a
+    whole-row mapInPandas took every column). Exchange and Python-node
+    counts stay those of the mapInPandas plans."""
+    build, inputs, n_exchanges, n_python, _ = _one_column_operators(spark)[name]
+    # an equal plan left persisted by another test (phash_dedup persists
+    # its hashes) would plan as an InMemoryRelation listing it twice
+    spark.catalog.clearCache()
+    plan = _plan(build())
+    calls = _udf_args(plan)
+    assert len(calls) == 1, f"{name}: {len(calls)} ArrowEvalPython nodes"
+    assert {c for arg in calls[0] for c in arg} == inputs
+    # one UDF argument per input, except the payload guard's error text
+    assert len(calls[0]) == len(inputs - {"media_ref"})
+    assert _n_exchanges(plan) == n_exchanges
+    assert _n_python(plan) == n_python
+
+
+@pytest.mark.parametrize("name", _ONE_COLUMN_OPS)
+def test_one_column_kernels_output_schema(spark, name):
+    """Output DDL (names, types, order) as the mapInPandas versions
+    declared it: input columns minus the text, then the outputs; the
+    fixed-schema passes keep ``doc_id`` long (minhash, simhash) or string
+    (perceptual hash)."""
+    build, *_, ddl = _one_column_operators(spark)[name]
+    assert build().schema.simpleString() == ddl
 
 
 def test_media_payload_decode_is_shuffle_free(spark):
@@ -355,16 +468,10 @@ def test_minhash_banding_stays_jvm_side(spark, name, sig_passes, max_exchanges):
     xxhash64 of signature slices): the only Python stages left are the
     signature passes (one per signed input — the incremental query signs
     its new batch and its history), and banding adds no exchange."""
-    import re
-
     plan = _plan(qc.QUERIES[name](spark, SF_DIR))
     assert "xxhash64" in plan, "band keys must be hashed JVM-side"
-    py = re.findall(
-        r"^\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
-        r"|FlatMapGroupsInPandas)",
-        plan, flags=re.M,
-    )
-    assert len(py) == sig_passes, f"{name}: {len(py)} Python stages"
+    n_py = _n_python(plan)
+    assert n_py == sig_passes, f"{name}: {n_py} Python stages"
     assert _n_exchanges(plan) <= max_exchanges
 
 
