@@ -7,13 +7,13 @@ kernel-vs-cluster twin contract as ``kernel/bpe.py`` / ``kernel/lm.py``).
 Division of labor: bit POSITIONS are computed Spark-side
 (``pmod(xxhash64(text, i), m_bits)`` for probe index i in 0..k-1) so the
 build and membership paths share IDENTICAL JVM hashing and nothing here
-needs to replicate xxhash64. This module only sizes, packs, merges and
-probes bitmaps:
+needs to replicate xxhash64. The distributed build is a JVM bitmap
+aggregate whose chunks use this module's bit order. This module sizes,
+packs and probes bitmaps:
 
 - ``suggest_params(n, fpp)``  — standard (m, k) sizing formulas
 - ``empty_bitmap(m_bits)``    — packed uint8 bitmap, little-endian bits
-- ``set_bits(bitmap, pos)``   — vectorized build (duplicate-safe)
-- ``or_merge(bitmaps)``       — associative partial-bitmap reduction
+- ``set_bits(bitmap, pos)``   — vectorized sequential build (duplicate-safe)
 - ``probe_rows(bitmap, mat)`` — per-row all-k-bits-set membership test
 
 The Bloom property the exact-dedup operator relies on: NO false negatives
@@ -32,7 +32,6 @@ __all__ = [
     "suggest_params",
     "empty_bitmap",
     "set_bits",
-    "or_merge",
     "probe_rows",
 ]
 
@@ -74,24 +73,6 @@ def set_bits(bitmap: np.ndarray, positions: np.ndarray) -> None:
     if pos.min() < 0 or pos.max() >= bitmap.size * 8:
         raise ValueError("bit position out of range")
     np.bitwise_or.at(bitmap, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-
-
-def or_merge(bitmaps) -> np.ndarray:
-    """OR-fold an iterable of equal-sized packed bitmaps (associative and
-    commutative, so ANY merge tree — per-partition partials, fan-in
-    stages, driver fold — yields the same filter)."""
-    out: np.ndarray | None = None
-    for bm in bitmaps:
-        arr = np.frombuffer(bm, dtype=np.uint8) if isinstance(bm, (bytes, bytearray)) else bm
-        if out is None:
-            out = arr.astype(np.uint8, copy=True)
-        elif arr.size != out.size:
-            raise ValueError(f"bitmap size mismatch: {arr.size} vs {out.size}")
-        else:
-            out |= arr
-    if out is None:
-        raise ValueError("or_merge of zero bitmaps")
-    return out
 
 
 def probe_rows(bitmap: np.ndarray, positions_mat: np.ndarray) -> np.ndarray:

@@ -39,23 +39,26 @@ def column_udf(
     return_type: str,
     kernel: Callable[..., object],
     setup: Callable[[], object] = lambda: None,
-    arg: Callable[[object], object] = text_or_empty,
+    arg: Callable[[object], object] | None = text_or_empty,
 ):
     """Iterator pandas UDF over one (or a few) columns: one value per row.
 
     ``kernel(values, state)`` maps a batch's values (each passed through
-    ``arg`` — the NULL-text rule unless the column is not text) to a
-    same-length sequence; called with k columns, the kernel gets k value
-    lists before ``state``. ``setup()`` runs once per task and its result
-    is ``state`` (broadcast ``.value`` reads, per-task memos). Only the
-    argument columns cross into Python (one ``ArrowEvalPython`` node); the
-    caller's pass-through columns stay in the JVM, where a ``mapInPandas``
-    over the whole row would ship them through pandas and back."""
+    ``arg`` — the NULL-text rule unless the column is not text; with
+    ``arg=None`` the kernel gets the batch's pandas Series as is) to a
+    same-length sequence, or to a ``pd.DataFrame`` for a struct return
+    type; called with k columns, the kernel gets k value lists before
+    ``state``. ``setup()`` runs once per task and its result is ``state``
+    (broadcast ``.value`` reads, per-task memos). Only the argument
+    columns cross into Python (one ``ArrowEvalPython`` node); the caller's
+    pass-through columns stay in the JVM, and so does any fan-out: a
+    kernel that returns an array per row is exploded by the caller."""
 
     def run(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         state = setup()
         for batch in batches:
             cols = batch if isinstance(batch, tuple) else (batch,)
-            yield pd.Series(kernel(*([arg(v) for v in c] for c in cols), state))
+            out = kernel(*(c if arg is None else [arg(v) for v in c] for c in cols), state)
+            yield out if isinstance(out, pd.DataFrame) else pd.Series(out)
 
     return F.pandas_udf(run, return_type)

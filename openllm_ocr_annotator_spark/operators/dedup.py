@@ -33,13 +33,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..kernel import bloom as B
 from ..kernel import dedup as K
 from ._common import column_udf, spread_partitions
 
@@ -1002,6 +1000,34 @@ def contamination_score(
     )
 
 
+def _bloom_positions(text_col: str, m_bits: int, k: int):
+    """The k Bloom bit positions of each text, ``pmod(xxhash64(text, i), m)``."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.pmod(F.xxhash64(F.col(text_col), i), F.lit(m_bits)),
+    )
+
+
+def bloom_bitmap(docs: DataFrame, text_col: str, m_bits: int, k: int) -> np.ndarray:
+    """Packed Bloom bitmap (``kernel/bloom`` layout) of ``docs``' texts,
+    built by one mergeable JVM aggregate. Spark bitmaps index values from
+    1 in 32768-bit (4096-byte) buckets with the same bit order as
+    kernel/bloom (bit i: byte i>>3, mask 1<<(i&7)), so each aggregated
+    chunk is copied into place; an empty input gives the zero bitmap."""
+    value = F.explode(F.transform(_bloom_positions(text_col, m_bits, k), lambda p: p + 1))
+    chunks = (
+        docs.select(value.alias("_v"))
+        .groupBy(F.bitmap_bucket_number("_v").alias("bucket"))
+        .agg(F.bitmap_construct_agg(F.bitmap_bit_position("_v")).alias("bits"))
+        .collect()
+    )
+    bitmap = B.empty_bitmap(m_bits)
+    for r in chunks:
+        start = (r["bucket"] - 1) * 4096
+        bitmap[start:start + 4096] = np.frombuffer(r["bits"], np.uint8)[: bitmap.size - start]
+    return bitmap
+
+
 def bloom_incremental_dedup(
     new_docs: DataFrame,
     history: DataFrame,
@@ -1009,7 +1035,6 @@ def bloom_incremental_dedup(
     text_col: str = "text",
     m_bits: int = 1 << 23,
     k: int = 5,
-    merge_fanin: int = 64,
 ) -> DataFrame:
     """Incremental-ingest exact dedup: return the ``new_docs`` rows whose
     text does NOT already appear in the committed ``history`` corpus,
@@ -1022,21 +1047,20 @@ def bloom_incremental_dedup(
     by the exact digest anti-join over the candidate subset. ``m_bits``/
     ``k`` tune COST only, never the answer.
 
-    Physical shape (PySpark exposes no ``stat.bloomFilter``; this is the
-    same partial-sketch tree Spark's Scala helper builds internally):
+    Physical shape:
 
     1. positions: ``pmod(xxhash64(text, i), m)`` for i in 0..k-1, JVM-side
        on BOTH build and probe paths — one hashing implementation, zero
-       cross-language replication (kernel/bloom.py only packs/merges/
-       probes bitmaps).
-    2. build: narrow ``mapInPandas`` → one packed partial bitmap per
-       partition → fan-in OR-merge stage (``applyInPandas``, ≤
-       ``merge_fanin`` groups) → driver OR-fold of ≤ fanin bitmaps.
-       Driver traffic is fanin × m/8 bytes (64 MB at defaults), NOT
-       #partitions × m/8 — the fan-in stage is what makes a 10k-partition
-       history build driver-safe.
-    3. probe: broadcast bitmap + Arrow-batched pandas UDF (vectorized
-       numpy gather, no per-row Python).
+       cross-language replication (kernel/bloom.py only packs and probes
+       bitmaps).
+    2. build: one mergeable JVM aggregate. Positions explode, group by
+       ``bitmap_bucket_number(pos + 1)`` and OR into 4 KB chunks with
+       ``bitmap_construct_agg(bitmap_bit_position(pos + 1))`` (partial
+       aggregation map-side, one exchange). The driver collects at most
+       ⌈m/32768⌉ chunks — m/8 bytes in all, whatever the partition count —
+       and places them into the bitmap.
+    3. probe: broadcast bitmap (read once per task) + a column UDF over
+       the positions (vectorized numpy gather, no per-row Python).
     4. verify: anti-join of candidates only. At a 1% duplicate rate the
        join input shrinks ~99% + fpp; the Bloom pays for itself whenever
        history is too big to broadcast but m/8 bytes is not.
@@ -1047,62 +1071,21 @@ def bloom_incremental_dedup(
     or the bucketed-storage anti-join (`sources/tables.py` resume path),
     which is the beyond-Bloom scale answer.
     """
-    from ..kernel import bloom as B
-
     if m_bits % 8 or m_bits <= 0:
         raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
 
-    spark = new_docs.sparkSession
-    pos_expr = F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.pmod(F.xxhash64(F.col(text_col), i), F.lit(m_bits)),
-    ).alias("_pos")
+    pos_expr = _bloom_positions(text_col, m_bits, k)
+    bitmap = bloom_bitmap(history, text_col, m_bits, k)
+    bc = new_docs.sparkSession.sparkContext.broadcast(bitmap.tobytes())
 
-    n_bytes = m_bits // 8
-
-    def partial_bitmaps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bm = B.empty_bitmap(m_bits)
-        saw = False
-        for pdf in batches:
-            if len(pdf):
-                saw = True
-                B.set_bits(bm, np.concatenate([np.asarray(p) for p in pdf["_pos"]]))
-        if saw:  # empty partitions emit nothing — fewer rows to merge
-            yield pd.DataFrame({"grp": [0], "bm": [bm.tobytes()]})
-
-    def or_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"grp": pdf["grp"].iloc[:1], "bm": [B.or_merge(list(pdf["bm"])).tobytes()]}
-        )
-
-    partials = (
-        history.select(pos_expr)
-        .mapInPandas(partial_bitmaps, "grp int, bm binary")
-        # any deterministic-enough grouping works (OR is associative and
-        # commutative); the id just bounds the driver collect to ≤ fanin rows
-        .withColumn("grp", (F.monotonically_increasing_id() % merge_fanin).cast("int"))
-        .groupBy("grp")
-        .applyInPandas(or_group, "grp int, bm binary")
-        .collect()
+    might_contain = column_udf(
+        "boolean",
+        lambda pos, bm: B.probe_rows(bm, np.array(pos.tolist(), dtype=np.int64).reshape(-1, k)),
+        lambda: np.frombuffer(bc.value, dtype=np.uint8),
+        arg=None,
     )
-    if partials:
-        bitmap = B.or_merge([r["bm"] for r in partials])
-    else:  # empty history: nothing can be a duplicate
-        bitmap = B.empty_bitmap(m_bits)
-    bc = spark.sparkContext.broadcast(bitmap.tobytes())
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def might_contain(pos: pd.Series) -> pd.Series:
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
-        if len(pos) == 0:
-            return pd.Series([], dtype=bool)
-        mat = np.vstack([np.asarray(p, dtype=np.int64) for p in pos])
-        return pd.Series(B.probe_rows(bm, mat))
-
     probed = new_docs.withColumn("_maybe", might_contain(pos_expr))
     definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     candidates = probed.filter(F.col("_maybe")).drop("_maybe")

@@ -4,8 +4,8 @@ The reference encodes images to base64 with an iterative resize guard
 (≤20 MB, ≤178,956,970 px, reference: annotators/base.py:21-163) before
 shipping them to the LLM. The engine treats media as opaque ``binary``
 payloads (or ``media_ref`` pointers) with typed metadata, processed by
-Arrow-batched Python kernels: ``mapInPandas`` for decode, a column UDF
-over the payload for the perceptual hash.
+column UDFs (``_common.column_udf``): one over ``(media_ref, kind,
+payload)`` for decode, one over the payload for the perceptual hash.
 
 Decode is LAYERED: when the input carries a ``payload`` binary column,
 ``extract_media_features`` decodes for REAL — BMP/PPM/GIF/PNG/JPEG via
@@ -20,20 +20,25 @@ plumbing end-to-end (geometry columns), not just count rows. The
 ``media_payload_decode`` driver query runs the real leg strict (no fake
 possible) against a geometry oracle.
 
-Scale notes: media bytes dominate row size → keep them out of shuffles
-(extract features first, drop payload), and bound Arrow batches via
+Scale notes: media bytes dominate row size → drop the payload as soon as
+features or hashes are extracted, and bound Arrow batches via
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in session.py).
+Decode never shuffles. The perceptual hash shuffles the payload once, and
+only when its input has fewer splits than ``spark.sql.shuffle.partitions``
+(``spread_partitions``: a single small file would otherwise decode on
+one core).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._common import column_udf, spread_partitions
 
 try:  # optional real decoder — not present in this container
     from PIL import Image as _PILImage  # pragma: no cover
@@ -44,10 +49,6 @@ except ImportError:  # pragma: no cover
     HAS_PIL = False
 
 MEDIA_FEATURE_DIM = 8
-MEDIA_SCHEMA = (
-    "doc_id string, media_ref string, kind string, "
-    "width int, height int, n_frames int, feature array<float>"
-)
 
 MAX_BYTES = 20 * 1024 * 1024  # reference guard: annotators/base.py:15
 MAX_PIXELS = 178_956_970
@@ -175,38 +176,39 @@ def extract_media_features(media_rows: DataFrame, strict: bool = False) -> DataF
                 pass
         return _fake_decode(ref, kind)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def require_payload() -> None:
         if strict and not has_payload:
             raise ValueError(
                 "strict media decode requires a 'payload' binary column; "
                 "the input carries none — join payload bytes in (or drop "
                 "strict=True to use the md5 fake geometry)"
             )
-        decode = _strict_decode if strict else _lenient_decode
-        for pdf in batches:
-            if has_payload:
-                meta = [
-                    decode(r, k, p)
-                    for r, k, p in zip(pdf["media_ref"], pdf["kind"], pdf["payload"])
-                ]
-            else:
-                meta = [
-                    _fake_decode(r, k) for r, k in zip(pdf["media_ref"], pdf["kind"])
-                ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "kind": pdf["kind"],
-                    "width": pd.Series([m[0] for m in meta], dtype="int32"),
-                    "height": pd.Series([m[1] for m in meta], dtype="int32"),
-                    "n_frames": pd.Series([m[2] for m in meta], dtype="int32"),
-                    "feature": [_fake_feature(r) for r in pdf["media_ref"]],
-                }
-            )
 
-    cols = ["doc_id", "media_ref", "kind"] + (["payload"] if has_payload else [])
-    return media_rows.select(*cols).mapInPandas(kernel, schema=MEDIA_SCHEMA)
+    decode = _strict_decode if strict else _lenient_decode
+
+    def kernel(refs, kinds, payloads, _) -> pd.DataFrame:
+        meta = [decode(r, k, p) for r, k, p in zip(refs, kinds, payloads)]
+        return pd.DataFrame(
+            {
+                "width": pd.Series([m[0] for m in meta], dtype="int32"),
+                "height": pd.Series([m[1] for m in meta], dtype="int32"),
+                "n_frames": pd.Series([m[2] for m in meta], dtype="int32"),
+                "feature": [_fake_feature(r) for r in refs],
+            }
+        )
+
+    # nondeterministic only to stop filter pushdown: a downstream filter on
+    # the geometry (frame_sample_plan's n_frames > 1) would otherwise be
+    # pushed through the projection and decode every payload twice
+    decoded = column_udf(
+        "struct<width:int,height:int,n_frames:int,feature:array<float>>",
+        kernel, require_payload, arg=None,
+    ).asNondeterministic()
+    # no payload column: every row takes the lenient NULL-payload fallback
+    payload = F.col("payload") if has_payload else F.lit(None).cast("binary")
+    return media_rows.select(
+        "doc_id", "media_ref", "kind", decoded("media_ref", "kind", payload).alias("m")
+    ).select("doc_id", "media_ref", "kind", "m.*")
 
 
 def resize_plan(media_feats: DataFrame, bytes_per_pixel: float = 3.0) -> DataFrame:
@@ -245,8 +247,8 @@ def resize_plan(media_feats: DataFrame, bytes_per_pixel: float = 3.0) -> DataFra
 def frame_sample_plan(media_feats: DataFrame, every_n: int = 30) -> DataFrame:
     """Video frame-sampling plan: one row per sampled frame index.
 
-    The explode is JVM-side; the (stubbed) per-frame decode would be another
-    mapInPandas over (media_ref, frame_idx).
+    The explode is JVM-side; the (stubbed) per-frame decode would be a
+    column UDF over (media_ref, frame_idx).
     """
     idx = F.explode(
         F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
@@ -269,13 +271,16 @@ def perceptual_hash(media_rows: DataFrame) -> DataFrame:
     Strict by contract: a dedup signal silently backed by fake pixels
     would poison survivorship decisions, so undecodable/NULL payloads
     raise (callers route non-image rows — GIF video, fetch failures —
-    around this operator explicitly). One narrow Arrow pass; payload
-    bytes never cross a shuffle (the hash output is 8 bytes/row).
+    around this operator explicitly). One column UDF over the payload.
+    When the input has fewer splits than ``spark.sql.shuffle.partitions``,
+    ``spread_partitions`` first hash-repartitions the (doc_id, media_ref,
+    payload) rows on ``media_ref``, so the payload bytes cross ONE
+    exchange to spread the decode over every core; an input with enough
+    splits hashes in place with no exchange. The hash output is 8
+    bytes/row.
     """
     from ..kernel import imagecodec as _codec
     from ..kernel import phash as _ph
-
-    from ._common import column_udf, spread_partitions
 
     dhash = column_udf(
         "long",

@@ -4,8 +4,13 @@
   whole-stage codegen) — the exactness baseline and the oracle target.
 - LSH-bucketed ANN: random-hyperplane signatures (numpy per Arrow batch,
   deterministic seed) → bucket equi-join → exact rerank within buckets.
-  Multi-probe via XOR-1 neighbors of the bucket code raises recall without
-  widening the join fan-out quadratically.
+  Multi-probe via XOR-1 neighbors of the bucket code (a JVM explode)
+  raises recall without widening the join fan-out quadratically.
+
+Every numpy kernel here (LSH codes, IVF cells, PQ codes, PQ query tables)
+is a column UDF over the vector column alone (``_per_vector``) that
+returns one value per vector; ids stay in the JVM, which also explodes
+array results into rows.
 
 Scale: brute force is O(Q×N×d) — fine for Q small (a probe set), never for
 N×N. The LSH path shuffles on bucket id only; at 10^12 rows bucket width is
@@ -14,15 +19,13 @@ tuned via ``num_planes`` (buckets ≈ 2^planes uniformly filled).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._common import spread_partitions
+from ._common import column_udf, spread_partitions
 
 
 def _dot(a, b):
@@ -100,53 +103,60 @@ def hyperplanes(dim: int, num_planes: int, num_tables: int = 1, seed: int = 42) 
     return np.random.RandomState(seed).normal(size=(num_tables, num_planes, dim))
 
 
+def _per_vector(
+    vectors: DataFrame, id_col: str, vec_col: str, dim: int,
+    return_type: str, kernel,
+) -> DataFrame:
+    """(vec_id, out): ``kernel(mat)`` maps one Arrow batch of vectors, as an
+    (n, dim) float64 matrix, to one ``return_type`` value per vector (a
+    sequence, or a ``pd.DataFrame`` for a struct). Only the vector column
+    crosses into Python; callers explode array results JVM-side.
+
+    The UDF is marked nondeterministic only to stop filter pushdown: the
+    ``isnotnull`` a join infers on ``cell`` and the ``size(out) > 0`` an
+    explode infers would otherwise be pushed through the projection (and
+    below ``spread_partitions``' exchange) and run the kernel twice."""
+    udf = column_udf(
+        return_type,
+        lambda vecs, _: kernel(np.array(vecs.tolist(), dtype=np.float64).reshape(-1, dim)),
+        arg=None,
+    ).asNondeterministic()
+    return vectors.select(F.col(id_col).cast("long").alias("vec_id"), udf(vec_col).alias("out"))
+
+
 def lsh_bucket_ids(
     vectors: DataFrame, planes: np.ndarray,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    multi_probe: bool = False,
 ) -> DataFrame:
-    """(vec_id, bucket) rows over L independent tables.
+    """(vec_id, bucket) rows over L independent tables:
+    bucket = (table_idx << num_planes) | sign-bit code. The kernel returns
+    each vector's L buckets (one matmul per table per batch); the JVM
+    explodes them. ``xor_probes`` adds the query-side neighbor codes."""
+    n_tables, n_planes, dim = planes.shape
+    weights = 1 << np.arange(n_planes, dtype=np.int64)  # (planes,)
+    bases = np.arange(n_tables, dtype=np.int64) << n_planes  # (tables,)
 
-    bucket = (table_idx << num_planes) | sign-bit code; with multi_probe,
-    all XOR-1 neighbor codes are also emitted (query-side probing).
-    """
-    n_tables, n_planes, _ = planes.shape
+    def buckets(mat: np.ndarray) -> list:
+        codes = np.stack(
+            [((mat @ planes[t].T) > 0) * weights for t in range(n_tables)], axis=1
+        ).sum(axis=2)  # (n, tables)
+        return list(bases | codes)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # fully vectorized (same np.repeat/np.tile shape as dedup.band_kernel):
-        # codes per table via one matmul; multi-probe = XOR broadcast over the
-        # plane-bit axis — no per-row Python loop anywhere in the ANN path
-        xor_bits = 1 << np.arange(n_planes, dtype=np.int64)  # (planes,)
-        for pdf in batches:
-            if not len(pdf):  # np.stack([]) raises on empty Arrow batches
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            ids_arr = pdf[id_col].to_numpy()
-            id_parts, bucket_parts = [], []
-            for t in range(n_tables):
-                bits = (mat @ planes[t].T) > 0  # (n, planes)
-                codes = (bits * xor_bits).sum(axis=1).astype(np.int64)  # (n,)
-                base = np.int64(t << n_planes)
-                if multi_probe:
-                    # (n, 1+planes): exact code + all hamming-1 neighbors
-                    probes = np.concatenate(
-                        [codes[:, None], codes[:, None] ^ xor_bits[None, :]], axis=1
-                    )
-                    id_parts.append(np.repeat(ids_arr, 1 + n_planes))
-                    bucket_parts.append((base | probes).reshape(-1))
-                else:
-                    id_parts.append(ids_arr)
-                    bucket_parts.append(base | codes)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.concatenate(id_parts),
-                    "bucket": np.concatenate(bucket_parts),
-                }
-            )
+    return _per_vector(
+        spread_partitions(vectors.select(id_col, vec_col), id_col),
+        id_col, vec_col, dim, "array<long>", buckets,
+    ).select("vec_id", F.explode("out").alias("bucket"))
 
-    return spread_partitions(vectors.select(id_col, vec_col), id_col).mapInPandas(
-        kernel, schema="vec_id long, bucket long"
-    )
+
+def xor_probes(bucket: str, num_planes: int):
+    """Explode ``bucket`` into itself plus its ``num_planes`` XOR-1
+    neighbor codes (multi-probe LSH). Table bits sit above the code bits,
+    so every probe stays in its own table; probes(x) ∩ buckets(y) ≠ ∅ ⇔
+    the codes of x and y differ in at most one bit in some table."""
+    b = F.col(bucket)
+    return F.explode(
+        F.array(b, *[b.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)])
+    ).alias(bucket)
 
 
 def lsh_topk(
@@ -160,8 +170,8 @@ def lsh_topk(
     raise recall multiplicatively (1-(1-p)^L); more planes shrink buckets.
     """
     planes = hyperplanes(dim, num_planes, num_tables, seed)
-    qb = lsh_bucket_ids(queries, planes, id_col, vec_col, multi_probe=True).withColumnRenamed(
-        "vec_id", "query_id"
+    qb = lsh_bucket_ids(queries, planes, id_col, vec_col).select(
+        F.col("vec_id").alias("query_id"), xor_probes("bucket", num_planes)
     )
     cb = lsh_bucket_ids(corpus, planes, id_col, vec_col).withColumnRenamed(
         "vec_id", "neighbor_id"
@@ -182,13 +192,15 @@ def ivf_assignments(
 ) -> DataFrame:
     """(vec_id, cell) rows: nearest-``nprobe`` coarse cells per vector.
 
-    Centroids ship to executors inside the Arrow-batch kernel closure (the
-    IVF coarse quantizer is small by design — even 2^18 cells × 64 dims is
+    Centroids ship to executors inside the column UDF's closure, which
+    returns each vector's cells as an array the JVM explodes (the IVF
+    coarse quantizer is small by design — even 2^18 cells × 64 dims is
     ~128 MB, driver-holdable; it is trained on a sample, never the corpus).
 
     ``with_sim=True`` (nprobe=1 only) adds ``centroid_sim`` — the cosine
     to the assigned centroid, the ranking signal SemDeDup survivorship
-    needs. The value is NOT taken from the ``mat @ cnorm.T`` argmax product
+    needs; the UDF then returns a ``struct<cell, centroid_sim>`` per vector.
+    The value is NOT taken from the ``mat @ cnorm.T`` argmax product
     (BLAS blocks matmul by matrix height, so those floats drift in the last
     ulp across Arrow batch sizes — measured, not hypothetical); instead the
     assigned centroid row is gathered and the dot recomputed as a per-row
@@ -198,35 +210,21 @@ def ivf_assignments(
     """
     if with_sim and nprobe != 1:
         raise ValueError("with_sim requires nprobe=1 (one assigned cell)")
+    cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    spread = spread_partitions(vectors.select(id_col, vec_col), id_col)
+    dim = centroids.shape[1]
+    if with_sim:
+        def with_sims(mat: np.ndarray) -> pd.DataFrame:
+            cells, sims = assign_cells(mat, cnorm, 1, with_sim=True)
+            return pd.DataFrame({"cell": cells[:, 0].astype(np.int64), "centroid_sim": sims})
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-        for pdf in batches:
-            if not len(pdf):  # np.stack([]) raises on empty Arrow batches
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if with_sim:
-                cells, sims = assign_cells(mat, cnorm, 1, with_sim=True)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf[id_col].to_numpy(),
-                        "cell": cells[:, 0].astype(np.int64),
-                        "centroid_sim": sims,
-                    }
-                )
-                continue
-            cells = assign_cells(mat, cnorm, nprobe)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf[id_col].to_numpy(), cells.shape[1]),
-                    "cell": cells.reshape(-1).astype(np.int64),
-                }
-            )
-
-    schema = "vec_id long, cell long" + (", centroid_sim double" if with_sim else "")
-    return spread_partitions(vectors.select(id_col, vec_col), id_col).mapInPandas(
-        kernel, schema=schema
-    )
+        return _per_vector(
+            spread, id_col, vec_col, dim, "struct<cell:long,centroid_sim:double>", with_sims
+        ).select("vec_id", "out.cell", "out.centroid_sim")
+    return _per_vector(
+        spread, id_col, vec_col, dim, "array<long>",
+        lambda mat: list(assign_cells(mat, cnorm, nprobe).astype(np.int64)),
+    ).select("vec_id", F.explode("out").alias("cell"))
 
 
 def assign_cells(
@@ -521,9 +519,9 @@ def pq_index(
     """Encode vectors against a TRAINED quantizer into the persistable PQ
     index relation ``(vec_id, cell, codes)`` — one cheap spread
     repartition (``spread_partitions`` exchanges when the input has fewer
-    splits than the session shuffle width) followed by one narrow Arrow
-    pass. ``codes`` is a packed long when the bit budget fits
-    (``_code_bits``), else ``array<int>``.
+    splits than the session shuffle width) followed by one column UDF that
+    returns ``struct<cell, codes>`` per vector. ``codes`` is a packed long
+    when the bit budget fits (``_code_bits``), else ``array<int>``.
 
     This is the append side of the train-once/add-forever index
     lifecycle: train the quantizer ON THE FIRST increment's bounded
@@ -542,28 +540,20 @@ def pq_index(
     m_sub, ksub, _ = codebooks.shape
     bpc, packed = _code_bits(ksub, m_sub)
     cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    shifts = np.int64(1) << (bpc * np.arange(m_sub, dtype=np.int64))
 
-    def encode_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shifts = np.int64(1) << (bpc * np.arange(m_sub, dtype=np.int64))
-        for pdf in batches:
-            if not len(pdf):  # np.stack([]) raises on empty Arrow batches
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cells, codes = pq_encode(mat, cnorm, codebooks)
-            out = {
-                "vec_id": pdf[id_col].to_numpy(),
-                "cell": cells.astype(np.int64),
-            }
-            if packed:
-                out["codes"] = (codes.astype(np.int64) * shifts).sum(axis=1)
-            else:
-                out["codes"] = list(codes)
-            yield pd.DataFrame(out)
+    def encode(mat: np.ndarray) -> pd.DataFrame:
+        cells, codes = pq_encode(mat, cnorm, codebooks)
+        return pd.DataFrame({
+            "cell": cells.astype(np.int64),
+            "codes": (codes.astype(np.int64) * shifts).sum(axis=1) if packed else list(codes),
+        })
 
-    return spread_partitions(vectors.select(id_col, vec_col), id_col).mapInPandas(
-        encode_kernel,
-        schema=f"vec_id long, cell long, codes {'long' if packed else 'array<int>'}",
-    ).withMetadata(
+    return _per_vector(
+        spread_partitions(vectors.select(id_col, vec_col), id_col),
+        id_col, vec_col, centroids.shape[1],
+        f"struct<cell:long,codes:{'long' if packed else 'array<int>'}>", encode,
+    ).select("vec_id", "out.cell", "out.codes").withMetadata(
         # quantizer identity rides the schema, not the rows: survives
         # parquet round-trips (SnapshotTable commits), unions of
         # increments, and projections — zero bytes per row
@@ -621,26 +611,25 @@ def ivf_pq_search(
             )
     cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
-    def query_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cells, cell_dots, luts = pq_query_tables(mat, cnorm, codebooks, nprobe)
-            n, np_ = cells.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf[id_col].to_numpy(), np_),
-                    "cell": cells.reshape(-1).astype(np.int64),
-                    "cell_dot": cell_dots.reshape(-1),
-                    "lut": list(np.repeat(luts, np_, axis=0)),
-                }
-            )
+    def query_tables(mat: np.ndarray) -> pd.DataFrame:
+        cells, cell_dots, luts = pq_query_tables(mat, cnorm, codebooks, nprobe)
+        return pd.DataFrame(
+            {"cells": list(cells.astype(np.int64)), "cell_dots": list(cell_dots), "lut": list(luts)}
+        )
 
     cb = index.select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
-    qb = queries.select(id_col, vec_col).mapInPandas(
-        query_kernel,
-        schema="query_id long, cell long, cell_dot double, lut array<double>",
+    # one struct per query; the JVM fans it out to one row per probed cell,
+    # each carrying the query's LUT
+    qb = _per_vector(
+        queries.select(id_col, vec_col), id_col, vec_col, centroids.shape[1],
+        "struct<cells:array<long>,cell_dots:array<double>,lut:array<double>>",
+        query_tables,
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.inline(F.arrays_zip(
+            F.col("out.cells").alias("cell"), F.col("out.cell_dots").alias("cell_dot")
+        )),
+        F.col("out.lut").alias("lut"),
     )
     # ADC score per candidate, JVM-side: left-associated sum over the m_sub
     # code lookups in subspace order — the SAME addition order on both the
@@ -760,22 +749,9 @@ def embedding_near_dups(
     base = lsh_bucket_ids(vectors, planes, id_col, vec_col)
     # ONE-sided multi-probe: probing both sides of the self-join would
     # multiply candidate fan-out by (1+num_planes)² per table — 81× at the
-    # default 8 planes — for marginal hamming-2 recall (the lsh_bucket_ids
-    # docstring itself scopes multi-probe as query-side). Probe-vs-base
-    # already covers every bucket pair within hamming 1 symmetrically
-    # (probes(x)∩base(y) ≠ ∅ ⇔ hamming(code x, code y) ≤ 1). The probe
-    # expansion is derived JVM-side from the base relation (XOR of each
-    # code bit; table bits sit above the code, so they are preserved) —
-    # no second kernel pass over the vectors.
-    probed = base.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)],
-            )
-        ).alias("bucket"),
-    )
+    # default 8 planes — for marginal hamming-2 recall. Probe-vs-base
+    # already covers every bucket pair within hamming 1 symmetrically.
+    probed = base.select("vec_id", xor_probes("bucket", num_planes))
     cand = (
         probed.alias("a")
         .join(

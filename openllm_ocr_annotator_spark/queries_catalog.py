@@ -2719,7 +2719,7 @@ def q_doc_json_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Media rows derived from the documents table by a rule both engines can
 # state; the (stubbed) decode is md5-arithmetic, so the ENTIRE media pipeline
-# — derivation → mapInPandas decode → geometry math — is value-checked by
+# — derivation → column-UDF decode → geometry math — is value-checked by
 # DuckDB, not merely row-counted. The extraction-derived media path (spans →
 # media refs) is pinned by tests/test_media_streaming.py.
 _MEDIA_SQL = """
@@ -2773,7 +2773,7 @@ def _derived_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal: media rows → mapInPandas decode → typed metadata.
+    """Multimodal: media rows → column-UDF decode → typed metadata.
     Decode is the disclosed deterministic stub (no PIL in container) chosen
     to be md5-expressible so the oracle value-checks the geometry; the
     feature vector stays in the library API (arrays are unhashable for the
@@ -2805,8 +2805,8 @@ def q_media_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes per document (synth.media_payload_row — real pixel data, real
     headers, real zlib streams for PNG, real Huffman-coded DCT data for
     JPEG), decode them with the dependency-free parsers in
-    kernel/imagecodec.py + kernel/jpegcodec.py inside the mapInPandas
-    kernel, and value-check the parsed geometry against the synthesis
+    kernel/imagecodec.py + kernel/jpegcodec.py inside the decode column
+    UDF, and value-check the parsed geometry against the synthesis
     rule restated in SQL. Every format branch is exercised (ids mod
     2/3/5/6 select PNG, JPEG, BMP, PPM, GIF, and PPM-stream)."""
     from .operators.media import extract_media_features

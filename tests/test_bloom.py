@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from openllm_ocr_annotator_spark.kernel import bloom as B
 from openllm_ocr_annotator_spark.operators.dedup import (
+    bloom_bitmap,
     bloom_incremental_dedup,
     contamination_score,
     decontaminate,
@@ -41,21 +42,6 @@ def test_set_probe_roundtrip_with_duplicates():
         B.set_bits(bm, np.array([-1]))
 
 
-def test_or_merge_assoc_commut():
-    a, b, c = B.empty_bitmap(32), B.empty_bitmap(32), B.empty_bitmap(32)
-    B.set_bits(a, np.array([0]))
-    B.set_bits(b, np.array([8, 15]))
-    B.set_bits(c, np.array([31]))
-    m1 = B.or_merge([a, b, c])
-    m2 = B.or_merge([B.or_merge([c, b]).tobytes(), a.tobytes()])
-    assert np.array_equal(m1, m2)
-    assert B.probe_rows(m1, np.array([[0, 8, 15, 31]])).tolist() == [True]
-    with pytest.raises(ValueError):
-        B.or_merge([])
-    with pytest.raises(ValueError):
-        B.or_merge([a, B.empty_bitmap(64)])
-
-
 def test_no_false_negatives_property():
     rng = np.random.default_rng(7)
     bm = B.empty_bitmap(256)  # deliberately undersized for 200 inserts
@@ -82,6 +68,29 @@ def _expected_new(docs):
     )
 
 
+@pytest.mark.parametrize("m_bits", [64, 40_000, 1 << 16])
+def test_jvm_bitmap_equals_sequential_set_bits(spark, m_bits):
+    """The JVM bitmap aggregate places its 4 KB chunks exactly where the
+    sequential build sets bits: one partial chunk (m=64), a partial last
+    chunk (m=40,000 → 5,000 bytes) and two full chunks (m=2^16). A NULL
+    text hashes to the seed and sets bits like any other row."""
+    k = 3
+    docs = _docs(spark).select("text").limit(500).unionByName(
+        spark.range(1).select(F.lit(None).cast("string").alias("text"))
+    ).repartition(3)
+    positions = F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.pmod(F.xxhash64(F.col("text"), i), F.lit(m_bits)),
+    )
+    want = B.empty_bitmap(m_bits)
+    B.set_bits(want, np.array([p for r in docs.select(positions.alias("p")).collect()
+                               for p in r.p], dtype=np.int64))
+    got = bloom_bitmap(docs, "text", m_bits, k)
+    assert got.tobytes() == want.tobytes()
+    assert 0 < np.unpackbits(got).sum() <= 501 * k
+    assert bloom_bitmap(docs.filter(F.lit(False)), "text", m_bits, k).tobytes() == bytes(m_bits // 8)
+
+
 def test_bloom_dedup_matches_anti_join(spark):
     docs = _docs(spark)
     history = docs.filter(F.col("doc_id") % 3 != 0)
@@ -100,7 +109,7 @@ def test_bloom_dedup_exact_under_forced_false_positives(spark):
     history = docs.filter(F.col("doc_id") % 3 != 0)
     got = sorted(
         r.doc_id
-        for r in bloom_incremental_dedup(docs, history, m_bits=64, k=2, merge_fanin=2)
+        for r in bloom_incremental_dedup(docs, history, m_bits=64, k=2)
         .select("doc_id")
         .collect()
     )

@@ -786,8 +786,8 @@ def test_decode_refusal_names_sniffed_format(monkeypatch):
 def test_strict_decode_refusal_through_spark(spark):
     """End-to-end: a strict decode of a PIL-only format in a PIL-less
     session fails AT THE EXECUTOR with the format name in the error — the
-    production refusal contract, exercised through the real mapInPandas
-    kernel, not just the pure function."""
+    production refusal contract, exercised through the real decode
+    column UDF, not just the pure function."""
     from openllm_ocr_annotator_spark.operators.media import (
         HAS_PIL,
         extract_media_features,

@@ -108,10 +108,15 @@ def test_variant_rows_plant_cross_container_dups():
 
 def test_phash_dedup_matches_exhaustive_replay(spark):
     payloads = synthesize_media_variants(spark, SF_DIR)
-    got = {
-        r.media_ref: r
-        for r in phash_dedup(perceptual_hash(payloads)).collect()
-    }
+    caches = []
+    try:
+        got = {
+            r.media_ref: r
+            for r in phash_dedup(perceptual_hash(payloads), caches=caches).collect()
+        }
+    finally:
+        for c in caches:
+            c.unpersist()
 
     # pure-Python replay, all-pairs (no banding, no caps)
     hashes = {}
@@ -154,7 +159,12 @@ def test_phash_bucket_cap_drops_viral_buckets(spark):
     other = C.encode_png(12, 9, lambda x, y: (x * 5 % 256, y * 9 % 256, 7))
     rows.append(("50", "media://cap/solo.png", bytearray(other)))
     df = spark.createDataFrame(rows, "doc_id string, media_ref string, payload binary")
-    out = phash_dedup(perceptual_hash(df), max_bucket_size=10).collect()
+    caches = []
+    try:
+        out = phash_dedup(perceptual_hash(df), max_bucket_size=10, caches=caches).collect()
+    finally:
+        for c in caches:
+            c.unpersist()
     assert all(r.n_near == 0 for r in out)
     exact = {r.media_ref: r.n_exact for r in out}
     assert exact["media://cap/solo.png"] == 0

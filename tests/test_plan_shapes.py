@@ -111,13 +111,13 @@ def test_topk_uses_broadcast_and_group_limit(spark):
 def test_ivf_pq_adc_scoring_is_jvm_side(spark):
     plan = _plan(qc.QUERIES["similarity_ivf_pq_topk"](spark, SF_DIR))
     # exactly two Python stages — the corpus encode and the query LUT
-    # kernels; the per-candidate ADC fold must compile to JVM expressions
+    # column UDFs; the per-candidate ADC fold must compile to JVM expressions
     # (transform/element_at/aggregate), never a third Python pass.
     # (formatted explain prints each node twice: tree + detail section —
     # count the uniquely-numbered detail headers)
     import re
 
-    nodes = re.findall(r"\(\d+\) MapInPandas", plan)
+    nodes = re.findall(r"\(\d+\) ArrowEvalPython", plan)
     assert len(nodes) == 2, nodes
     assert "WindowGroupLimit" in plan, "ADC cut and top-k must group-limit"
 
@@ -397,14 +397,83 @@ def test_one_column_kernels_output_schema(spark, name):
 
 
 def test_media_payload_decode_is_shuffle_free(spark):
-    """synthesize payload bytes → real decode: two chained mapInPandas
-    kernels, NO exchange — media bytes must never cross a shuffle."""
+    """synthesize payload bytes (mapInPandas) → real decode (a column UDF
+    over media_ref, kind and payload): NO exchange — decode must never
+    move media bytes across a shuffle."""
     from openllm_ocr_annotator_spark.operators.media import extract_media_features
     from openllm_ocr_annotator_spark.synth import synthesize_media_payloads
 
     payloads = synthesize_media_payloads(spark, SF_DIR)
     plan = _plan(extract_media_features(payloads, strict=True))
     assert "Exchange" not in plan, "media payload bytes crossed a shuffle"
+
+
+def test_phash_payload_shuffles_only_from_a_narrow_input(spark):
+    """perceptual_hash spreads a narrow input before the decode: from one
+    split, the (doc_id, media_ref, payload) rows cross exactly one hash
+    exchange on media_ref; an input that already has
+    spark.sql.shuffle.partitions splits hashes in place, with none."""
+    import re
+
+    from openllm_ocr_annotator_spark.kernel import imagecodec as C
+    from openllm_ocr_annotator_spark.operators.media import perceptual_hash
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def media(splits):
+        return spark.range(0, 2 * n, 1, splits).select(
+            F.col("id").cast("string").alias("doc_id"),
+            F.format_string("media://p/%d.png", "id").alias("media_ref"),
+            F.when(F.col("id") % 2 == 0, F.lit(bytearray(C.encode_png(8, 8))))
+            .otherwise(F.lit(bytearray(C.encode_bmp(8, 8)))).alias("payload"),
+        )
+
+    narrow = _plan(perceptual_hash(media(1)))
+    assert _n_exchanges(narrow) == 1
+    exchange = re.search(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)", narrow, flags=re.M)
+    assert exchange.group(1).startswith("hashpartitioning(media_ref#")
+    assert "payload#" in exchange.group(0)
+    assert _n_exchanges(_plan(perceptual_hash(media(n)))) == 0
+
+
+# (exchanges, Python nodes) summed over each query's plan and the plans it
+# collects while being built (quantizer training samples, the Bloom
+# build). The exchanges are those the mapInPandas / applyInPandas versions
+# planned; the Bloom probe UDF runs in both legs of its union.
+_FORMER_PANDAS_MAP_PLANS = {
+    "similarity_lsh_topk": (4, 2),
+    "similarity_ivf_topk": (4, 2),
+    "similarity_ivf_pq_topk": (2, 2),
+    "embedding_near_dups": (3, 2),
+    "semantic_dedup": (8, 2),
+    "media_features": (0, 1),
+    "dedup_bloom_incremental": (2, 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FORMER_PANDAS_MAP_PLANS))
+def test_no_pandas_map_or_grouped_stage(spark, monkeypatch, name):
+    """The vector kernels and media decode cross into Python only through
+    column UDFs, and the Bloom build not at all: no MapInPandas or
+    FlatMapGroupsInPandas node in the query's plan or in any plan it
+    collects while being built, each kernel evaluated once, and no
+    exchange beyond those of the mapInPandas versions."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    collect = DataFrame.collect
+
+    def recording_collect(self):
+        plans.append(_plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording_collect)
+    spark.catalog.clearCache()
+    plans.append(_plan(qc.QUERIES[name](spark, SF_DIR)))
+    for plan in plans:
+        assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan
+    got = (sum(map(_n_exchanges, plans)), sum(map(_n_python, plans)))
+    assert got == _FORMER_PANDAS_MAP_PLANS[name]
 
 
 def test_pack_sequences_single_exchange(spark):
@@ -529,9 +598,10 @@ def test_contamination_score_shape(spark):
 
 def test_bloom_dedup_probe_and_verify_shape(spark):
     """Probe = broadcast bitmap + Arrow-batched UDF (no join for
-    Bloom-negatives); verify = anti-join over candidates only. The build's
-    driver traffic is bounded by the fan-in merge, not the partition
-    count (asserted in test_bloom.py by running with merge_fanin=2)."""
+    Bloom-negatives); verify = anti-join over candidates only. The build
+    runs before this plan exists: a JVM bitmap aggregate whose driver
+    traffic is at most m/8 bytes (pinned in test_bloom.py and by
+    test_no_pandas_map_or_grouped_stage)."""
     plan = _plan(qc.QUERIES["dedup_bloom_incremental"](spark, SF_DIR))
     assert "LeftAnti" in plan
     assert "ArrowEvalPython" in plan or "PythonUDF" in plan

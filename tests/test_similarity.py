@@ -39,6 +39,38 @@ def test_brute_force_matches_numpy(spark, emb):
             assert abs(c_got - c_want) < 1e-5
 
 
+def test_lsh_xor_probes_equal_kernel_replay(spark, emb):
+    """The JVM multi-probe expansion (``xor_probes`` over exploded
+    buckets) emits exactly the (vec_id, bucket) set the Python kernel
+    used to emit: per table, the exact sign-bit code plus its XOR-1
+    neighbors, replayed here in numpy."""
+    from openllm_ocr_annotator_spark.operators.similarity import (
+        hyperplanes,
+        lsh_bucket_ids,
+        xor_probes,
+    )
+
+    num_planes, num_tables = 6, 4
+    planes = hyperplanes(64, num_planes, num_tables)
+    vecs = emb.filter("vec_id < 300")
+    got = {
+        (r.vec_id, r.bucket)
+        for r in lsh_bucket_ids(vecs, planes)
+        .select("vec_id", xor_probes("bucket", num_planes)).collect()
+    }
+    rows = vecs.collect()
+    ids = [r.vec_id for r in rows]
+    mat = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
+    xor_bits = 1 << np.arange(num_planes, dtype=np.int64)
+    want = set()
+    for t in range(num_tables):
+        codes = (((mat @ planes[t].T) > 0) * xor_bits).sum(axis=1).astype(np.int64)
+        probes = np.concatenate([codes[:, None], codes[:, None] ^ xor_bits[None, :]], axis=1)
+        want |= {(i, int((t << num_planes) | p)) for i, row in zip(ids, probes) for p in row}
+    assert got == want
+    assert len(got) == len(rows) * num_tables * (1 + num_planes)
+
+
 def test_lsh_topk_recall(spark, emb):
     k = 5
     exact = brute_force_topk(emb.filter("vec_id < 50"), emb, k=k).collect()
