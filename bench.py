@@ -15,8 +15,8 @@ metric) over a MATERIALIZED north-rule span table: the synthesizer writes
 the amplified corpus to parquet once (cached across runs), and the timed
 job is scan → mapInArrow kernel over the scan partitioning → lineage agg
 — the same plan a production run over an Iceberg documents table
-executes. The salted-repartition variant is timed as its own row
-(``extract_salted``).
+executes. The variant that hash-repartitions on doc_id first is timed as
+its own row (``extract_salted``, a name kept for comparable history).
 
 Scaling evidence (N vs 4N cores) is produced by scripts/scaling_bench.py,
 which reuses ``prepare_input`` / ``run_extract_bench`` at two parallelism

@@ -85,12 +85,12 @@ def _currency_code_sql(v: str) -> str:
     )
 
 
-def currency_sql(gt: str = "__GT__", pred: str = "__PRED__", tol: str = "__TOL__") -> str:
-    g_amt, p_amt = _amount_sql(gt), _amount_sql(pred)
-    g_cur, p_cur = _currency_code_sql(gt), _currency_code_sql(pred)
+def currency_sql() -> str:
+    g_amt, p_amt = _amount_sql("__GT__"), _amount_sql("__PRED__")
+    g_cur, p_cur = _currency_code_sql("__GT__"), _currency_code_sql("__PRED__")
     return (
         f"(case when ({g_cur}) <> '' and ({p_cur}) <> '' and ({g_cur}) <> ({p_cur}) "
-        f"then false else abs(({g_amt}) - ({p_amt})) <= {tol} end)"
+        f"then false else abs(({g_amt}) - ({p_amt})) <= __TOL__ end)"
     )
 
 
@@ -150,8 +150,8 @@ def date_match(gt: Column, pred: Column) -> Column:
     return result
 
 
-def currency_match(gt: Column, pred: Column, tolerance: float = 0.01) -> Column:
-    return F.expr(render(CURRENCY_SQL, _c(gt), _c(pred), tolerance))
+def currency_match(gt: Column, pred: Column) -> Column:
+    return F.expr(render(CURRENCY_SQL, _c(gt), _c(pred), 0.01))
 
 
 def date_match_duckdb_sql(gt: str, pred: str) -> str:
@@ -181,7 +181,6 @@ def dispatch_match(
     pred: Column,
     registry: dict[str, str] | None = None,
     numeric_tolerance: float = 0.0,
-    currency_tolerance: float = 0.01,
 ) -> Column:
     """F6 (reference: evaluators/base.py:31-40, apps/evaluate.py:63-66):
     per-field matcher dispatch, default exact."""
@@ -191,7 +190,7 @@ def dispatch_match(
         "ci": lambda: ci_match(gt, pred),
         "date": lambda: date_match(gt, pred),
         "numeric": lambda: numeric_match(gt, pred, numeric_tolerance),
-        "currency": lambda: currency_match(gt, pred, currency_tolerance),
+        "currency": lambda: currency_match(gt, pred),
     }
     result = builders["exact"]()
     for fname, matcher in sorted(registry.items(), reverse=True):

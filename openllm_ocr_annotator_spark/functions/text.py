@@ -95,23 +95,15 @@ def quality_score(text: Column) -> Column:
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_gates(
-    text: Column,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_ratio: float = 0.8,
-    min_distinct_stopwords: int = 2,
-    max_repetition: float = 0.2,
-) -> dict[str, Column]:
+def gopher_gates(text: Column) -> dict[str, Column]:
     """The Gopher quality rule set (Rae et al. 2021, Appendix A.1.1) as
     named boolean gate columns + the conjunctive ``keep``.
 
     The subset applicable to a line-less corpus: word count in
-    [min_words, max_words]; mean word length in [3, 10]; hash/ellipsis
+    [50, 100,000]; mean word length in [3, 10]; hash/ellipsis
     symbol-to-word ratio ≤ 0.1; ≥ 80% of words contain an alphabetic
     character; ≥ 2 distinct stopwords from the paper's 8-word list;
-    duplicated-3-gram fraction ≤ ``max_repetition`` (the repetition gate
+    duplicated-3-gram fraction ≤ 0.2 (the repetition gate
     family, collapsed to the engine's ``repetition_score``). Every gate is
     a JVM array/regexp expression — one codegen'd projection, no Python.
     """
@@ -129,17 +121,17 @@ def gopher_gates(
     # elimination does not reliably merge duplicated higher-order trees
     mwl = mean_word_len(text)
     gates = {
-        "g_word_count": (n >= min_words) & (n <= max_words),
+        "g_word_count": (n >= 50) & (n <= 100_000),
         "g_mean_word_len": (mwl >= 3.0) & (mwl <= 10.0),
         "g_symbol_ratio": F.when(
-            n > 0, symbols.cast("double") / n.cast("double") <= max_symbol_ratio
+            n > 0, symbols.cast("double") / n.cast("double") <= 0.1
         ).otherwise(F.lit(False)),
         "g_alpha_words": F.when(
             n > 0,
-            alpha_words.cast("double") / n.cast("double") >= min_alpha_word_ratio,
+            alpha_words.cast("double") / n.cast("double") >= 0.8,
         ).otherwise(F.lit(False)),
-        "g_stopwords": distinct_stop >= min_distinct_stopwords,
-        "g_repetition": repetition_score(text, 3) <= max_repetition,
+        "g_stopwords": distinct_stop >= 2,
+        "g_repetition": repetition_score(text, 3) <= 0.2,
     }
     keep = F.lit(True)
     for g in gates.values():

@@ -54,7 +54,7 @@ def score_text(
 def train_logreg(
     texts: list[str], labels: list[int],
     n_features: int = 1 << 18,
-    lr: float = 0.5, steps: int = 200, l2: float = 1e-4,
+    steps: int = 200,
 ) -> tuple[np.ndarray, float]:
     """Full-batch GD logistic regression; zero init → deterministic."""
     feats = [hashed_features(t, n_features) for t in texts]
@@ -72,6 +72,6 @@ def train_logreg(
         gw = np.zeros_like(w)
         for gi, (idx, vals) in zip(g, feats):
             gw[idx] += gi * vals
-        w -= lr * (gw + l2 * w)
-        b -= lr * float(g.sum())
+        w -= 0.5 * (gw + 1e-4 * w)
+        b -= 0.5 * float(g.sum())
     return w, b

@@ -175,8 +175,8 @@ def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(sig_a == sig_b))
 
 
-def exact_jaccard(text_a: str, text_b: str, n: int = 3) -> float:
-    sa, sb = set(shingle_hashes(text_a, n)), set(shingle_hashes(text_b, n))
+def exact_jaccard(text_a: str, text_b: str) -> float:
+    sa, sb = set(shingle_hashes(text_a, 3)), set(shingle_hashes(text_b, 3))
     if not sa and not sb:
         return 1.0
     return len(sa & sb) / len(sa | sb)
@@ -235,4 +235,5 @@ def simhash64_batch(texts: list[str]) -> np.ndarray:
 
 
 def hamming64(a: int, b: int) -> int:
+    """Hamming distance between two unsigned 64-bit hashes (SimHash, dHash)."""
     return bin(int(a) ^ int(b)).count("1")

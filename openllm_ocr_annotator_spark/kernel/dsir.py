@@ -55,20 +55,18 @@ def ngram_bucket_counts(
     return uniq, counts.astype(np.int64)
 
 
-def train_ngram_dist(
-    texts: list[str], n_buckets: int = 1 << 14, alpha: float = 1.0
-) -> np.ndarray:
-    """Laplace-smoothed log-probability vector over hash buckets.
+def train_ngram_dist(texts: list[str], n_buckets: int = 1 << 14) -> np.ndarray:
+    """Laplace-smoothed (add-one) log-probability vector over hash buckets.
 
-    Counts accumulate in int64 (exact), so log((c_b + α)/(total + α·B)) is
+    Counts accumulate in int64 (exact), so log((c_b + 1)/(total + B)) is
     a deterministic elementwise transform — the same vector everywhere.
     """
     total = np.zeros(n_buckets, dtype=np.int64)
     for t in texts:
         idx, counts = ngram_bucket_counts(t, n_buckets)
         total[idx] += counts
-    denom = float(int(total.sum())) + alpha * n_buckets
-    return np.log((total.astype(np.float64) + alpha) / denom)
+    denom = float(int(total.sum())) + n_buckets
+    return np.log((total.astype(np.float64) + 1.0) / denom)
 
 
 def log_importance(text: str, diff: np.ndarray) -> float:

@@ -45,17 +45,17 @@ def pattern_rgb(x: int, y: int) -> tuple[int, int, int]:
     )
 
 
-def encode_bmp(width: int, height: int, pixel=pattern_rgb) -> bytes:
+def encode_bmp(width: int, height: int) -> bytes:
     """24-bit uncompressed BMP. Faithful to the spec: samples stored
     B,G,R, rows bottom-up — a standard decoder recovers RGB pixel
-    (x, y) = ``pixel(x, y)``, the SAME image ``encode_png(w, h)``
+    (x, y) = ``pattern_rgb(x, y)``, the SAME image ``encode_png(w, h)``
     produces."""
     row = width * 3
     pad = (4 - row % 4) % 4
     pixels = bytearray()
     for y in range(height - 1, -1, -1):  # bottom-up row order per spec
         for x in range(width):
-            r, g, b = pixel(x, y)
+            r, g, b = pattern_rgb(x, y)
             pixels += bytes((b, g, r))
         pixels += b"\x00" * pad
     data_offset = 14 + 40
@@ -85,13 +85,13 @@ def decode_bmp(payload: bytes) -> tuple[int, int, int]:
 # --------------------------------------------------------------------------
 
 
-def encode_ppm(width: int, height: int, pixel=pattern_rgb) -> bytes:
+def encode_ppm(width: int, height: int) -> bytes:
     """Binary P6 with the shared deterministic pixel texture."""
     header = f"P6\n{width} {height}\n255\n".encode()
     pixels = bytearray()
     for y in range(height):
         for x in range(width):
-            pixels += bytes(pixel(x, y))
+            pixels += bytes(pattern_rgb(x, y))
     return header + bytes(pixels)
 
 

@@ -13,7 +13,7 @@ and segment lines into reading-order regions:
 
 - sort lines by (y0, x0) — top-to-bottom, left-to-right;
 - start a new region when the vertical gap to the previous region's bottom
-  exceeds ``gap_factor`` × median line height (paragraph break);
+  exceeds ``GAP_FACTOR`` × median line height (paragraph break);
 - a region's text is its lines joined by a single space.
 
 Deterministic: pure arithmetic on the parsed coordinates, stable sort.
@@ -53,7 +53,7 @@ def parse_layout_lines(payload: str) -> list[tuple[float, float, float, float, s
     return lines
 
 
-def segment_layout(payload: str, gap_factor: float = GAP_FACTOR) -> list[str]:
+def segment_layout(payload: str) -> list[str]:
     """Payload → ordered list of region texts (reading order)."""
     lines = parse_layout_lines(payload)
     if not lines:
@@ -66,7 +66,7 @@ def segment_layout(payload: str, gap_factor: float = GAP_FACTOR) -> list[str]:
     cur: list[str] = []
     bottom: float | None = None
     for x0, y0, x1, y1, text in lines:
-        if bottom is not None and (y0 - bottom) > gap_factor * med_h:
+        if bottom is not None and (y0 - bottom) > GAP_FACTOR * med_h:
             regions.append(cur)
             cur = []
             bottom = None

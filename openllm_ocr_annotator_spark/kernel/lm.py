@@ -66,7 +66,7 @@ def train_bigram_lm(texts: list[str]) -> BigramLM:
     return BigramLM(dict(uni), dict(bi), dict(bos_bi), total, n_starts)
 
 
-def doc_logprob(text: str, lm: BigramLM, alpha: float = ALPHA) -> tuple[float, int]:
+def doc_logprob(text: str, lm: BigramLM) -> tuple[float, int]:
     """(Σ log P(w|prev), token count) under stupid backoff."""
     words = [w for w in (text or "").lower().split() if w]
     if not words or lm.total <= 0:
@@ -85,14 +85,14 @@ def doc_logprob(text: str, lm: BigramLM, alpha: float = ALPHA) -> tuple[float, i
             p = c_bi / c_prev
         else:
             c_uni = lm.uni.get(w, 0)
-            p = alpha * (c_uni / lm.total if c_uni else floor)
+            p = ALPHA * (c_uni / lm.total if c_uni else floor)
         lp += math.log(p)
         prev = w
     return lp, len(words)
 
 
-def perplexity(text: str, lm: BigramLM, alpha: float = ALPHA) -> float:
-    lp, n = doc_logprob(text, lm, alpha)
+def perplexity(text: str, lm: BigramLM) -> float:
+    lp, n = doc_logprob(text, lm)
     if n == 0:
         return float("inf")
     return math.exp(-lp / n)
@@ -161,9 +161,7 @@ def train_ngram_lm(texts: list[str], order: int = 5) -> NgramLM:
     return NgramLM(order, {k: dict(v) for k, v in grams.items()}, total)
 
 
-def ngram_doc_logprob(
-    text: str, lm: NgramLM, alpha: float = ALPHA
-) -> tuple[float, int]:
+def ngram_doc_logprob(text: str, lm: NgramLM) -> tuple[float, int]:
     """(Σ log S(w|context), token count) under stupid backoff: longest
     matching order first, α penalty per backoff step, α^k·unigram-MLE (or
     the 1/total OOV floor) at the bottom. SEQUENTIAL float fold — equal to
@@ -188,7 +186,7 @@ def ngram_doc_logprob(
                 if c_ctx:
                     p = penalty * (c_full / c_ctx)
                     break
-            penalty *= alpha
+            penalty *= ALPHA
         if p is None:
             c_uni = lm.grams[1].get((w,), 0)
             p = penalty * (c_uni / lm.total if c_uni else floor)
@@ -196,8 +194,8 @@ def ngram_doc_logprob(
     return lp, len(words)
 
 
-def ngram_perplexity(text: str, lm: NgramLM, alpha: float = ALPHA) -> float:
-    lp, n = ngram_doc_logprob(text, lm, alpha)
+def ngram_perplexity(text: str, lm: NgramLM) -> float:
+    lp, n = ngram_doc_logprob(text, lm)
     if n == 0:
         return float("inf")
     return math.exp(-lp / n)

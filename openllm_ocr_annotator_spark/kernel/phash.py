@@ -60,11 +60,6 @@ def to_unsigned64(h: int) -> int:
     return h + (1 << 64) if h < 0 else h
 
 
-def hamming64(a: int, b: int) -> int:
-    """Hamming distance between two unsigned 64-bit hashes."""
-    return bin(a ^ b).count("1")
-
-
 def bands16(h: int) -> list[int]:
     """Split an unsigned 64-bit hash into four 16-bit bands (MSB first).
 

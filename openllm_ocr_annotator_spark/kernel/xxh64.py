@@ -104,15 +104,15 @@ def hash_bytes(data: bytes, seed: int) -> int:
     return _fmix(h)
 
 
-def xxhash64_row(values: list, seed: int = 42) -> int:
-    """Spark ``xxhash64(col, ...)``: chain the running hash as the next
-    column's seed; skip nulls; return SIGNED int64 (Spark's output type).
+def xxhash64_row(values: list) -> int:
+    """Spark ``xxhash64(col, ...)``: start from Spark's seed 42, chain the
+    running hash as the next column's seed; skip nulls; return SIGNED int64 (Spark's output type).
 
     Supported column types (what the engine's checksums use): str (UTF-8
     bytes), int tagged by width via Python bools is ambiguous — pass ints
     as ``("int", v)`` / ``("long", v)`` tuples, or plain str.
     """
-    h = seed
+    h = 42
     for v in values:
         if v is None:
             continue

@@ -34,8 +34,6 @@ def train_classifier(
     docs: DataFrame,
     label_col,
     sample_docs: int = 200,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     steps: int = 200,
 ) -> tuple[np.ndarray, float]:
     """Bounded driver-side training on the first ``sample_docs`` docs by id.
@@ -49,9 +47,9 @@ def train_classifier(
     """
     rows = (
         docs.select(
-            F.col(text_col).alias("t"),
+            F.col("text").alias("t"),
             label_col.cast("int").alias("y"),
-            F.col(id_col).alias("k"),
+            F.col("doc_id").alias("k"),
         )
         .orderBy("k")
         .limit(sample_docs)
@@ -63,21 +61,13 @@ def train_classifier(
     )
 
 
-def train_from_heuristic(
-    docs: DataFrame,
-    quality_threshold: float = 0.75,
-    sample_docs: int = 200,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    steps: int = 200,
-) -> tuple[np.ndarray, float]:
+def train_from_heuristic(docs: DataFrame) -> tuple[np.ndarray, float]:
     """Heuristic-bootstrap convenience over ``train_classifier``."""
     from ..functions.text import quality_score
 
     return train_classifier(
         docs,
-        quality_score(F.col(text_col)) >= quality_threshold,
-        sample_docs, id_col, text_col, steps,
+        quality_score(F.col("text")) >= 0.75,
     )
 
 
@@ -85,13 +75,10 @@ def score_documents(
     docs: DataFrame,
     weights: np.ndarray,
     bias: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "model_quality",
 ) -> DataFrame:
-    """input columns (minus text) + ``out_col`` ∈ (0,1) per document."""
-    if out_col in docs.columns:
-        raise ValueError(f"score_documents: input already has {out_col!r}")
+    """input columns (minus text) + ``model_quality`` ∈ (0,1) per document."""
+    if "model_quality" in docs.columns:
+        raise ValueError("score_documents: input already has 'model_quality'")
     bc = docs.sparkSession.sparkContext.broadcast((weights, float(bias)))
     score = column_udf(
         "double",
@@ -99,7 +86,7 @@ def score_documents(
         lambda: bc.value,
     )
     return (
-        spread_partitions(docs, id_col)
-        .select("*", score(text_col).alias(out_col))
-        .drop(text_col)
+        spread_partitions(docs, "doc_id")
+        .select("*", score("text").alias("model_quality"))
+        .drop("text")
     )

@@ -42,12 +42,12 @@ from ..kernel import dedup as K
 from ._common import column_udf, spread_partitions
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup: md5 digest groupBy; canonical = min doc_id per digest."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("digest"))
         .groupBy("digest")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
@@ -72,12 +72,11 @@ def ngram_tokens(text_col, n: int = 3):
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.8, n: int = 3,
-    id_col: str = "doc_id", text_col: str = "text",
+    docs: DataFrame, threshold: float = 0.8,
     max_df: int | None = None,
     caches: list | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (inverted-index join, not cross).
+    """Exact word-3-gram Jaccard similar pairs (inverted-index join, not cross).
 
     Inverted index on shingles → equi-join on the gram → count common grams
     per pair → |A∩B| / (|A|+|B|−|A∩B|). Only pairs sharing ≥1 gram are ever
@@ -110,10 +109,10 @@ def ngram_jaccard_pairs(
     """
     from pyspark import StorageLevel
 
-    docs = spread_partitions(docs, id_col)
+    docs = spread_partitions(docs, "doc_id")
     grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ngram_tokens(F.col(text_col), n)).alias("g"),
+        "doc_id",
+        F.explode(ngram_tokens(F.col("text"), 3)).alias("g"),
     ).filter(F.col("g") != "")
     if max_df is not None:
         grams = grams.select("doc_id", F.xxhash64("g").alias("gh"))
@@ -209,23 +208,20 @@ def _split_viral_buckets(
     return ok, star
 
 
-def minhash_signatures(
-    docs: DataFrame, num_perm: int = 64, shingle_n: int = 3,
-    id_col: str = "doc_id", text_col: str = "text", seed: int = 42,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_perm: int = 64) -> DataFrame:
     """Narrow pass: text → MinHash signature (numpy kernel per Arrow batch)."""
-    a, b = K.perm_params(num_perm, seed)
+    a, b = K.perm_params(num_perm, 42)
     sign = column_udf(
         "array<long>",
         lambda texts, _: list(
             K.minhash_signatures_batch(
-                *K.shingle_hashes_batch(texts, shingle_n), a, b
+                *K.shingle_hashes_batch(texts, 3), a, b
             ).astype(np.int64)
         ),
     )
-    return spread_partitions(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        sign(text_col).alias("signature"),
+    return spread_partitions(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        sign("text").alias("signature"),
     )
 
 
@@ -298,8 +294,8 @@ def _banded_pair_estimates(
 
 def minhash_lsh_pairs(
     docs: DataFrame, num_perm: int = 64, num_bands: int = 16,
-    threshold: float = 0.7, shingle_n: int = 3,
-    max_bucket_size: int = 1000, seed: int = 42,
+    threshold: float = 0.7,
+    max_bucket_size: int = 1000,
     caches: list | None = None,
     stats: list | None = None,
 ) -> DataFrame:
@@ -318,7 +314,7 @@ def minhash_lsh_pairs(
     ``ngram_jaccard_pairs``. Long-lived drivers should always pass it;
     short-lived ones may rely on context teardown.
     """
-    sigs = minhash_signatures(docs, num_perm, shingle_n, seed=seed).cache()
+    sigs = minhash_signatures(docs, num_perm).cache()
     if caches is not None:
         caches.append(sigs)
 
@@ -335,19 +331,15 @@ def minhash_lsh_pairs(
 def minhash_lsh_incremental(
     new_docs: DataFrame,
     history_sigs: DataFrame,
-    num_perm: int = 64,
-    num_bands: int = 16,
     threshold: float = 0.7,
-    shingle_n: int = 3,
     max_bucket_size: int = 1000,
-    seed: int = 42,
     caches: list | None = None,
     stats: list | None = None,
 ) -> DataFrame:
     """Near-dup candidates of an INCOMING batch against committed history —
     the incremental-ingest twin of ``minhash_lsh_pairs`` (the near-dup
     analog of ``bloom_incremental_dedup``'s exact check): at 100 TB you
-    persist the signature relation (num_perm × 8 B per doc, ~0.1% of the
+    persist the signature relation (64 × 8 B per doc, ~0.1% of the
     text) at commit time and never re-tokenize history. Only the new
     batch runs the shingle→MinHash kernel; history enters as its stored
     ``(doc_id, signature)`` rows.
@@ -363,7 +355,7 @@ def minhash_lsh_incremental(
     Pass ``caches=[]`` for caller-owned release of the cached combined
     signature relation (same contract as ``minhash_lsh_pairs``).
     """
-    new_sigs = minhash_signatures(new_docs, num_perm, shingle_n, seed=seed)
+    new_sigs = minhash_signatures(new_docs)
     sigs = (
         new_sigs.select("doc_id", "signature", F.lit(True).alias("_new"))
         .unionByName(
@@ -376,7 +368,7 @@ def minhash_lsh_incremental(
     if caches is not None:
         caches.append(sigs)
 
-    bands = _band_rows(sigs, num_perm, num_bands)
+    bands = _band_rows(sigs, 64, 16)
     # same star escape hatch as the full-corpus run: the combined banding
     # relation sees identical buckets, so hubs match a one-shot run and
     # the incremental output stays exactly full-minus-history×history
@@ -393,8 +385,6 @@ def minhash_lsh_incremental(
 
 def simhash_pairs(
     docs: DataFrame, max_hamming: int = 3,
-    id_col: str = "doc_id", text_col: str = "text",
-    max_bucket_size: int = 1000,
     caches: list | None = None,
     stats: list | None = None,
 ) -> DataFrame:
@@ -402,8 +392,8 @@ def simhash_pairs(
 
     With (max_hamming+1) chunks, any pair within the distance budget shares
     at least one identical chunk — join on chunks, verify exact hamming.
-    ``max_bucket_size`` bounds pathological chunk buckets (mega-boilerplate
-    clusters → bucket² join rows): oversized buckets star-link through
+    Chunk buckets over 1,000 docs (mega-boilerplate clusters → bucket²
+    join rows) are pathological: oversized buckets star-link through
     their hub, same escape hatch as the MinHash path (``stats=[]`` for the
     drop accounting). Pass ``caches=[]`` to receive the cached hash
     relation for caller-owned ``unpersist()`` (same contract as
@@ -413,15 +403,15 @@ def simhash_pairs(
         # stored as signed int64 (two's complement view)
         "long", lambda texts, _: K.simhash64_batch(texts).view(np.int64)
     )
-    hashes = spread_partitions(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        simhash(text_col).alias("simhash"),
+    hashes = spread_partitions(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        simhash("text").alias("simhash"),
     ).cache()
     if caches is not None:
         caches.append(hashes)
 
     return chunk_band_pairs(
-        hashes, "doc_id", "simhash", max_hamming, max_bucket_size, stats
+        hashes, "doc_id", "simhash", max_hamming, 1000, stats
     ).select(
         F.col("key_a").alias("doc_a"),
         F.col("key_b").alias("doc_b"),
@@ -554,8 +544,6 @@ def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 def dedup_clusters(
     pairs: DataFrame,
     docs: DataFrame | None = None,
-    id_col: str = "doc_id",
-    pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
     max_iter: int = 30,
     metrics: dict | None = None,
 ) -> DataFrame:
@@ -597,8 +585,7 @@ def dedup_clusters(
     ``max_iter`` bounds the loop; log2(longest chain) ≤ 30 covers any
     physically possible component.
     """
-    a_col, b_col = pair_cols
-    und = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    und = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = (
         und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -642,7 +629,7 @@ def dedup_clusters(
     )
     if docs is not None:
         clustered = (
-            docs.select(F.col(id_col).alias("doc_id"))
+            docs.select("doc_id")
             .join(clustered, "doc_id", "left")
             .select(
                 "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
@@ -654,8 +641,6 @@ def dedup_clusters(
 def dedup_corpus(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 30,
     keep_by: str | None = None,
 ) -> DataFrame:
     """Full near-dup dedup pass: pairs → clusters → kept corpus rows.
@@ -682,15 +667,14 @@ def dedup_corpus(
     on doc id (broadcastable when near-dup rate is low, sort-merge
     otherwise — the planner's call).
     """
-    clusters = dedup_clusters(pairs, docs=docs, id_col=id_col, max_iter=max_iter)
-    keep = survivors(clusters, docs, id_col=id_col, keep_by=keep_by)
-    return docs.join(keep, id_col)
+    clusters = dedup_clusters(pairs, docs=docs)
+    keep = survivors(clusters, docs, keep_by=keep_by)
+    return docs.join(keep, "doc_id")
 
 
 def survivors(
     clusters: DataFrame,
     docs: DataFrame,
-    id_col: str = "doc_id",
     keep_by: str | None = None,
 ) -> DataFrame:
     """Keep list (id, cluster_id) for a resolved cluster assignment —
@@ -698,12 +682,8 @@ def survivors(
     (the expensive iterative part) can feed several survivorship policies.
     See ``dedup_corpus`` for the policy semantics."""
     if keep_by is None:
-        return clusters.filter(F.col("keep")).select(
-            F.col("doc_id").alias(id_col), "cluster_id"
-        )
-    scored = clusters.join(
-        docs.select(F.col(id_col).alias("doc_id"), keep_by), "doc_id"
-    )
+        return clusters.filter(F.col("keep")).select("doc_id", "cluster_id")
+    scored = clusters.join(docs.select("doc_id", keep_by), "doc_id")
     return (
         scored.groupBy("cluster_id")
         .agg(
@@ -715,14 +695,12 @@ def survivors(
                 )
             ).alias("best")
         )
-        .select(F.col("best.keep_id").alias(id_col), "cluster_id")
+        .select(F.col("best.keep_id").alias("doc_id"), "cluster_id")
     )
 
 
 def line_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     sep: str = "\n",
     min_line_chars: int = 1,
 ) -> DataFrame:
@@ -765,9 +743,9 @@ def line_dedup(
     # relation — breaking the one-row-per-input-document contract the
     # docstring promises (substring_dedup passes such docs through)
     lines = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\\Q" + sep + "\\E")
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\\Q" + sep + "\\E")
         ).alias("line_no", "line"),
     )
     partic = F.length(F.trim(F.col("line"))) >= min_line_chars
@@ -800,7 +778,7 @@ def line_dedup(
     return (
         totals.join(rebuilt, "doc_id", "left")
         .select(
-            F.col("doc_id").alias(id_col),
+            "doc_id",
             "n_lines",
             F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
             F.coalesce("text", F.lit("")).alias("text"),
@@ -808,12 +786,7 @@ def line_dedup(
     )
 
 
-def substring_dedup(
-    docs: DataFrame,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def substring_dedup(docs: DataFrame, k: int = 50) -> DataFrame:
     """Exact-substring dedup (the ExactSubstr pass of Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): any
     k-token run that already occurred earlier in the corpus is REMOVED
@@ -847,8 +820,8 @@ def substring_dedup(
       the original token array — one doc-keyed join, no second corpus
       explode.
     """
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    toks = docs.select(F.col(id_col).alias("doc_id"), w.alias("w")).withColumn(
+    w = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = docs.select("doc_id", w.alias("w")).withColumn(
         "n", F.size("w")
     )
     keyed = (
@@ -885,7 +858,7 @@ def substring_dedup(
     return (
         toks.join(cover, "doc_id", "left")
         .select(
-            F.col("doc_id").alias(id_col),
+            "doc_id",
             F.col("n").cast("long").alias("n_tokens"),
             F.coalesce(F.size("_cov"), F.lit(0)).cast("long").alias("n_removed"),
             F.concat_ws(
@@ -903,7 +876,6 @@ def substring_dedup(
 
 def decontaminate(
     train: DataFrame, benchmark: DataFrame, n: int = 5,
-    id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: drop training documents sharing ANY word
     n-gram with an evaluation/benchmark set — the standard n-gram overlap
@@ -916,20 +888,19 @@ def decontaminate(
     train rows (contaminated docs removed).
     """
     tg = train.select(
-        F.col(id_col).alias("_did"), F.explode(ngram_tokens(F.col(text_col), n)).alias("g")
+        F.col("doc_id").alias("_did"), F.explode(ngram_tokens(F.col("text"), n)).alias("g")
     ).filter(F.col("g") != "")
     bg = (
-        benchmark.select(F.explode(ngram_tokens(F.col(text_col), n)).alias("g"))
+        benchmark.select(F.explode(ngram_tokens(F.col("text"), n)).alias("g"))
         .filter(F.col("g") != "")
         .distinct()
     )
-    contaminated = tg.join(bg, "g", "left_semi").select(F.col("_did").alias(id_col)).distinct()
-    return train.join(contaminated, id_col, "left_anti")
+    contaminated = tg.join(bg, "g", "left_semi").select(F.col("_did").alias("doc_id")).distinct()
+    return train.join(contaminated, "doc_id", "left_anti")
 
 
 def contamination_score(
     train: DataFrame, benchmark: DataFrame, n: int = 5,
-    id_col: str = "doc_id", text_col: str = "text",
     caches: list | None = None,
 ) -> DataFrame:
     """Graded benchmark contamination: for each training document, the
@@ -963,32 +934,32 @@ def contamination_score(
     """
     from pyspark import StorageLevel
 
-    grams = ngram_tokens(F.col(text_col), n)
+    grams = ngram_tokens(F.col("text"), n)
     tg = train.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
             F.filter(grams, lambda g: g != ""), lambda g: F.xxhash64(g)
         ).alias("_gh"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     totals = tg.select(
-        id_col, F.size("_gh").cast("bigint").alias("total_grams")
+        "doc_id", F.size("_gh").cast("bigint").alias("total_grams")
     )
     bg = (
-        benchmark.select(F.explode(ngram_tokens(F.col(text_col), n)).alias("g"))
+        benchmark.select(F.explode(ngram_tokens(F.col("text"), n)).alias("g"))
         .filter(F.col("g") != "")
         .select(F.xxhash64("g").alias("gh"))
         .distinct()
     )
     hits = (
-        tg.select(F.col(id_col), F.explode("_gh").alias("gh"))
+        tg.select(F.col("doc_id"), F.explode("_gh").alias("gh"))
         .join(bg, "gh", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("hit_grams"))
     )
     if caches is not None:
         caches.append(tg)
     return (
-        totals.join(hits, id_col, "left")
+        totals.join(hits, "doc_id", "left")
         .withColumn("hit_grams", F.coalesce(F.col("hit_grams"), F.lit(0).cast("bigint")))
         .withColumn(
             "contamination",
@@ -1031,8 +1002,6 @@ def bloom_bitmap(docs: DataFrame, text_col: str, m_bits: int, k: int) -> np.ndar
 def bloom_incremental_dedup(
     new_docs: DataFrame,
     history: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     m_bits: int = 1 << 23,
     k: int = 5,
 ) -> DataFrame:
@@ -1076,8 +1045,8 @@ def bloom_incremental_dedup(
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
 
-    pos_expr = _bloom_positions(text_col, m_bits, k)
-    bitmap = bloom_bitmap(history, text_col, m_bits, k)
+    pos_expr = _bloom_positions("text", m_bits, k)
+    bitmap = bloom_bitmap(history, "text", m_bits, k)
     bc = new_docs.sparkSession.sparkContext.broadcast(bitmap.tobytes())
 
     might_contain = column_udf(
@@ -1089,18 +1058,16 @@ def bloom_incremental_dedup(
     probed = new_docs.withColumn("_maybe", might_contain(pos_expr))
     definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     candidates = probed.filter(F.col("_maybe")).drop("_maybe")
-    hist_digests = history.select(F.md5(F.col(text_col)).alias("_digest")).distinct()
+    hist_digests = history.select(F.md5(F.col("text")).alias("_digest")).distinct()
     verified_new = (
-        candidates.withColumn("_digest", F.md5(F.col(text_col)))
+        candidates.withColumn("_digest", F.md5(F.col("text")))
         .join(hist_digests, "_digest", "left_anti")
         .drop("_digest")
     )
     return definitely_new.unionByName(verified_new)
 
 
-def url_dedup(
-    docs: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_dedup(docs: DataFrame) -> DataFrame:
     """URL-level exact dedup over the canonicalized URL — the first (and
     cheapest) dedup stage of a web-corpus pipeline (RefinedWeb §3.2 runs
     it before any content dedup; the reference pipeline's incremental
@@ -1111,7 +1078,7 @@ def url_dedup(
     port / tracking-param / fragment / trailing-slash dressings entirely
     in JVM expressions, then ONE hash exchange on the canonical key
     (the window partition) counts each group and marks the survivor —
-    deterministically the smallest ``id_col``, the same pinned tie-break
+    deterministically the smallest ``doc_id``, the same pinned tie-break
     every other dedup stage in this package uses.
 
     Scale: the single shuffle is on the dedup key itself — the minimum
@@ -1119,25 +1086,20 @@ def url_dedup(
     (heavy head), which AQE skew handling absorbs because the window
     aggregates are tiny fixed-width values, not carried payloads.
 
-    Returns (id_col, url, canonical_url, group_size, keep).
+    Returns (doc_id, url, canonical_url, group_size, keep).
     """
     from ..functions.urls import canonical_url
 
     w = Window.partitionBy("canonical_url")
     return (
-        docs.select(id_col, url_col)
-        .withColumn("canonical_url", canonical_url(F.col(url_col)))
+        docs.select("doc_id", "url")
+        .withColumn("canonical_url", canonical_url(F.col("url")))
         .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("keep", F.col(id_col) == F.min(id_col).over(w))
+        .withColumn("keep", F.col("doc_id") == F.min("doc_id").over(w))
     )
 
 
-def domain_blocklist_filter(
-    docs: DataFrame,
-    blocklist: list[str] | DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def domain_blocklist_filter(docs: DataFrame, blocklist: list[str] | DataFrame) -> DataFrame:
     """Domain-blocklist filtering (the C4 / RefinedWeb badlist stage):
     mark every document whose URL host is a blocklisted domain OR any
     subdomain of one.
@@ -1151,7 +1113,7 @@ def domain_blocklist_filter(
       ZERO joins, ZERO shuffles, rides whole-stage codegen;
     - ``blocklist`` as a DataFrame (one ``domain`` column, for lists too
       large to inline) becomes an exploded equi-join against the
-      broadcast list, then a flag re-join on ``id_col`` — still no
+      broadcast list, then a flag re-join on ``doc_id`` — still no
       prefix-LIKE scan and nothing non-broadcast shuffles but the
       (small) matched subset.
 
@@ -1159,7 +1121,7 @@ def domain_blocklist_filter(
     """
     from ..functions.urls import host_of, host_suffixes
 
-    with_host = docs.withColumn("host", host_of(F.col(url_col)))
+    with_host = docs.withColumn("host", host_of(F.col("url")))
     suffixes = host_suffixes(F.col("host"))
     if isinstance(blocklist, list):
         bl = [b.lower() for b in blocklist]
@@ -1167,12 +1129,12 @@ def domain_blocklist_filter(
             "blocked", F.exists(suffixes, lambda s: s.isin(bl))
         )
     matched = (
-        with_host.select(id_col, F.explode(suffixes).alias("domain"))
+        with_host.select("doc_id", F.explode(suffixes).alias("domain"))
         .join(F.broadcast(blocklist.select(F.lower("domain").alias("domain"))), "domain")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("blocked", F.lit(True))
     )
-    return with_host.join(matched, id_col, "left").withColumn(
+    return with_host.join(matched, "doc_id", "left").withColumn(
         "blocked", F.coalesce(F.col("blocked"), F.lit(False))
     )

@@ -32,14 +32,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(term, n) unigram counts over the engine's whitespace token basis
     (lowercase split on ' ', empties dropped)."""
     return (
         docs.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), " "), lambda w: w != ""
+                    F.split(F.lower(F.col("text")), " "), lambda w: w != ""
                 )
             ).alias("term")
         )
@@ -51,24 +51,22 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def distribution_drift(
     candidate: DataFrame,
     reference: DataFrame,
-    text_col: str = "text",
     round_to: int | None = None,
-    scale: float = 1e6,
 ) -> DataFrame:
     """Per-term drift between ``candidate`` and ``reference`` corpora.
 
     Returns one row per union-vocabulary term:
     (term, n_cand, n_ref, kl_contrib, tv_contrib) where ``kl_contrib`` =
-    scale·p·ln(p/q) (signed; sums to scale·KL(p‖q) ≥ 0 over the full
-    vocabulary) and ``tv_contrib`` = scale·|p−q|/2 (sums to scale·TV).
-    ``scale`` defaults to 1e6 (micro-nats / micro-TV per term): unigram
+    1e6·p·ln(p/q) (signed; sums to 1e6·KL(p‖q) ≥ 0 over the full
+    vocabulary) and ``tv_contrib`` = 1e6·|p−q|/2 (sums to 1e6·TV).
+    The 1e6 scale gives micro-nats / micro-TV per term: unigram
     contributions over a real vocabulary are O(1e-5..1e-8), so unscaled
     values vanish under the 6-decimal cross-engine rounding every oracle
     comparison applies. Floats are rounded to ``round_to`` decimals if
     given; ``None`` returns raw doubles.
     """
-    cand = token_counts(candidate, text_col)
-    ref = token_counts(reference, text_col)
+    cand = token_counts(candidate)
+    ref = token_counts(reference)
     vocab = (
         cand.select("term", F.col("n").alias("n_cand"))
         .join(ref.select("term", F.col("n").alias("n_ref")), "term", "full_outer")
@@ -81,8 +79,8 @@ def distribution_drift(
     )
     p = (F.col("n_cand") + 1) / (F.col("_tc") + F.col("_v"))
     q = (F.col("n_ref") + 1) / (F.col("_tr") + F.col("_v"))
-    kl = F.lit(float(scale)) * p * F.log(p / q)
-    tv = F.lit(float(scale)) * F.abs(p - q) / F.lit(2.0)
+    kl = F.lit(1e6) * p * F.log(p / q)
+    tv = F.lit(1e6) * F.abs(p - q) / F.lit(2.0)
     if round_to is not None:
         kl, tv = F.round(kl, round_to), F.round(tv, round_to)
     return vocab.crossJoin(F.broadcast(totals)).select(

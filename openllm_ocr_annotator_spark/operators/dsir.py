@@ -33,9 +33,6 @@ def train_importance_model(
     target_filter: Column,
     sample_docs: int = 500,
     n_buckets: int = N_BUCKETS,
-    alpha: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> np.ndarray:
     """diff = log p_target − log q_raw over hash buckets, trained on the
     first ``sample_docs`` docs by id from each side (bounded collects).
@@ -47,15 +44,15 @@ def train_importance_model(
 
     def sample(df: DataFrame) -> list[str]:
         rows = (
-            df.select(F.col(text_col).alias("t"), F.col(id_col).alias("k"))
+            df.select(F.col("text").alias("t"), F.col("doc_id").alias("k"))
             .orderBy("k")
             .limit(sample_docs)
             .collect()
         )
         return [text_or_empty(r.t) for r in rows]
 
-    logp = D.train_ngram_dist(sample(docs.filter(target_filter)), n_buckets, alpha)
-    logq = D.train_ngram_dist(sample(docs), n_buckets, alpha)
+    logp = D.train_ngram_dist(sample(docs.filter(target_filter)), n_buckets)
+    logq = D.train_ngram_dist(sample(docs), n_buckets)
     return logp - logq
 
 
@@ -63,8 +60,6 @@ def importance_weights(
     docs: DataFrame,
     diff: np.ndarray,
     seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """input columns (minus text) + ``log_w`` + ``sel_key`` per document.
 
@@ -85,11 +80,11 @@ def importance_weights(
             for w, i in zip((D.log_importance(t, d) for t in texts), ids)
         ],
         lambda: bc.value,
-    )(text_col, id_col)
+    )("text", "doc_id")
     return (
-        spread_partitions(docs, id_col)
+        spread_partitions(docs, "doc_id")
         .select("*", weigh[0].alias("log_w"), weigh[1].alias("sel_key"))
-        .drop(text_col)
+        .drop("text")
     )
 
 
@@ -99,9 +94,6 @@ def dsir_select(
     k: int = 100,
     sample_docs: int = 500,
     n_buckets: int = N_BUCKETS,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """End-to-end DSIR selection: train → weight → Gumbel-top-k.
 
@@ -112,7 +104,6 @@ def dsir_select(
     """
     diff = train_importance_model(
         docs, target_filter, sample_docs, n_buckets,
-        id_col=id_col, text_col=text_col,
     )
-    weighted = importance_weights(docs, diff, seed, id_col, text_col)
-    return weighted.orderBy(F.col("sel_key").desc(), F.col(id_col).asc()).limit(k)
+    weighted = importance_weights(docs, diff)
+    return weighted.orderBy(F.col("sel_key").desc(), F.col("doc_id").asc()).limit(k)

@@ -28,31 +28,26 @@ from pyspark.sql import functions as F
 from ..functions.matchers import dispatch_match
 
 
-def evaluate_fields(
-    gt: DataFrame,
-    pred: DataFrame,
-    registry: dict[str, str] | None = None,
-    join_keys: tuple[str, ...] = ("doc_id", "field_name"),
-) -> DataFrame:
+def evaluate_fields(gt: DataFrame, pred: DataFrame) -> DataFrame:
     """J2 + F6: left join gt↔pred, matcher dispatch → per-field correctness.
 
     ``gt``: (doc_id, field_name, value [...]); ``pred``: same + confidence.
     Returns (doc_id, field_name, gt_value, pred_value, correct).
     """
-    g = gt.select(*join_keys, F.col("value").alias("gt_value"))
-    p = pred.select(*join_keys, F.col("value").alias("pred_value"))
-    joined = g.join(p, list(join_keys), "left")
+    g = gt.select("doc_id", "field_name", F.col("value").alias("gt_value"))
+    p = pred.select("doc_id", "field_name", F.col("value").alias("pred_value"))
+    joined = g.join(p, ["doc_id", "field_name"], "left")
     correct = F.when(
         F.col("pred_value").isNull(), F.lit(False)
     ).otherwise(
-        dispatch_match(F.col("field_name"), F.col("gt_value"), F.col("pred_value"), registry)
+        dispatch_match(F.col("field_name"), F.col("gt_value"), F.col("pred_value"))
     )
     return joined.withColumn("correct", F.coalesce(correct, F.lit(False)))
 
 
-def doc_accuracy(evaluated: DataFrame, doc_col: str = "doc_id") -> DataFrame:
+def doc_accuracy(evaluated: DataFrame) -> DataFrame:
     """A3: per-document accuracy + exact-match flag."""
-    return evaluated.groupBy(doc_col).agg(
+    return evaluated.groupBy("doc_id").agg(
         F.avg(F.col("correct").cast("double")).alias("accuracy"),
         (F.min(F.col("correct").cast("int")) == 1).alias("exact_match"),
         F.count(F.lit(1)).alias("n_fields"),

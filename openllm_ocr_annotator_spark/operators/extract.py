@@ -10,10 +10,12 @@ Scale design (the part that matters at 100 TB):
 - the kernel is embarrassingly parallel per document → NO shuffle is needed
   for extraction itself; partitioning comes straight from the parquet/Iceberg
   scan splits;
-- heavy-tail mega-docs are the skew hazard: ``salted_repartition`` spreads
-  documents uniformly across partitions (round-robin hash on doc_id + salt)
-  BEFORE the CPU-heavy kernel, so one scan split full of mega-docs can't
-  straggle; ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch
+- heavy-tail mega-docs are the skew hazard: ``extract_pipeline`` can
+  hash-repartition on doc_id BEFORE the CPU-heavy kernel, which spreads
+  documents uniformly and independently of the scan's file layout, so one
+  scan split full of mega-docs can't straggle (at cluster scale use ~2-3×
+  total cores as ``num_partitions``); a single mega-doc stays one task's
+  work; ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch
   memory (one doc is the floor unit — documented limit);
 - lineage: every output row carries the executing partition id;
   ``lineage_metrics`` aggregates (doc_count, span_count, checksum) per
@@ -34,19 +36,6 @@ from pyspark.sql import functions as F
 from ..kernel.merge import extract_span
 
 EXTRACTED_SCHEMA = "doc_id string, kind string, text string, media_ref string, offset int"
-
-
-def salted_repartition(docs: DataFrame, num_partitions: int, salt_buckets: int = 8) -> DataFrame:
-    """Spread documents across partitions, breaking up clustered mega-docs.
-
-    Hash-repartition on (doc_id, salt) where salt = crc32(doc_id) % buckets:
-    deterministic, uniform, and independent of the scan's file layout. At
-    cluster scale replace ``num_partitions`` with ~2-3× total cores.
-    """
-    salted = docs.withColumn(
-        "_salt", F.crc32(F.col("doc_id").cast("string")) % F.lit(salt_buckets)
-    )
-    return salted.repartition(num_partitions, "doc_id", "_salt").drop("_salt")
 
 
 def extract_spans(
@@ -259,9 +248,9 @@ def extract_spans_wide(docs: DataFrame) -> DataFrame:
 
 
 def extract_pipeline(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Salted-repartition → extract → tag partition lineage (``part_id``)."""
+    """doc_id hash-repartition → extract → tag partition lineage (``part_id``)."""
     if num_partitions:
-        docs = salted_repartition(docs, num_partitions)
+        docs = docs.repartition(num_partitions, "doc_id")
     return extract_spans(docs).withColumn("part_id", F.spark_partition_id())
 
 

@@ -211,10 +211,10 @@ def extract_media_features(media_rows: DataFrame, strict: bool = False) -> DataF
     ).select("doc_id", "media_ref", "kind", "m.*")
 
 
-def resize_plan(media_feats: DataFrame, bytes_per_pixel: float = 3.0) -> DataFrame:
+def resize_plan(media_feats: DataFrame) -> DataFrame:
     """U7 resize guard (reference: annotators/base.py:77-163) — the REAL
     arithmetic, not a stub: iteratively halve dimensions until the frame
-    fits both guards (est. bytes ≤ MAX_BYTES at ``bytes_per_pixel``,
+    fits both guards (est. bytes ≤ MAX_BYTES at 3 bytes per pixel,
     pixels ≤ MAX_PIXELS), exactly like the reference's downscale loop.
     Only the pixel *resampling* itself (LANCZOS) needs an image lib; the
     target geometry is pure columnar math.
@@ -228,7 +228,7 @@ def resize_plan(media_feats: DataFrame, bytes_per_pixel: float = 3.0) -> DataFra
     Adds (target_width, target_height, halvings, needs_resize).
     """
     pixels = F.col("width").cast("double") * F.col("height").cast("double")
-    cap = F.least(F.lit(float(MAX_PIXELS)), F.lit(MAX_BYTES / bytes_per_pixel))
+    cap = F.least(F.lit(float(MAX_PIXELS)), F.lit(MAX_BYTES / 3.0))
     fits = F.filter(
         F.sequence(F.lit(0), F.lit(30)),
         lambda h: pixels <= cap * F.pow(F.lit(4.0), h.cast("double")),
@@ -308,17 +308,16 @@ def perceptual_hash(media_rows: DataFrame) -> DataFrame:
 
 def phash_dedup(
     hashes: DataFrame,
-    max_hamming: int = 3,
     max_bucket_size: int = 1000,
     caches: list | None = None,
     stats: list | None = None,
 ) -> DataFrame:
     """Per-image dedup summary over dHash values: exact perceptual
     duplicates (identical hash — e.g. cross-container re-encodes) and
-    near duplicates (1 ≤ Hamming ≤ ``max_hamming`` — recompressed or
+    near duplicates (1 ≤ Hamming ≤ 3 — recompressed or
     lightly retouched copies).
 
-    Same scale shape as ``simhash_pairs``: (max_hamming+1)-chunk
+    Same scale shape as ``simhash_pairs``: 4-chunk
     pigeonhole banding (any pair within the budget shares one identical
     16-bit chunk, so the bucket equi-join has PERFECT recall — no
     all-pairs join), ``max_bucket_size`` bounds viral-image buckets
@@ -327,7 +326,7 @@ def phash_dedup(
     mergeable groupBy(phash) (count + min survive map-side combine).
 
     Returns (doc_id, media_ref, phash, n_exact, n_near, keep): counts of
-    OTHER images at Hamming 0 / in [1, max_hamming]; ``keep`` marks the
+    OTHER images at Hamming 0 / in [1, 3]; ``keep`` marks the
     lexicographically-first media_ref of each exact bucket (the canonical
     copy a curation pass retains).
     """
@@ -350,7 +349,7 @@ def phash_dedup(
 
     near_pairs = (
         chunk_band_pairs(
-            hashes, "media_ref", "phash", max_hamming, max_bucket_size, stats
+            hashes, "media_ref", "phash", 3, max_bucket_size, stats
         )
         .filter(F.col("hamming") >= 1)  # hamming 0 is the exact-bucket leg
         .select(

@@ -29,9 +29,6 @@ def train_lm_from_sources(
     docs: DataFrame,
     reference_sources: list[str],
     sample_docs: int = 200,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     order: int = 2,
 ) -> L.BigramLM | L.NgramLM:
     """Bounded driver-side LM training on the reference (in-domain) slice
@@ -41,8 +38,8 @@ def train_lm_from_sources(
     model (kernel/lm.train_ngram_lm) — same bounded-training + broadcast +
     narrow-pass shape, production uses order 5."""
     rows = (
-        docs.filter(F.col(source_col).isin(*reference_sources))
-        .select(F.col(text_col).alias("t"), F.col(id_col).alias("k"))
+        docs.filter(F.col("source").isin(*reference_sources))
+        .select(F.col("text").alias("t"), F.col("doc_id").alias("k"))
         .orderBy("k")
         .limit(sample_docs)
         .collect()
@@ -53,16 +50,10 @@ def train_lm_from_sources(
     return L.train_ngram_lm(texts, order=order)
 
 
-def score_perplexity(
-    docs: DataFrame,
-    lm: L.BigramLM | L.NgramLM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "perplexity",
-) -> DataFrame:
+def score_perplexity(docs: DataFrame, lm: L.BigramLM | L.NgramLM) -> DataFrame:
     """input columns (minus text) + per-document perplexity."""
-    if out_col in docs.columns:
-        raise ValueError(f"score_perplexity: input already has {out_col!r}")
+    if "perplexity" in docs.columns:
+        raise ValueError("score_perplexity: input already has 'perplexity'")
     bc = docs.sparkSession.sparkContext.broadcast(lm)
     scorer = L.ngram_perplexity if isinstance(lm, L.NgramLM) else L.perplexity
     score = column_udf(
@@ -71,9 +62,9 @@ def score_perplexity(
         lambda: bc.value,
     )
     return (
-        spread_partitions(docs, id_col)
-        .select("*", score(text_col).alias(out_col))
-        .drop(text_col)
+        spread_partitions(docs, "doc_id")
+        .select("*", score("text").alias("perplexity"))
+        .drop("text")
     )
 
 
@@ -81,9 +72,7 @@ def perplexity_filter(
     docs: DataFrame,
     lm: L.BigramLM | L.NgramLM,
     max_perplexity: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Documents at or below the perplexity budget (the tail drops)."""
-    scored = score_perplexity(docs, lm, id_col, text_col)
+    scored = score_perplexity(docs, lm)
     return scored.filter(F.col("perplexity") <= max_perplexity)

@@ -34,12 +34,8 @@ from pyspark.sql import functions as F
 def bm25_search(
     docs: DataFrame,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int | None = None,
     max_df_frac: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Score documents against ``query_terms`` with BM25 (the Lucene/ATIRE
     ``ln(1 + (N - df + 0.5)/(df + 0.5))`` idf variant — always positive)
@@ -58,25 +54,25 @@ def bm25_search(
     qlit = F.array(*[F.lit(t) for t in terms])
 
     toks = docs.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), " "), lambda w: w != "").alias("_w"),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.col("text")), " "), lambda w: w != "").alias("_w"),
     )
-    lengths = toks.select(id_col, F.size("_w").cast("long").alias("_dl"))
+    lengths = toks.select("doc_id", F.size("_w").cast("long").alias("_dl"))
     corpus = lengths.agg(
         F.count(F.lit(1)).alias("_n"), F.avg("_dl").alias("_avgdl")
     )
 
     # posting rows for the query terms only: prune BEFORE the tf groupBy
     hits = (
-        toks.select(F.col(id_col), F.explode("_w").alias("term"))
+        toks.select(F.col("doc_id"), F.explode("_w").alias("term"))
         .filter(F.array_contains(qlit, F.col("term")))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     df_rel = hits.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     per_term = (
         hits.join(F.broadcast(df_rel), "term")
-        .join(lengths, id_col)
+        .join(lengths, "doc_id")
         .crossJoin(F.broadcast(corpus))
         .filter(F.col("df") <= F.col("_n") * F.lit(max_df_frac))
         .withColumn(
@@ -89,17 +85,17 @@ def bm25_search(
         .withColumn(
             "_term_score",
             F.col("_idf")
-            * (F.col("tf") * (F.lit(k1) + 1.0))
+            * (F.col("tf") * (F.lit(1.2) + 1.0))
             / (
                 F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
+                + F.lit(1.2)
+                * (F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * F.col("_dl") / F.col("_avgdl"))
             ),
         )
     )
     # one column per query term (terms is a small literal list), then a
     # FIXED left-to-right fold — partitioning-independent float addition
-    pivoted = per_term.groupBy(id_col).pivot("term", terms).agg(
+    pivoted = per_term.groupBy("doc_id").pivot("term", terms).agg(
         F.first("_term_score")
     )
     score = F.lit(0.0)
@@ -109,8 +105,8 @@ def bm25_search(
         score = score + F.coalesce(c, F.lit(0.0))
         n_hit = n_hit + F.when(c.isNotNull(), 1).otherwise(0)
     scored = pivoted.select(
-        F.col(id_col), score.alias("score"), n_hit.alias("n_hit_terms")
+        F.col("doc_id"), score.alias("score"), n_hit.alias("n_hit_terms")
     )
     if top_k is not None:
-        scored = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(top_k)
+        scored = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(top_k)
     return scored

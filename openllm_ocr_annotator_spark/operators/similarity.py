@@ -47,20 +47,22 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _as_double(df: DataFrame, col: str) -> DataFrame:
-    return df.withColumn(col, F.col(col).cast("array<double>"))
+def _vectors(df: DataFrame, id_as: str, vec_as: str) -> DataFrame:
+    """(vec_id, embedding) as (``id_as``, ``vec_as``), vectors as array<double>."""
+    return df.select(
+        F.col("vec_id").alias(id_as), F.col("embedding").cast("array<double>").alias(vec_as)
+    )
 
 
 def _exact_rerank(
     cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int,
-    id_col: str, vec_col: str,
 ) -> DataFrame:
     """Shared ANN tail: join raw vectors onto a (query_id, neighbor_id)
     candidate relation, exact-cosine score (JVM left-fold), window top-k.
     The candidate relation bounds the join fan-out — this stage never sees
     more rows than the bucketing/probing stage emitted."""
-    q = _as_double(queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv")
-    c = _as_double(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")), "cv")
+    q = _vectors(queries, "query_id", "qv")
+    c = _vectors(corpus, "neighbor_id", "cv")
     scored = (
         cand.join(q, "query_id")
         .join(c, "neighbor_id")
@@ -78,11 +80,10 @@ def _exact_rerank(
 
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query (excluding self)."""
-    q = _as_double(queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), "qv")
-    c = _as_double(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")), "cv")
+    q = _vectors(queries, "query_id", "qv")
+    c = _vectors(corpus, "neighbor_id", "cv")
     scored = (
         q.crossJoin(F.broadcast(c))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -98,14 +99,13 @@ def brute_force_topk(
     )
 
 
-def hyperplanes(dim: int, num_planes: int, num_tables: int = 1, seed: int = 42) -> np.ndarray:
+def hyperplanes(dim: int, num_planes: int, num_tables: int = 1) -> np.ndarray:
     """(num_tables, num_planes, dim) — multiple independent hash tables."""
-    return np.random.RandomState(seed).normal(size=(num_tables, num_planes, dim))
+    return np.random.RandomState(42).normal(size=(num_tables, num_planes, dim))
 
 
 def _per_vector(
-    vectors: DataFrame, id_col: str, vec_col: str, dim: int,
-    return_type: str, kernel,
+    vectors: DataFrame, dim: int, return_type: str, kernel,
 ) -> DataFrame:
     """(vec_id, out): ``kernel(mat)`` maps one Arrow batch of vectors, as an
     (n, dim) float64 matrix, to one ``return_type`` value per vector (a
@@ -121,13 +121,10 @@ def _per_vector(
         lambda vecs, _: kernel(np.array(vecs.tolist(), dtype=np.float64).reshape(-1, dim)),
         arg=None,
     ).asNondeterministic()
-    return vectors.select(F.col(id_col).cast("long").alias("vec_id"), udf(vec_col).alias("out"))
+    return vectors.select(F.col("vec_id").cast("long").alias("vec_id"), udf("embedding").alias("out"))
 
 
-def lsh_bucket_ids(
-    vectors: DataFrame, planes: np.ndarray,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_bucket_ids(vectors: DataFrame, planes: np.ndarray) -> DataFrame:
     """(vec_id, bucket) rows over L independent tables:
     bucket = (table_idx << num_planes) | sign-bit code. The kernel returns
     each vector's L buckets (one matmul per table per batch); the JVM
@@ -143,8 +140,8 @@ def lsh_bucket_ids(
         return list(bases | codes)
 
     return _per_vector(
-        spread_partitions(vectors.select(id_col, vec_col), id_col),
-        id_col, vec_col, dim, "array<long>", buckets,
+        spread_partitions(vectors.select("vec_id", "embedding"), "vec_id"),
+        dim, "array<long>", buckets,
     ).select("vec_id", F.explode("out").alias("bucket"))
 
 
@@ -161,19 +158,18 @@ def xor_probes(bucket: str, num_planes: int):
 
 def lsh_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
-    num_planes: int = 6, num_tables: int = 4, dim: int = 64, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+    num_planes: int = 6, num_tables: int = 4,
 ) -> DataFrame:
     """ANN top-k: bucket join (queries multi-probed) + exact rerank.
 
     num_tables × num_planes tunes recall vs candidate fan-out: more tables
     raise recall multiplicatively (1-(1-p)^L); more planes shrink buckets.
     """
-    planes = hyperplanes(dim, num_planes, num_tables, seed)
-    qb = lsh_bucket_ids(queries, planes, id_col, vec_col).select(
+    planes = hyperplanes(64, num_planes, num_tables)
+    qb = lsh_bucket_ids(queries, planes).select(
         F.col("vec_id").alias("query_id"), xor_probes("bucket", num_planes)
     )
-    cb = lsh_bucket_ids(corpus, planes, id_col, vec_col).withColumnRenamed(
+    cb = lsh_bucket_ids(corpus, planes).withColumnRenamed(
         "vec_id", "neighbor_id"
     )
     cand = (
@@ -182,12 +178,11 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(cand, queries, corpus, k)
 
 
 def ivf_assignments(
     vectors: DataFrame, centroids: np.ndarray,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     nprobe: int = 1, with_sim: bool = False,
 ) -> DataFrame:
     """(vec_id, cell) rows: nearest-``nprobe`` coarse cells per vector.
@@ -211,7 +206,7 @@ def ivf_assignments(
     if with_sim and nprobe != 1:
         raise ValueError("with_sim requires nprobe=1 (one assigned cell)")
     cnorm = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    spread = spread_partitions(vectors.select(id_col, vec_col), id_col)
+    spread = spread_partitions(vectors.select("vec_id", "embedding"), "vec_id")
     dim = centroids.shape[1]
     if with_sim:
         def with_sims(mat: np.ndarray) -> pd.DataFrame:
@@ -219,10 +214,10 @@ def ivf_assignments(
             return pd.DataFrame({"cell": cells[:, 0].astype(np.int64), "centroid_sim": sims})
 
         return _per_vector(
-            spread, id_col, vec_col, dim, "struct<cell:long,centroid_sim:double>", with_sims
+            spread, dim, "struct<cell:long,centroid_sim:double>", with_sims
         ).select("vec_id", "out.cell", "out.centroid_sim")
     return _per_vector(
-        spread, id_col, vec_col, dim, "array<long>",
+        spread, dim, "array<long>",
         lambda mat: list(assign_cells(mat, cnorm, nprobe).astype(np.int64)),
     ).select("vec_id", F.explode("out").alias("cell"))
 
@@ -271,17 +266,14 @@ def lloyd_centroids(sample: np.ndarray, n_cells: int, iters: int) -> np.ndarray:
     return centroids
 
 
-def bounded_sample(
-    corpus: DataFrame, sample_rows: int = 4096,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> np.ndarray:
-    """The ``sample_rows`` lowest-id vectors as a float64 matrix — the
+def bounded_sample(corpus: DataFrame) -> np.ndarray:
+    """The 4,096 lowest-id vectors as a float64 matrix — the
     quantizer-training sample (seedless determinism, bounded driver memory
     at any corpus size; the FAISS training rule). Shared by the coarse
     (IVF) and product (PQ) quantizer trainers."""
     sample = (
-        corpus.orderBy(id_col).limit(sample_rows)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        corpus.orderBy("vec_id").limit(4096)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .collect()
     )
     if not sample:
@@ -291,16 +283,12 @@ def bounded_sample(
     return np.stack([np.asarray(r.v, dtype=np.float64) for r in sample])
 
 
-def ivf_train_centroids(
-    corpus: DataFrame, n_cells: int = 32, iters: int = 2,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    sample_rows: int = 4096,
-) -> np.ndarray:
+def ivf_train_centroids(corpus: DataFrame, n_cells: int = 32, iters: int = 2) -> np.ndarray:
     """Deterministic coarse quantizer trained on a BOUNDED sample.
 
     IVF quantizers are universally trained on samples (a few hundred
     vectors per cell suffice — the FAISS training rule), so the trainer
-    collects the ``sample_rows`` lowest vec_ids (seedless determinism,
+    collects the 4,096 lowest vec_ids (seedless determinism,
     bounded driver memory at any corpus size) and runs numpy Lloyd
     driver-side. This replaces the previous distributed-mean Lloyd, whose
     partition-order-dependent float sums made centroids irreproducible
@@ -309,14 +297,13 @@ def ivf_train_centroids(
     Assignment of the full corpus stays distributed (``ivf_assignments``).
     """
     return lloyd_centroids(
-        bounded_sample(corpus, sample_rows, id_col, vec_col), n_cells, iters
+        bounded_sample(corpus), n_cells, iters
     )
 
 
 def ivf_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
-    n_cells: int = 32, nprobe: int = 4, iters: int = 2,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+    n_cells: int = 32, nprobe: int = 4,
 ) -> DataFrame:
     """IVF ANN top-k: coarse-quantize the corpus into inverted cells; probe
     the ``nprobe`` nearest cells per query; exact cosine rerank inside.
@@ -325,11 +312,11 @@ def ivf_topk(
     is out of reach: the join fans out only within probed cells
     (E[candidates] ≈ Q × nprobe × N / n_cells).
     """
-    centroids = ivf_train_centroids(corpus, n_cells, iters, id_col, vec_col)
-    cb = ivf_assignments(corpus, centroids, id_col, vec_col, nprobe=1).withColumnRenamed(
+    centroids = ivf_train_centroids(corpus, n_cells)
+    cb = ivf_assignments(corpus, centroids, nprobe=1).withColumnRenamed(
         "vec_id", "neighbor_id"
     )
-    qb = ivf_assignments(queries, centroids, id_col, vec_col, nprobe=nprobe).withColumnRenamed(
+    qb = ivf_assignments(queries, centroids, nprobe=nprobe).withColumnRenamed(
         "vec_id", "query_id"
     )
     cand = (
@@ -338,7 +325,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(cand, queries, corpus, k)
 
 
 def _lloyd_l2(sample: np.ndarray, k: int, iters: int) -> np.ndarray:
@@ -436,10 +423,9 @@ def pq_query_tables(
 
 def ivf_pq_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
-    n_cells: int = 32, nprobe: int = 4, iters: int = 2,
-    m_sub: int = 8, ksub: int = 16, pq_iters: int = 2,
-    rerank: int | None = None, sample_rows: int = 4096,
-    id_col: str = "vec_id", vec_col: str = "embedding",
+    n_cells: int = 32, nprobe: int = 4,
+    m_sub: int = 8, ksub: int = 16,
+    rerank: int | None = None,
 ) -> DataFrame:
     """IVF-PQ (IVFADC, Jégou et al. 2011) ANN top-k — the memory-footprint
     scale path: corpus vectors live in the index as ``m_sub`` sub-quantizer
@@ -472,14 +458,11 @@ def ivf_pq_topk(
     32-bit budget already tracks IVF-Flat. Same knobs and trade-offs as
     FAISS IVFPQ — pick bits-per-vector by the discrimination scale of
     the embedding space, not corpus size."""
-    centroids, codebooks = pq_train(
-        bounded_sample(corpus, sample_rows, id_col, vec_col),
-        n_cells, iters, m_sub, ksub, pq_iters,
-    )
-    index = pq_index(corpus, centroids, codebooks, id_col, vec_col)
+    centroids, codebooks = pq_train(bounded_sample(corpus), n_cells, 2, m_sub, ksub)
+    index = pq_index(corpus, centroids, codebooks)
     return ivf_pq_search(
         queries, index, corpus, centroids, codebooks,
-        k=k, nprobe=nprobe, rerank=rerank, id_col=id_col, vec_col=vec_col,
+        k=k, nprobe=nprobe, rerank=rerank,
     )
 
 
@@ -514,7 +497,6 @@ def _code_bits(ksub: int, m_sub: int) -> tuple[int, bool]:
 
 def pq_index(
     vectors: DataFrame, centroids: np.ndarray, codebooks: np.ndarray,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode vectors against a TRAINED quantizer into the persistable PQ
     index relation ``(vec_id, cell, codes)`` — one cheap spread
@@ -550,8 +532,8 @@ def pq_index(
         })
 
     return _per_vector(
-        spread_partitions(vectors.select(id_col, vec_col), id_col),
-        id_col, vec_col, centroids.shape[1],
+        spread_partitions(vectors.select("vec_id", "embedding"), "vec_id"),
+        centroids.shape[1],
         f"struct<cell:long,codes:{'long' if packed else 'array<int>'}>", encode,
     ).select("vec_id", "out.cell", "out.codes").withMetadata(
         # quantizer identity rides the schema, not the rows: survives
@@ -566,7 +548,6 @@ def ivf_pq_search(
     queries: DataFrame, index: DataFrame, corpus: DataFrame,
     centroids: np.ndarray, codebooks: np.ndarray,
     k: int = 5, nprobe: int = 4, rerank: int | None = None,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k against a PREBUILT ``(vec_id, cell, codes)`` PQ index —
     the search half of ``ivf_pq_topk``, accepting an index that may be
@@ -621,7 +602,7 @@ def ivf_pq_search(
     # one struct per query; the JVM fans it out to one row per probed cell,
     # each carrying the query's LUT
     qb = _per_vector(
-        queries.select(id_col, vec_col), id_col, vec_col, centroids.shape[1],
+        queries.select("vec_id", "embedding"), centroids.shape[1],
         "struct<cells:array<long>,cell_dots:array<double>,lut:array<double>>",
         query_tables,
     ).select(
@@ -665,7 +646,7 @@ def ivf_pq_search(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(cand, queries, corpus, k)
 
 
 def pq_save(
@@ -735,23 +716,19 @@ def pq_load(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
     return centroids, codebooks
 
 
-def embedding_near_dups(
-    vectors: DataFrame, threshold: float = 0.95,
-    num_planes: int = 8, num_tables: int = 4, dim: int = 64, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets + exact verify.
 
     Near-dups (cosine ≥ 0.95) collide on all planes with high probability,
     so narrow buckets + several tables give near-1 recall with tiny fan-out.
     """
-    planes = hyperplanes(dim, num_planes, num_tables, seed)
-    base = lsh_bucket_ids(vectors, planes, id_col, vec_col)
+    planes = hyperplanes(64, 8, 4)
+    base = lsh_bucket_ids(vectors, planes)
     # ONE-sided multi-probe: probing both sides of the self-join would
-    # multiply candidate fan-out by (1+num_planes)² per table — 81× at the
-    # default 8 planes — for marginal hamming-2 recall. Probe-vs-base
+    # multiply candidate fan-out by (1+num_planes)² per table — 81× at
+    # 8 planes — for marginal hamming-2 recall. Probe-vs-base
     # already covers every bucket pair within hamming 1 symmetrically.
-    probed = base.select("vec_id", xor_probes("bucket", num_planes))
+    probed = base.select("vec_id", xor_probes("bucket", 8))
     cand = (
         probed.alias("a")
         .join(
@@ -762,8 +739,8 @@ def embedding_near_dups(
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .distinct()
     )
-    va = _as_double(vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")), "va")
-    vb = _as_double(vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")), "vb")
+    va = _vectors(vectors, "id_a", "va")
+    vb = _vectors(vectors, "id_b", "vb")
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -775,9 +752,8 @@ def embedding_near_dups(
 
 def semantic_dedup(
     vectors: DataFrame, eps: float = 0.95,
-    n_cells: int = 16, iters: int = 2, sample_rows: int = 4096,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    max_iter: int = 30, caches: list | None = None,
+    n_cells: int = 16,
+    caches: list | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic-level dedup
     over an embedding column — k-means-partition the embedding space with
@@ -809,11 +785,9 @@ def semantic_dedup(
     """
     from .dedup import dedup_clusters, survivors
 
-    centroids = ivf_train_centroids(
-        vectors, n_cells, iters, id_col, vec_col, sample_rows
-    )
+    centroids = ivf_train_centroids(vectors, n_cells)
     assign = ivf_assignments(
-        vectors, centroids, id_col, vec_col, nprobe=1, with_sim=True
+        vectors, centroids, nprobe=1, with_sim=True
     ).cache()
     if caches is not None:
         caches.append(assign)
@@ -825,8 +799,8 @@ def semantic_dedup(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    va = _as_double(vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")), "va")
-    vb = _as_double(vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")), "vb")
+    va = _vectors(vectors, "id_a", "va")
+    vb = _vectors(vectors, "id_b", "vb")
     pairs = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -835,7 +809,7 @@ def semantic_dedup(
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     )
     clusters = dedup_clusters(
-        pairs, docs=assign.select(F.col("vec_id").alias("doc_id")), max_iter=max_iter
+        pairs, docs=assign.select(F.col("vec_id").alias("doc_id"))
     )
     # SemDeDup survivorship: max(-centroid_sim) = farthest-from-centroid.
     # centroid_sim is bit-identical between the Spark kernel and the golden

@@ -52,13 +52,12 @@ def cardinality_audit(
     group_col: str,
     value_col: str,
     rsd: float = 0.05,
-    tolerance: float | None = None,
 ) -> DataFrame:
     """Per-group distinct-value counts: the exact count next to Spark's
     HyperLogLog++ ``approx_count_distinct`` at relative standard deviation
     ``rsd``, plus ``within_tol`` asserting the sketch landed within
-    ``tolerance`` (default 4·rsd ≈ 4σ — a deterministic contract for a
-    deterministic sketch, not a probabilistic one) of the exact count.
+    4·rsd ≈ 4σ (a deterministic contract for a deterministic sketch, not a
+    probabilistic one) of the exact count.
 
     At corpus scale you run ONLY the sketch (drop the exact column): its
     per-group state is a few KB and merges map-side, while exact distinct
@@ -69,7 +68,7 @@ def cardinality_audit(
     upgrade that degraded the sketch would flip the boolean and fail the
     value hash.
     """
-    tol = 4.0 * rsd if tolerance is None else tolerance
+    tol = 4.0 * rsd
     out = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count_distinct(F.col(value_col)).cast("long").alias("exact_distinct"),
         F.approx_count_distinct(F.col(value_col), rsd).cast("long").alias("_approx"),

@@ -33,32 +33,24 @@ def train_bpe_from_corpus(
     docs: DataFrame,
     num_merges: int = 200,
     sample_docs: int = 200,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> list[tuple[str, str]]:
     """Deterministic merges from the first ``sample_docs`` docs by id."""
     sample = [
         r[0]
-        for r in docs.select(text_col, id_col)
-        .orderBy(id_col)
+        for r in docs.select("text", "doc_id")
+        .orderBy("doc_id")
         .limit(sample_docs)
         .collect()
     ]
     return B.train_bpe(B.word_vocab(sample), num_merges)
 
 
-def bpe_token_counts(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "n_tokens",
-) -> DataFrame:
+def bpe_token_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """(id, text, …) → (id, …, n_tokens) with REAL BPE token counts."""
-    if out_col in docs.columns:
+    if "n_tokens" in docs.columns:
         raise ValueError(
-            f"bpe_token_counts: input already has a {out_col!r} column — "
-            "pass out_col to avoid a silent duplicate"
+            "bpe_token_counts: input already has an 'n_tokens' column — "
+            "drop or rename it to avoid a silent duplicate"
         )
     ranks_bc = docs.sparkSession.sparkContext.broadcast(B.merge_ranks(merges))
     count = column_udf(
@@ -68,7 +60,7 @@ def bpe_token_counts(
         lambda: (ranks_bc.value, {}),
     )
     return (
-        spread_partitions(docs, id_col)
-        .select("*", count(text_col).alias(out_col))
-        .drop(text_col)
+        spread_partitions(docs, "doc_id")
+        .select("*", count("text").alias("n_tokens"))
+        .drop("text")
     )

@@ -45,14 +45,14 @@ def weight_key(col, num_samples: int = 1):
     return F.regexp_replace(col, SAMPLE_SUFFIX_RE, "")
 
 
-def falsy_field_filter(df: DataFrame, name_col: str = "field_name", value_col: str = "value") -> DataFrame:
+def falsy_field_filter(df: DataFrame) -> DataFrame:
     """P4 (reference: voters/weighted.py:104-105): drop rows where either the
     field name or the value is NULL/'' — Python-falsy strings never vote."""
     return df.filter(
-        F.col(name_col).isNotNull()
-        & (F.col(name_col) != "")
-        & F.col(value_col).isNotNull()
-        & (F.col(value_col) != "")
+        F.col("field_name").isNotNull()
+        & (F.col("field_name") != "")
+        & F.col("value").isNotNull()
+        & (F.col("value") != "")
     )
 
 
@@ -60,7 +60,6 @@ def weighted_vote(
     annotations: DataFrame,
     weights: DataFrame | None = None,
     num_samples: int = 1,
-    default_weight: float = 1.0,
 ) -> DataFrame:
     """A1: weighted ensemble vote.
 
@@ -88,9 +87,9 @@ def weighted_vote(
         voting = voting.withColumn(
             "_wkey", weight_key(F.col("annotator_id"), num_samples)
         ).join(F.broadcast(w), "_wkey", "left")
-        voting = voting.withColumn("_w", F.coalesce("_w", F.lit(default_weight)))
+        voting = voting.withColumn("_w", F.coalesce("_w", F.lit(1.0)))
     else:
-        voting = voting.withColumn("_w", F.lit(default_weight))
+        voting = voting.withColumn("_w", F.lit(1.0))
 
     scored = voting.groupBy("doc_id", "field_name", "value").agg(
         F.sum(F.col("_w") * F.col("_conf")).alias("_score")
@@ -113,13 +112,13 @@ def weighted_vote(
     )
 
 
-def majority_vote(votes: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
+def majority_vote(votes: DataFrame) -> DataFrame:
     """A2/W3: mode per (doc_id, field_name) with pinned tie-break.
 
     ``votes``: (doc_id, field_name, value) rows — one per annotation leg.
     Returns (doc_id, field_name, value, n_votes).
     """
-    keys = key_cols or ["doc_id", "field_name"]
+    keys = ["doc_id", "field_name"]
     counted = votes.groupBy(*keys, "value").agg(F.count(F.lit(1)).alias("n_votes"))
     rank_w = Window.partitionBy(*keys).orderBy(
         F.col("n_votes").desc(), F.col("value").asc()

@@ -24,16 +24,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def doc_json_payload(df: DataFrame, payload_cols: list[str], id_col: str = "doc_id") -> DataFrame:
+def doc_json_payload(df: DataFrame, payload_cols: list[str]) -> DataFrame:
     """K1: one JSON payload per document row."""
     return df.select(
-        F.col(id_col), F.to_json(F.struct(*payload_cols)).alias("payload")
+        F.col("doc_id"), F.to_json(F.struct(*payload_cols)).alias("payload")
     )
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """K2: line-delimited JSON."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def tsv_span_lines(extracted: DataFrame) -> DataFrame:
@@ -46,14 +46,13 @@ def tsv_span_lines(extracted: DataFrame) -> DataFrame:
     )
 
 
-def write_tsv_spans(extracted: DataFrame, path: str, mode: str = "overwrite") -> None:
-    tsv_span_lines(extracted).write.mode(mode).text(path)
+def write_tsv_spans(extracted: DataFrame, path: str) -> None:
+    tsv_span_lines(extracted).write.mode("overwrite").text(path)
 
 
 def write_bucketed_table(
     df: DataFrame, table_name: str, buckets: int = 64,
-    key_col: str = "doc_id", path: str | None = None,
-    mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
     """Persist a table bucketed (and sorted) by the join key.
 
@@ -73,8 +72,8 @@ def write_bucketed_table(
     # each bucket pre-sorted (no Sort before the merge join) and the small-
     # files problem is avoided; repartition's Murmur3 hash matches the
     # bucketing hash, so every task holds exactly one bucket's rows.
-    out = df.repartition(buckets, F.col(key_col))
-    w = out.write.mode(mode).format("parquet").bucketBy(buckets, key_col).sortBy(key_col)
+    out = df.repartition(buckets, F.col("doc_id"))
+    w = out.write.mode("overwrite").format("parquet").bucketBy(buckets, "doc_id").sortBy("doc_id")
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name)
@@ -86,7 +85,12 @@ def _hex_digit(h: Column, i: int) -> Column:
     return a - 48 - F.when(a >= 97, F.lit(39)).otherwise(F.lit(0))
 
 
-def split_bucket(key: Column, seed: int = 42) -> Column:
+# md5 salt shared by the hash split (split_bucket) and the exact-count
+# split (sized_split), so both hash a key the same way
+SPLIT_SALT = "#42"
+
+
+def split_bucket(key: Column) -> Column:
     """Deterministic 0..99 bucket from a key (engine-portable: md5 + ascii
     arithmetic, reproducible in any SQL dialect for oracles).
 
@@ -96,27 +100,26 @@ def split_bucket(key: Column, seed: int = 42) -> Column:
     of hex chars span only {48..57, 97..102}, leaving five buckets
     unreachable and a 5× probability spread, which skewed a requested
     80/10/10 split to a measured ~74.6/12.5/12.9."""
-    h = F.md5(F.concat(key.cast("string"), F.lit(f"#{seed}")))
+    h = F.md5(F.concat(key.cast("string"), F.lit(SPLIT_SALT)))
     val = (
         (_hex_digit(h, 1) * 16 + _hex_digit(h, 2)) * 16 + _hex_digit(h, 3)
     ) * 16 + _hex_digit(h, 4)
     return val % 100
 
 
-def split_column(
-    key: Column, train: float = 0.8, test: float = 0.1, seed: int = 42
-) -> Column:
-    """O4: train/test/validation label as a pure function of the key.
+def split_column(key: Column, train: float = 0.8) -> Column:
+    """O4: train/test/validation label as a pure function of the key
+    (``train`` share, then 10% test, the rest validation).
 
     Thresholds round half-up (same as ``stratified_sample``): ``int()``
     floors, and train=0.29 floors int(28.999…) to 28 — a band one
     percentage point short for any ratio whose ×100 is not exactly
     representable; Python's ``round()`` is banker's rounding, and
     train=0.125 would get 12 buckets instead of 13."""
-    b = split_bucket(key, seed)
+    b = split_bucket(key)
     return (
         F.when(b < math.floor(train * 100 + 0.5), "train")
-        .when(b < math.floor((train + test) * 100 + 0.5), "test")
+        .when(b < math.floor((train + 0.1) * 100 + 0.5), "test")
         .otherwise("validation")
     )
 
@@ -124,7 +127,6 @@ def split_column(
 def sized_split(
     df: DataFrame, key_col: str = "doc_id",
     train: float = 0.8, test: float = 0.1, validation: float = 0.1,
-    seed: int = 42,
 ) -> DataFrame:
     """O4 small-corpus path: exact-count split with the reference's
     degeneracy contract (utils/dataset_converter.py:112-145):
@@ -143,7 +145,7 @@ def sized_split(
       DuckDB oracle (half-away round) can restate it exactly for any
       corpus size, not only sizes that dodge banker's-rounding .5 cases.
 
-    Membership = deterministic rank by md5(key#seed): stable under
+    Membership = deterministic rank by md5(key#42): stable under
     re-partitioning and re-runs (HF bit-parity explicitly waived, SURVEY
     §7.3 — same waiver as ``split_column``). The global rank window means
     one single-task sort: this is the SMALL-corpus contract path (the
@@ -173,7 +175,7 @@ def sized_split(
     from pyspark.sql import Window
 
     key = F.col(key_col)
-    w = Window.orderBy(F.md5(F.concat(key.cast("string"), F.lit(f"#{seed}"))), key)
+    w = Window.orderBy(F.md5(F.concat(key.cast("string"), F.lit(SPLIT_SALT))), key)
     rn = F.row_number().over(w)
     return df.withColumn(
         "split",
@@ -185,12 +187,10 @@ def sized_split(
 
 def write_split_parquet(
     df: DataFrame, path: str, key_col: str = "doc_id",
-    train: float = 0.8, test: float = 0.1, seed: int = 42,
-    mode: str = "overwrite",
 ) -> None:
     """K4: split-partitioned parquet dataset (partition pruning on split)."""
-    out = df.withColumn("split", split_column(F.col(key_col), train, test, seed))
-    out.write.mode(mode).partitionBy("split").parquet(path)
+    out = df.withColumn("split", split_column(F.col(key_col)))
+    out.write.mode("overwrite").partitionBy("split").parquet(path)
 
 
 # -- K6: demo HTML gallery ----------------------------------------------------
@@ -199,7 +199,7 @@ DEMO_HEADER = "<html><body><h1>OpenLLM OCR Annotator Demo</h1>\n"
 DEMO_FOOTER = "</body></html>"
 
 
-def demo_html_lines(media_rows: DataFrame, ref_col: str = "media_ref") -> DataFrame:
+def demo_html_lines(media_rows: DataFrame) -> DataFrame:
     """K6 body: one gallery block per image, byte-identical to the
     reference's per-image write (scripts/generate_demo.py:14-17:
     ``<div><img src='assets/{img}' style='width:600px'><br>{img}</div><hr>``).
@@ -207,7 +207,7 @@ def demo_html_lines(media_rows: DataFrame, ref_col: str = "media_ref") -> DataFr
     One deliberate divergence, same class as the K4 split note: the
     reference iterates ``os.listdir(assets_dir)`` — a FILESYSTEM-DEPENDENT
     order — where a distributed engine must not let output depend on scan
-    order, so blocks are ordered by ``ref_col`` (distinct, then the K3
+    order, so blocks are ordered by ``media_ref`` (distinct, then the K3
     range-partition + in-partition sort shape: globally ordered partitions
     without a single-reducer sort). NULL refs (a doc row whose media fetch
     failed) are dropped — the reference's listdir loop cannot see them, and
@@ -215,23 +215,21 @@ def demo_html_lines(media_rows: DataFrame, ref_col: str = "media_ref") -> DataFr
     mid-page."""
     line = F.concat(
         F.lit("<div><img src='assets/"),
-        F.col(ref_col),
+        F.col("media_ref"),
         F.lit("' style='width:600px'><br>"),
-        F.col(ref_col),
+        F.col("media_ref"),
         F.lit("</div><hr>"),
     )
     return (
-        media_rows.select(F.col(ref_col)).filter(F.col(ref_col).isNotNull())
+        media_rows.select(F.col("media_ref")).filter(F.col("media_ref").isNotNull())
         .distinct()
-        .repartitionByRange(ref_col)
-        .sortWithinPartitions(ref_col)
+        .repartitionByRange("media_ref")
+        .sortWithinPartitions("media_ref")
         .select(line.alias("value"))
     )
 
 
-def write_demo_html(
-    media_rows: DataFrame, path: str, ref_col: str = "media_ref"
-) -> int:
+def write_demo_html(media_rows: DataFrame, path: str) -> int:
     """K6: assemble the single demo page (reference scripts/generate_demo.py
     writes one local ``demo/index.html``; a human-viewed gallery is the one
     sink whose contract IS a single small file). The body streams through
@@ -241,7 +239,7 @@ def write_demo_html(
     n = 0
     with open(path, "w") as f:
         f.write(DEMO_HEADER)
-        for row in demo_html_lines(media_rows, ref_col).toLocalIterator():
+        for row in demo_html_lines(media_rows).toLocalIterator():
             f.write(row.value + "\n")
             n += 1
         f.write(DEMO_FOOTER)

@@ -68,17 +68,16 @@ def read_json_docs(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    multiline: bool = True,
 ) -> DataFrame:
     """S6/S8: read per-doc JSON files; corrupt files dropped, stem attached.
 
-    ``multiline=True`` = one pretty-printed JSON object per file (the
-    reference's ``json.dump(indent=2)`` layout); ``False`` = JSONL.
+    Each file holds one pretty-printed JSON object (``multiLine``; the
+    reference's ``json.dump(indent=2)`` layout).
     Output: declared columns + ``filename`` + ``doc_id`` (the stem).
     """
     df = (
         spark.read.schema(_with_corrupt(schema))
-        .option("multiLine", multiline)
+        .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
@@ -102,12 +101,12 @@ def read_json_docs(
 
 
 def corrupt_count(
-    spark: SparkSession, path: str, schema: T.StructType, multiline: bool = True
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> int:
     """Accounting twin of ``read_json_docs``: how many files were dropped."""
     df = (
         spark.read.schema(_with_corrupt(schema))
-        .option("multiLine", multiline)
+        .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
@@ -128,12 +127,7 @@ def _glob_exists(spark: SparkSession, pattern: str) -> bool:
     return matches is not None and len(matches) > 0
 
 
-def load_annotation_legs(
-    spark: SparkSession,
-    legs: dict[str, str],
-    schema: T.StructType = ANNOTATION_SCHEMA,
-    multiline: bool = True,
-) -> DataFrame:
+def load_annotation_legs(spark: SparkSession, legs: dict[str, str]) -> DataFrame:
     """S5/J1: per-annotator directory fan-in → one table tagged annotator_id.
 
     ``legs``: annotator_id → directory glob. A missing/empty leg directory
@@ -145,11 +139,13 @@ def load_annotation_legs(
     for annotator_id, path in legs.items():
         if not _glob_exists(spark, path):  # warn-and-skip semantics
             continue
-        leg = read_json_docs(spark, path, schema, multiline)
+        leg = read_json_docs(spark, path, ANNOTATION_SCHEMA)
         parts.append(leg.withColumn("annotator_id", F.lit(annotator_id)))
     if not parts:
         return (
-            spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+            spark.createDataFrame(
+                to_arrow_schema(ANNOTATION_SCHEMA).empty_table(), ANNOTATION_SCHEMA
+            )
             .withColumn("filename", F.lit(""))
             .withColumn("doc_id", F.lit(""))
             .withColumn("annotator_id", F.lit(""))

@@ -334,7 +334,6 @@ class SnapshotTable:
         self,
         df: DataFrame,
         expected_parent: str | None,
-        lineage: DataFrame | None = None,
         keys: DataFrame | None = None,
         extra: dict | None = None,
     ) -> str | None:
@@ -360,7 +359,7 @@ class SnapshotTable:
             return None  # opaque in-flight claim at the tip: chain moving
         if (tip["snapshot_id"] if tip else None) != expected_parent:
             return None  # stale before any write — nothing to clean
-        snap_id, manifest = self._write_snapshot(df, lineage, keys, extra)
+        snap_id, manifest = self._write_snapshot(df, None, keys, extra)
         manifest["parent"] = expected_parent
         manifest["version"] = version
         if self._fs.create_exclusive(

@@ -27,36 +27,27 @@ identical to the batch digest groupBy.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_stream(
-    stream: DataFrame,
-    key_cols: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def dedup_stream(stream: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """First-seen-per-key stream with watermark-bounded dedup state.
 
     Parquet written without a timezone arrives as TIMESTAMP_NTZ, which
     watermarks reject — cast to TIMESTAMP first (sessions here run UTC,
     so the cast is value-stable)."""
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
+    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
-def dedup_batch_twin(
-    docs: DataFrame, key_cols: Sequence[str] = ("event_id",)
-) -> DataFrame:
+def dedup_batch_twin(docs: DataFrame) -> DataFrame:
     """Batch oracle: one row per key. Valid as a VALUE oracle when
     duplicates are full-row copies (redelivery), where any survivor is
     equal — the same survivor-invariance argument both twins rely on."""
-    return docs.dropDuplicates(list(key_cols))
+    return docs.dropDuplicates(["event_id"])
 
 
 def run_dedup_stream(
@@ -64,8 +55,6 @@ def run_dedup_stream(
     path: str,
     checkpoint: str,
     query_name: str,
-    key_cols: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
     watermark: str = "30 minutes",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -75,7 +64,7 @@ def run_dedup_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     q = (
-        dedup_stream(reader.parquet(path), key_cols, ts_col, watermark)
+        dedup_stream(reader.parquet(path), watermark)
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def digest_count_stream(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def digest_count_stream(stream: DataFrame) -> DataFrame:
     """Streaming (digest, n_docs) with per-key cumulative counts."""
 
     def update(
@@ -41,7 +41,7 @@ def digest_count_stream(stream: DataFrame, text_col: str = "text") -> DataFrame:
         state.update((n,))
         yield pd.DataFrame({"digest": [key[0]], "n_docs": [n]})
 
-    src = stream.select(F.md5(F.col(text_col)).alias("digest"))
+    src = stream.select(F.md5(F.col("text")).alias("digest"))
     return src.groupBy("digest").applyInPandasWithState(
         update,
         outputStructType="digest string, n_docs long",
@@ -51,30 +51,26 @@ def digest_count_stream(stream: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def digest_counts_batch(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def digest_counts_batch(docs: DataFrame) -> DataFrame:
     """Batch twin (the oracle): digest → total document count."""
-    return docs.groupBy(F.md5(F.col(text_col)).alias("digest")).agg(
+    return docs.groupBy(F.md5(F.col("text")).alias("digest")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
 
 
 def run_digest_count_stream(
     spark, docs_path: str, checkpoint: str, query_name: str,
-    text_col: str = "text", schema=None, max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """availableNow run of the stateful counter into a memory sink; returns
     the FINAL counts (max per digest — cumulative counts are monotone, so
     max = last regardless of micro-batch boundaries)."""
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.schema(spark.read.parquet(docs_path).schema)
+    reader = spark.readStream.schema(spark.read.parquet(docs_path).schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(docs_path)
     q = (
-        digest_count_stream(stream, text_col)
+        digest_count_stream(stream)
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")

@@ -96,7 +96,6 @@ def start_sessionization(
     checkpoint_dir: str,
     gap: str = "30 minutes",
     watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
 ):
     """Streaming sessionization: sessions finalize (append emission) once
     the watermark passes their end — in-flight sessions keep merging state
@@ -104,7 +103,7 @@ def start_sessionization(
     ``start_windowed_aggregation``."""
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
     )
     agg = session_event_counts(stream, gap, watermark)
@@ -125,17 +124,16 @@ def start_windowed_aggregation(
     checkpoint_dir: str,
     window: str = "10 minutes",
     watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
 ):
     """readStream(parquet events) → watermarked rollup → append parquet sink.
 
-    ``max_files_per_trigger=1`` makes each input file a micro-batch, so the
+    ``maxFilesPerTrigger=1`` makes each input file a micro-batch, so the
     watermark advances between files and windows finalize incrementally —
     the same progression a continuously-running job sees; ``availableNow``
     drains everything then stops (test/backfill mode)."""
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
     )
     agg = windowed_event_counts(stream, window, watermark)

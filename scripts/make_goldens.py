@@ -617,7 +617,7 @@ ph_near: Counter = Counter()
 for (ra, ha), (rb, hb) in itertools.combinations(
     [(r, h) for _, r, h in ph_rows], 2
 ):
-    if 1 <= PH.hamming64(ha, hb) <= 3:
+    if 1 <= K.hamming64(ha, hb) <= 3:
         ph_near[ra] += 1
         ph_near[rb] += 1
 pq.write_table(

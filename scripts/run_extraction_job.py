@@ -11,12 +11,12 @@ Ship the package and run on a cluster:
         --partitions 2048
 
 One incremental run = resume-filter against the table's last committed
-snapshot → salted repartition → mapInArrow extraction → lineage metrics →
+snapshot → doc_id repartition → mapInArrow extraction → lineage metrics →
 atomic snapshot commit. Re-running after a failure resumes from the last
 commit (north rule: resumable from checkpoint with per-partition lineage).
 
 Sizing at cluster scale: ``--partitions`` ≈ 2-3× total executor cores;
-leave ``--no-salt`` off unless the corpus is known skew-free — the salted
+leave ``--no-salt`` off unless the corpus is known skew-free — the doc_id
 exchange is what stops one mega-doc-heavy scan split from straggling a
 whole stage.
 
@@ -44,7 +44,7 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--partitions", type=int, default=None,
                     help="repartition width before the kernel (≈2-3× cores)")
     ap.add_argument("--no-salt", action="store_true",
-                    help="skip the salted repartition (skew-free corpora only)")
+                    help="skip the doc_id repartition (skew-free corpora only)")
     ap.add_argument("--master", default=None, help="override master (tests)")
     args = ap.parse_args(argv)
 

@@ -21,8 +21,9 @@ system, which a real 4N-machine cluster does not have). The primary pair
 stays below saturation, so it measures the ENGINE's scaling (partitioning,
 shuffle-freeness, per-executor overhead) rather than the host's DRAM.
 
-Throughput = best of 5 timed trials after 1 warmup (the box shows ±2×
-noisy-neighbor variance; best-of measures capability, not interference).
+Throughput = best of the timed trials after 1 warmup: 7 for the primary
+pair, 5 for the supplementary pair (the box shows ±2× noisy-neighbor
+variance; best-of measures capability, not interference).
 
 Writes BENCH_SCALING.json and prints markdown rows for BASELINE.md.
 """

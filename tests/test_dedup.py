@@ -15,6 +15,8 @@ from openllm_ocr_annotator_spark.operators.dedup import (
     simhash_pairs,
 )
 
+from .conftest import SF_DIR
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the spark engine "
     "shuffles partitions across the cluster and merges sorted runs into "
@@ -426,10 +428,10 @@ def test_caches_handback_and_release(spark):
     """VERDICT r3 #8: every persist site offers caller-owned release, and
     releasing actually drops the retained RDDs (checked via the JVM-side
     persistent-RDD registry, which sees cache() and persist() entries)."""
-    from openllm_ocr_annotator_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        simhash_pairs,
-    )
+    from openllm_ocr_annotator_spark.operators.dedup import contamination_score
+    from openllm_ocr_annotator_spark.operators.extract import ensemble_extract
+    from openllm_ocr_annotator_spark.operators.similarity import semantic_dedup
+    from openllm_ocr_annotator_spark.synth import synthesize_documents
 
     def persistent_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -440,16 +442,40 @@ def test_caches_handback_and_release(spark):
          for i in range(20)],
         "doc_id long, text string",
     )
-    for fn in (minhash_lsh_pairs, simhash_pairs):
+    span_docs = synthesize_documents(spark, SF_DIR).limit(20)
+    rng = np.random.RandomState(3)
+    vectors = spark.createDataFrame(
+        [(i, rng.normal(size=8).tolist()) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    # (run, whether the call persists nothing besides the handed-back
+    # relation): semantic_dedup's dedup_clusters rounds also leave
+    # localCheckpoint RDDs, which the ContextCleaner releases, not the caller
+    runs = [
+        (lambda caches: minhash_lsh_pairs(docs, caches=caches), True),
+        (lambda caches: simhash_pairs(docs, caches=caches), True),
+        (lambda caches: ngram_jaccard_pairs(docs, caches=caches), True),
+        (lambda caches: contamination_score(docs, docs.limit(2), caches=caches), True),
+        (lambda caches: ensemble_extract(
+            span_docs, [("default", 1.0, None), ("twin", 1.0, None)], caches=caches
+        ), True),
+        (lambda caches: semantic_dedup(vectors, n_cells=4, caches=caches), False),
+    ]
+    for run, sole_persist in runs:
         base = persistent_ids()
         caches = []
-        fn(docs, caches=caches).count()
-        assert len(caches) == 1  # the signature/hash relation is handed back
+        run(caches).count()
+        assert len(caches) == 1  # the persisted relation is handed back
         added = persistent_ids() - base
         assert added  # the persist is visible in the JVM registry
+        before = persistent_ids()
         for c in caches:
             c.unpersist(blocking=True)
-        assert not (persistent_ids() & added)  # ...and release removes it
+        released = before - persistent_ids()
+        assert released and released <= added  # ...and release removes it
+        assert not any(c.storageLevel.useMemory or c.storageLevel.useDisk for c in caches)
+        if sole_persist:
+            assert not (persistent_ids() & added)
 
 
 def test_dedup_clusters_unpersists_edges_on_failure(spark):

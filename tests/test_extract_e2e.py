@@ -112,18 +112,17 @@ def test_empty_and_mega_docs_present_in_corpus(flat_docs):
 
 def test_salted_repartition_spreads_megadocs(spark):
     """Mega-docs clustered in one scan split must land on distinct
-    partitions after salting — the skew-control contract."""
+    extraction partitions (``part_id``) after extract_pipeline's doc_id
+    repartition — the skew-control contract."""
     import pyspark.sql.functions as F
 
-    from openllm_ocr_annotator_spark.operators.extract import salted_repartition
     from openllm_ocr_annotator_spark.synth import MEGA_MOD, synthesize_documents
 
     docs = synthesize_documents(spark, "/root/testdata/sf0.001").coalesce(1)
-    spread = salted_repartition(docs, num_partitions=16)
+    spread = extract_pipeline(docs, num_partitions=16).select("doc_id", "part_id").distinct()
     per_part = (
-        spread.withColumn("p", F.spark_partition_id())
-        .withColumn("is_mega", (F.col("doc_id").substr(5, 10).cast("long") % MEGA_MOD) == 13)
-        .groupBy("p")
+        spread.withColumn("is_mega", (F.col("doc_id").substr(5, 10).cast("long") % MEGA_MOD) == 13)
+        .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("is_mega").cast("int")).alias("n_mega"),
@@ -132,7 +131,7 @@ def test_salted_repartition_spreads_megadocs(spark):
     )
     counts = [r.n for r in per_part]
     megas = [r.n_mega for r in per_part]
-    assert len(counts) > 8, "salting must actually fan out from 1 partition"
+    assert len(counts) > 8, "the repartition must actually fan out from 1 partition"
     # no partition hoards the docs (uniform-ish hash spread)
     assert max(counts) < 3 * (sum(counts) / len(counts))
     # mega-docs do not pile onto a single partition

@@ -157,7 +157,8 @@ def test_jpeg_recompress_variant_is_perceptual_dup():
     # the planted quality-90 recompression leg must stay within the
     # phash_dedup near threshold (Hamming <= 3) for every geometry in
     # the rotation — the property the variant corpus relies on
-    from openllm_ocr_annotator_spark.kernel.phash import dhash64, hamming64
+    from openllm_ocr_annotator_spark.kernel.dedup import hamming64
+    from openllm_ocr_annotator_spark.kernel.phash import dhash64
     from openllm_ocr_annotator_spark.synth import media_variant_rows
 
     checked = 0

@@ -9,6 +9,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from openllm_ocr_annotator_spark.kernel import dedup as K
 from openllm_ocr_annotator_spark.kernel import imagecodec as C
 from openllm_ocr_annotator_spark.kernel import phash as PH
 from openllm_ocr_annotator_spark.operators.media import (
@@ -79,8 +80,8 @@ def test_signed_roundtrip_and_hamming():
         s = PH.to_signed64(h)
         assert -(1 << 63) <= s < (1 << 63)
         assert PH.to_unsigned64(s) == h
-    assert PH.hamming64(0b1010, 0b0110) == 2
-    assert PH.hamming64((1 << 64) - 1, 0) == 64
+    assert K.hamming64(0b1010, 0b0110) == 2
+    assert K.hamming64((1 << 64) - 1, 0) == 64
 
 
 def test_bands16_pigeonhole_exhaustive_for_d_le_3():
@@ -129,7 +130,7 @@ def test_phash_dedup_matches_exhaustive_replay(spark):
     n_exact = {m: 0 for m in refs}
     n_near = {m: 0 for m in refs}
     for a, b in itertools.combinations(refs, 2):
-        d = PH.hamming64(hashes[a], hashes[b])
+        d = K.hamming64(hashes[a], hashes[b])
         if d == 0:
             n_exact[a] += 1
             n_exact[b] += 1
