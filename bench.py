@@ -16,11 +16,12 @@ the amplified corpus to parquet once (cached across runs), and the timed
 job is scan → mapInArrow kernel over the scan partitioning → lineage agg
 — the same plan a production run over an Iceberg documents table
 executes. The variant that hash-repartitions on doc_id first is timed as
-its own row (``extract_salted``, a name kept for comparable history).
+its own row, ``extract_repartitioned`` (``extract_salted`` in BENCH_LOCAL
+artifacts written before the rename).
 
-Scaling evidence (N vs 4N cores) is produced by scripts/scaling_bench.py,
-which reuses ``prepare_input`` / ``run_extract_bench`` at two parallelism
-levels on the identical input directory.
+Scaling evidence (N vs 4N cores) is produced by ``scripts/scaling_bench.py
+extract`` (which reuses ``prepare_input`` for the identical input
+directory at both cluster sizes) and ``scripts/scaling_bench.py dedup``.
 
 Trust model (two layers, both recorded):
 
@@ -235,19 +236,19 @@ def main() -> None:
         runners["extract_e2e"] = run_headline
         if bad:
             noisy.append("extract_e2e")
-        # salted variant: full repartition before the kernel — the skew
-        # insurance for corpora whose mega-docs cluster in scan splits;
-        # the delta prices that insurance (a full-corpus shuffle)
-        run_salted = lambda: run_extract_bench(  # noqa: E731
+        # doc_id-repartitioned variant: full repartition before the kernel —
+        # the skew insurance for corpora whose mega-docs cluster in scan
+        # splits; the delta prices that insurance (a full-corpus shuffle)
+        run_repartitioned = lambda: run_extract_bench(  # noqa: E731
             spark, input_dir, num_partitions=cpus * 2
         )[2]
-        sdt, sp, bad, probe = timed_best(run_salted, canary)
-        timings["extract_salted"] = round(sdt, 3)
-        spreads["extract_salted"] = sp
-        probes["extract_salted"] = probe
-        runners["extract_salted"] = run_salted
+        sdt, sp, bad, probe = timed_best(run_repartitioned, canary)
+        timings["extract_repartitioned"] = round(sdt, 3)
+        spreads["extract_repartitioned"] = sp
+        probes["extract_repartitioned"] = probe
+        runners["extract_repartitioned"] = run_repartitioned
         if bad:
-            noisy.append("extract_salted")
+            noisy.append("extract_repartitioned")
 
         # bench rows come from the FULL catalog (folded members are still the
         # units worth timing individually), not the consolidated driver surface
@@ -353,7 +354,7 @@ def main() -> None:
                         noisy.remove(name)
 
         dt = timings["extract_e2e"]
-        sdt = timings["extract_salted"]
+        sdt = timings["extract_repartitioned"]
         docs_per_sec = round(n_docs / dt, 1)
         total = round(sum(timings.values()), 3)
         # attach the latest N-vs-4N scaling evidence (scripts/scaling_bench.py)
@@ -392,7 +393,7 @@ def main() -> None:
             "extract_docs": n_docs,
             "extract_spans": n_spans,
             "extract_docs_per_sec": docs_per_sec,
-            "extract_salted_docs_per_sec": round(n_docs / sdt, 1),
+            "extract_repartitioned_docs_per_sec": round(n_docs / sdt, 1),
             "scaling": scaling,
             "cpus": cpus,
             # dispersion audit: per-query max/min over the settled

@@ -27,7 +27,6 @@ class ExtractionJobConfig:
     input_path: str = ""
     table_root: str = ""
     partitions: int | None = None
-    salt: bool = True
     voter: VoterConfig = field(default_factory=VoterConfig)
 
 
@@ -39,8 +38,7 @@ _VOTER_METHODS = {"weighted", "majority", "highest_confidence"}
 # precedes int in the isinstance checks because bool IS int in Python)
 _FIELD_TYPES: dict[str, tuple] = {
     "method": (str,), "num_samples": (int,), "input_path": (str,),
-    "table_root": (str,), "partitions": (int, type(None)), "salt": (bool,),
-    "weights": (dict,),
+    "table_root": (str,), "partitions": (int, type(None)), "weights": (dict,),
 }
 
 

@@ -16,6 +16,13 @@ pipeline/image_dataset.py:43-47) — added as first-class engine capability:
 - simhash_pairs:    64-bit SimHash + pigeonhole banding (k chunks; hamming
                     distance ≤ d pairs must share ≥1 of d+1 chunks).
 
+Every LSH-style pair path — MinHash (full and incremental), SimHash,
+pHash (``media.phash_dedup``) and embedding LSH
+(``similarity.embedding_near_dups``) — builds its candidate pairs with
+ONE primitive, ``_banded_candidates``: posting rows → capped bucket
+self-join + hub star → distinct pairs. Each caller keeps only its verify
+step (estimated Jaccard, exact Hamming, cosine).
+
 Scale notes (100 TB):
 - signatures are computed in one narrow column-UDF pass over the text
   column (no shuffle);
@@ -26,9 +33,9 @@ Scale notes (100 TB):
   ``max_bucket_size``: oversized buckets star-link through their min-id
   hub (O(n) rows, cluster stays connected) instead of being dropped, with
   per-bucket accounting via the ``stats`` hand-back
-  (``_split_viral_buckets``);
-- pair emission uses doc_a < doc_b to halve the join and dedups via
-  distinct on (doc_a, doc_b).
+  (``_banded_candidates``);
+- pair emission uses a < b on the member id to halve the join and dedups
+  the join and star pairs with one distinct.
 """
 
 from __future__ import annotations
@@ -150,32 +157,37 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _split_viral_buckets(
-    bands: DataFrame,
+def _banded_candidates(
+    postings: DataFrame,
     bucket_keys: list[str],
-    hub_struct_cols: list[str],
+    member: str,
+    carry: list[str],
     max_bucket_size: int,
     stats: list | None = None,
-):
-    """Shared viral-bucket escape hatch for every banded-LSH path
-    (MinHash bands, SimHash/pHash chunks): buckets over ``max_bucket_size``
-    previously DROPPED all their pairs silently (VERDICT r4 #6 — a planted
-    cluster bigger than the cap never resolved). Now an oversized bucket
-    contributes STAR pairs — its min-key member (the hub) paired with every
-    other member — instead of the bucket² all-pairs join: O(n) rows per
-    viral bucket, and a true viral cluster (boilerplate text, recompressed
-    images) stays CONNECTED through the hub, so components still resolve.
-    The price is pairwise completeness *within* the bucket (two non-hub
-    members are linked only via the hub, or via any other bucket they
-    share), which is the right trade for pair feeds into connected
-    components — and it is deterministic, so the pure-Python goldens
-    replay it exactly.
+    pair_pred=None,
+) -> DataFrame:
+    """The one banded-candidate primitive behind every LSH-style pair path
+    (MinHash bands, SimHash/pHash chunks, embedding deletion keys): bucket
+    the posting rows on ``bucket_keys``, self-join each bucket, star-link
+    the buckets over ``max_bucket_size`` through their hub, and return the
+    distinct candidate pairs as two struct columns ``a`` and ``b`` — each
+    ``(member, *carry)`` — with ``a.member < b.member``. Callers verify
+    the pairs (estimated Jaccard, exact Hamming over a carried hash,
+    cosine); ``pair_pred`` (over the ``a``/``b`` sides) drops pairs from
+    both the self-join and the star before the distinct.
 
-    Returns ``(bands_ok, star)``: the under-cap banding rows, and the
-    viral member rows with a ``_hub`` struct column (min of
-    ``hub_struct_cols``, member key FIRST) for the caller to shape into
-    pairs. The hub comes from a map-side-combinable groupBy-min + rejoin —
-    never a single-task window sort over a 10⁷-member bucket.
+    A bucket over the cap contributes STAR pairs — its min-member hub
+    paired with every other member — instead of the bucket² self-join:
+    O(n) rows, and a true viral cluster (boilerplate text, recompressed
+    images, identical embeddings) stays CONNECTED through the hub, so
+    components still resolve. The price is pairwise completeness *within*
+    the bucket (two non-hub members are linked only via the hub or via
+    another bucket they share) — the right trade for pair feeds into
+    connected components, and deterministic, so the pure-Python goldens
+    replay it exactly. The cap bounds the hot key where the pairs are
+    built (DS2, ICDE 2021). The hub is ``min(struct(member, *carry))``
+    from a map-side-combinable groupBy + rejoin — never a single-task
+    window sort over a 10⁷-member bucket.
 
     ``stats``: pass ``[]`` to receive the drop-accounting relation — one
     row per oversized bucket with ``n_members``, ``pairs_materialized``
@@ -183,14 +195,27 @@ def _split_viral_buckets(
     lineage-style side channel that makes the recall trade measurable
     instead of asserted.
     """
-    sizes = bands.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("_n"))
+    side = [member, *carry]
+    sizes = postings.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("_n"))
     over = sizes.filter(F.col("_n") > max_bucket_size)
-    ok = bands.join(over.select(*bucket_keys), bucket_keys, "left_anti")
-    viral = bands.join(over.select(*bucket_keys), bucket_keys, "left_semi")
-    hubs = viral.groupBy(*bucket_keys).agg(
-        F.min(F.struct(*hub_struct_cols)).alias("_hub")
+    ok = postings.join(over.select(*bucket_keys), bucket_keys, "left_anti")
+    viral = postings.join(over.select(*bucket_keys), bucket_keys, "left_semi")
+    # the hub is side ``a`` of every star pair of its bucket
+    hubs = viral.groupBy(*bucket_keys).agg(F.min(F.struct(*side)).alias("a"))
+    star = (
+        viral.join(hubs, bucket_keys)
+        .filter(F.col(member) != F.col(f"a.{member}"))
+        .select("a", F.struct(*side).alias("b"))
     )
-    star = viral.join(hubs, bucket_keys)
+    same_bucket = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in bucket_keys]
+    cand = (
+        ok.alias("a")
+        .join(ok.alias("b"), [*same_bucket, F.col(f"a.{member}") < F.col(f"b.{member}")])
+        .select(*[F.struct(*[F.col(f"{s}.{c}").alias(c) for c in side]).alias(s) for s in "ab"])
+        .unionByName(star)
+    )
+    if pair_pred is not None:
+        cand = cand.filter(pair_pred)
     if stats is not None:
         n = F.col("_n").cast("long")
         stats.append(
@@ -205,7 +230,7 @@ def _split_viral_buckets(
                 .alias("pairs_skipped"),
             )
         )
-    return ok, star
+    return cand.distinct()
 
 
 def minhash_signatures(docs: DataFrame, num_perm: int = 64) -> DataFrame:
@@ -243,39 +268,12 @@ def _band_rows(sigs: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
     )
 
 
-def _banded_pair_estimates(
-    sigs: DataFrame, bands: DataFrame, star_rows: DataFrame, threshold: float,
-    pair_pred=None, star_pred=None,
-) -> DataFrame:
-    """Shared tail of the MinHash LSH family: band-bucket self-join +
-    star-hub pairs → signature-estimated Jaccard ≥ threshold. One
-    implementation for the full-corpus and incremental paths — a fix to
-    the estimate arithmetic, rounding, or threshold semantics applied to
-    one must reach the other (they are contractually bit-equal on the
-    shared pair set). ``pair_pred``/``star_pred`` add the incremental
-    path's at-least-one-side-new predicates over the ``a``/``b`` aliases
-    and the star rows respectively."""
-    star = star_rows.filter(F.col("doc_id") != F.col("_hub.doc_id"))
-    if star_pred is not None:
-        star = star.filter(star_pred)
-    star = star.select(
-        F.col("_hub.doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    if pair_pred is not None:
-        cond = cond & pair_pred
-    cand = (
-        a.join(b, cond)
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .unionByName(star)
-        .distinct()
-    )
+def _jaccard_estimates(sigs: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """Verify step of the MinHash LSH family: signature-estimated Jaccard
+    ≥ threshold over ``_banded_candidates`` pairs. One implementation for
+    the full-corpus and incremental paths — a fix to the estimate
+    arithmetic, rounding, or threshold semantics applied to one must reach
+    the other (they are contractually bit-equal on the shared pair set)."""
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b"))
     est = F.aggregate(
@@ -284,7 +282,8 @@ def _banded_pair_estimates(
         lambda acc, x: acc + x,
     ) / F.size("sig_a")
     return (
-        cand.join(sa, "doc_a")
+        cand.select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
@@ -304,9 +303,10 @@ def minhash_lsh_pairs(
     rows-per-band = num_perm/num_bands tunes the S-curve: with 64 perms /
     16 bands (4 rows), P(candidate) ≈ 1-(1-j^4)^16 — steep near j≈0.6.
 
-    Buckets over ``max_bucket_size`` are star-linked through their min-id
-    hub instead of dropped (``_split_viral_buckets``); pass ``stats=[]``
-    to receive the per-bucket drop-accounting relation.
+    Candidates come from ``_banded_candidates`` over the (band_idx,
+    band_hash) postings: buckets over ``max_bucket_size`` are star-linked
+    through their min-id hub instead of dropped; pass ``stats=[]`` to
+    receive the per-bucket drop-accounting relation.
 
     The signature relation is cached (consumed by banding AND the estimate
     join); pass ``caches=[]`` to receive it and ``unpersist()`` after the
@@ -318,14 +318,11 @@ def minhash_lsh_pairs(
     if caches is not None:
         caches.append(sigs)
 
-    bands = _band_rows(sigs, num_perm, num_bands)
-
-    # oversized buckets (mega-boilerplate clusters) take the star escape
-    # hatch instead of the bucket² join — see _split_viral_buckets
-    bands, star_rows = _split_viral_buckets(
-        bands, ["band_idx", "band_hash"], ["doc_id"], max_bucket_size, stats
+    cand = _banded_candidates(
+        _band_rows(sigs, num_perm, num_bands), ["band_idx", "band_hash"],
+        "doc_id", [], max_bucket_size, stats,
     )
-    return _banded_pair_estimates(sigs, bands, star_rows, threshold)
+    return _jaccard_estimates(sigs, cand, threshold)
 
 
 def minhash_lsh_incremental(
@@ -368,19 +365,13 @@ def minhash_lsh_incremental(
     if caches is not None:
         caches.append(sigs)
 
-    bands = _band_rows(sigs, 64, 16)
-    # same star escape hatch as the full-corpus run: the combined banding
-    # relation sees identical buckets, so hubs match a one-shot run and
-    # the incremental output stays exactly full-minus-history×history
-    bands, star_rows = _split_viral_buckets(
-        bands, ["band_idx", "band_hash"], ["doc_id", "_new"], max_bucket_size,
-        stats,
+    # the combined banding relation sees the buckets of a one-shot run, so
+    # the hubs match and the output stays exactly full-minus-history×history
+    cand = _banded_candidates(
+        _band_rows(sigs, 64, 16), ["band_idx", "band_hash"], "doc_id", ["_new"],
+        max_bucket_size, stats, pair_pred=F.col("a._new") | F.col("b._new"),
     )
-    return _banded_pair_estimates(
-        sigs, bands, star_rows, threshold,
-        pair_pred=F.col("a._new") | F.col("b._new"),
-        star_pred=F.col("_new") | F.col("_hub._new"),
-    )
+    return _jaccard_estimates(sigs, cand, threshold)
 
 
 def simhash_pairs(
@@ -391,11 +382,11 @@ def simhash_pairs(
     """SimHash near-dup pairs via pigeonhole chunk banding.
 
     With (max_hamming+1) chunks, any pair within the distance budget shares
-    at least one identical chunk — join on chunks, verify exact hamming.
-    Chunk buckets over 1,000 docs (mega-boilerplate clusters → bucket²
-    join rows) are pathological: oversized buckets star-link through
-    their hub, same escape hatch as the MinHash path (``stats=[]`` for the
-    drop accounting). Pass ``caches=[]`` to receive the cached hash
+    at least one identical chunk — join on chunks, verify exact hamming
+    (``chunk_band_pairs``). Chunk buckets over 1,000 docs (mega-boilerplate
+    clusters → bucket² join rows) are pathological: the one banded-candidate
+    primitive, ``_banded_candidates``, star-links them through their hub,
+    as on the MinHash path (``stats=[]`` for the drop accounting). Pass ``caches=[]`` to receive the cached hash
     relation for caller-owned ``unpersist()`` (same contract as
     ``ngram_jaccard_pairs``).
     """
@@ -440,10 +431,11 @@ def chunk_band_pairs(
     differing bits in at most max_hamming chunks, so it shares at least
     one identical chunk (pigeonhole) and the bucket equi-join on
     (chunk_idx, chunk_val) has PERFECT recall with no all-pairs join.
-    ``max_bucket_size`` bounds pathological buckets (mega-boilerplate
-    text / viral images → bucket² join rows): oversized buckets are
-    star-linked through their min-key hub instead of dropped
-    (``_split_viral_buckets``) — star pairs still pass the exact hamming
+    The chunk rows, carrying the hash, go through ``_banded_candidates``,
+    the one primitive of every banded pair path; ``max_bucket_size``
+    bounds pathological buckets (mega-boilerplate text / viral images →
+    bucket² join rows): oversized buckets are star-linked through their
+    min-key hub instead of dropped — star pairs still pass the exact hamming
     filter, so a viral cluster wider than the cap stays connected while a
     hash-collision mixture is filtered edge-by-edge. Pass ``stats=[]``
     for the per-bucket drop-accounting relation.
@@ -474,41 +466,20 @@ def chunk_band_pairs(
         ).alias("c"),
     ).select(key_col, hash_col, "c.chunk_idx", "c.chunk_val")
 
-    chunks, star_rows = _split_viral_buckets(
-        chunks, ["chunk_idx", "chunk_val"], [key_col, hash_col],
-        max_bucket_size, stats,
-    )
-    star = (
-        star_rows.filter(F.col(key_col) != F.col(f"_hub.{key_col}"))
-        .select(
-            F.col(f"_hub.{key_col}").alias("key_a"),
-            F.col(key_col).alias("key_b"),
-            F.bit_count(
-                F.col(f"_hub.{hash_col}").bitwiseXOR(F.col(hash_col))
-            ).alias("hamming"),
-        )
-    )
-
-    a = chunks.alias("a")
-    b = chunks.alias("b")
     hamming = F.bit_count(
         F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
     )
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")),
+        _banded_candidates(
+            chunks, ["chunk_idx", "chunk_val"], key_col, [hash_col],
+            max_bucket_size, stats,
         )
         .select(
             F.col(f"a.{key_col}").alias("key_a"),
             F.col(f"b.{key_col}").alias("key_b"),
             hamming.alias("hamming"),
         )
-        .unionByName(star)
         .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -971,21 +942,21 @@ def contamination_score(
     )
 
 
-def _bloom_positions(text_col: str, m_bits: int, k: int):
+def _bloom_positions(m_bits: int, k: int):
     """The k Bloom bit positions of each text, ``pmod(xxhash64(text, i), m)``."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.pmod(F.xxhash64(F.col(text_col), i), F.lit(m_bits)),
+        lambda i: F.pmod(F.xxhash64(F.col("text"), i), F.lit(m_bits)),
     )
 
 
-def bloom_bitmap(docs: DataFrame, text_col: str, m_bits: int, k: int) -> np.ndarray:
+def bloom_bitmap(docs: DataFrame, m_bits: int, k: int) -> np.ndarray:
     """Packed Bloom bitmap (``kernel/bloom`` layout) of ``docs``' texts,
     built by one mergeable JVM aggregate. Spark bitmaps index values from
     1 in 32768-bit (4096-byte) buckets with the same bit order as
     kernel/bloom (bit i: byte i>>3, mask 1<<(i&7)), so each aggregated
     chunk is copied into place; an empty input gives the zero bitmap."""
-    value = F.explode(F.transform(_bloom_positions(text_col, m_bits, k), lambda p: p + 1))
+    value = F.explode(F.transform(_bloom_positions(m_bits, k), lambda p: p + 1))
     chunks = (
         docs.select(value.alias("_v"))
         .groupBy(F.bitmap_bucket_number("_v").alias("bucket"))
@@ -1045,8 +1016,8 @@ def bloom_incremental_dedup(
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
 
-    pos_expr = _bloom_positions("text", m_bits, k)
-    bitmap = bloom_bitmap(history, "text", m_bits, k)
+    pos_expr = _bloom_positions(m_bits, k)
+    bitmap = bloom_bitmap(history, m_bits, k)
     bc = new_docs.sparkSession.sparkContext.broadcast(bitmap.tobytes())
 
     might_contain = column_udf(

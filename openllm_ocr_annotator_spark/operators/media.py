@@ -317,11 +317,12 @@ def phash_dedup(
     near duplicates (1 ≤ Hamming ≤ 3 — recompressed or
     lightly retouched copies).
 
-    Same scale shape as ``simhash_pairs``: 4-chunk
-    pigeonhole banding (any pair within the budget shares one identical
-    16-bit chunk, so the bucket equi-join has PERFECT recall — no
-    all-pairs join), ``max_bucket_size`` bounds viral-image buckets
-    (bucket² rows) via the shared star escape hatch (``stats=[]`` for
+    Same scale shape as ``simhash_pairs`` (``dedup.chunk_band_pairs``):
+    4-chunk pigeonhole banding (any pair within the budget shares one
+    identical 16-bit chunk, so the bucket equi-join has PERFECT recall —
+    no all-pairs join) through ``dedup._banded_candidates``, the one
+    banded-candidate primitive, whose ``max_bucket_size`` star-links
+    viral-image buckets (bucket² rows) through their hub (``stats=[]`` for
     drop accounting). Exact buckets are one
     mergeable groupBy(phash) (count + min survive map-side combine).
 

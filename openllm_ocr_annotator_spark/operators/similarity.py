@@ -99,9 +99,10 @@ def brute_force_topk(
     )
 
 
-def hyperplanes(dim: int, num_planes: int, num_tables: int = 1) -> np.ndarray:
-    """(num_tables, num_planes, dim) — multiple independent hash tables."""
-    return np.random.RandomState(42).normal(size=(num_tables, num_planes, dim))
+def hyperplanes(num_planes: int, num_tables: int = 1) -> np.ndarray:
+    """(num_tables, num_planes, 64) seed-42 planes over 64-dim embeddings —
+    multiple independent hash tables."""
+    return np.random.RandomState(42).normal(size=(num_tables, num_planes, 64))
 
 
 def _per_vector(
@@ -165,7 +166,7 @@ def lsh_topk(
     num_tables × num_planes tunes recall vs candidate fan-out: more tables
     raise recall multiplicatively (1-(1-p)^L); more planes shrink buckets.
     """
-    planes = hyperplanes(64, num_planes, num_tables)
+    planes = hyperplanes(num_planes, num_tables)
     qb = lsh_bucket_ids(queries, planes).select(
         F.col("vec_id").alias("query_id"), xor_probes("bucket", num_planes)
     )
@@ -721,23 +722,30 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95) -> DataFram
 
     Near-dups (cosine ≥ 0.95) collide on all planes with high probability,
     so narrow buckets + several tables give near-1 recall with tiny fan-out.
+    A pair is a candidate iff its 8-bit sign codes are within Hamming 1 in
+    at least one of the 4 tables. The candidates come from deletion keys:
+    per table and bit k, the key is ``(bucket with bit k cleared, k)``, and
+    two codes within Hamming 1 always share one (identical codes share all
+    8). That makes the candidate step the symmetric bucket self-join of
+    ``dedup._banded_candidates``, so a bucket over 1,000 vectors (k
+    identical embeddings would otherwise emit k² join rows) is star-linked
+    through its min-id hub, as on the MinHash and SimHash paths.
+
+    The bucket relation is cached, because it feeds the bucket count, both
+    join sides and the star, and each would otherwise rerun the LSH kernel.
+    There is no ``caches=`` hand-back: the cache lives until Spark evicts
+    it or the session ends.
     """
-    planes = hyperplanes(64, 8, 4)
-    base = lsh_bucket_ids(vectors, planes)
-    # ONE-sided multi-probe: probing both sides of the self-join would
-    # multiply candidate fan-out by (1+num_planes)² per table — 81× at
-    # 8 planes — for marginal hamming-2 recall. Probe-vs-base
-    # already covers every bucket pair within hamming 1 symmetrically.
-    probed = base.select("vec_id", xor_probes("bucket", 8))
-    cand = (
-        probed.alias("a")
-        .join(
-            base.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
+    from .dedup import _banded_candidates
+
+    keys = lsh_bucket_ids(vectors, hyperplanes(8, 4)).cache().select(
+        "vec_id",
+        F.posexplode(
+            F.array(*[F.col("bucket").bitwiseAND(F.lit(~(1 << k))) for k in range(8)])
+        ).alias("bit", "key"),
+    )
+    cand = _banded_candidates(keys, ["bit", "key"], "vec_id", [], 1000).select(
+        F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
     )
     va = _vectors(vectors, "id_a", "va")
     vb = _vectors(vectors, "id_b", "vb")
@@ -773,7 +781,10 @@ def semantic_dedup(
     Arrow pass; the pair scan is a cell-key equi-join whose fan-out is
     Σ|cell|² — ``n_cells`` is the knob that bounds it (the paper uses 50k
     clusters at LAION scale; at 10^12 docs pick n_cells so E[|cell|] stays
-    ~10^4-10^5). Component resolution reuses ``dedup_clusters``
+    ~10^4-10^5). Unlike the LSH pair paths it takes no bucket cap
+    (``dedup._banded_candidates``): star-linking an over-cap cell would
+    drop the within-cell pairs that the keep rule below depends on.
+    Component resolution reuses ``dedup_clusters``
     (min-label propagation + pointer jumping, no driver union-find), and
     survivorship is one mergeable max(struct) groupBy (``survivors``).
 

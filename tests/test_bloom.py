@@ -85,10 +85,10 @@ def test_jvm_bitmap_equals_sequential_set_bits(spark, m_bits):
     want = B.empty_bitmap(m_bits)
     B.set_bits(want, np.array([p for r in docs.select(positions.alias("p")).collect()
                                for p in r.p], dtype=np.int64))
-    got = bloom_bitmap(docs, "text", m_bits, k)
+    got = bloom_bitmap(docs, m_bits, k)
     assert got.tobytes() == want.tobytes()
     assert 0 < np.unpackbits(got).sum() <= 501 * k
-    assert bloom_bitmap(docs.filter(F.lit(False)), "text", m_bits, k).tobytes() == bytes(m_bits // 8)
+    assert bloom_bitmap(docs.filter(F.lit(False)), m_bits, k).tobytes() == bytes(m_bits // 8)
 
 
 def test_bloom_dedup_matches_anti_join(spark):

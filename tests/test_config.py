@@ -28,7 +28,6 @@ voter:
     assert cfg.input_path == "/data/docs"
     assert cfg.partitions == 64
     assert cfg.voter.weights == {"ann_a": 2.0}
-    assert cfg.salt is True  # default
 
 
 def test_unknown_fields_are_rejected(tmp_path):
@@ -157,9 +156,19 @@ def test_scalar_types_and_scalar_section_rejected(tmp_path):
     p.write_text(base + "voter:\n  num_samples: three\n")
     with pytest.raises(ValueError, match="'voter.num_samples' must be int"):
         load_config(str(p))
-    p.write_text(base + "salt: 1\n")
-    with pytest.raises(ValueError, match="'salt' must be bool"):
+    # bool is an int subclass in Python; the check still refuses it
+    p.write_text(base + "partitions: true\n")
+    with pytest.raises(ValueError, match="'partitions' must be int/null"):
         load_config(str(p))
-    p.write_text(base + "partitions: null\nsalt: true\n")
-    cfg = load_config(str(p))
-    assert cfg.partitions is None and cfg.salt is True
+    p.write_text(base + "partitions: null\n")
+    assert load_config(str(p)).partitions is None
+
+
+def test_retired_salt_key_names_partitions(tmp_path):
+    """``salt`` is retired: ``salt: false`` did what an unset
+    ``partitions`` does (no doc_id repartition). An old-style config that
+    still sets it fails as an unknown key, and the error lists
+    ``partitions``, the key that now carries the choice."""
+    for old in ("salt: true", "salt: false"):
+        with pytest.raises(ValueError, match=r"unknown config key.*'salt'.*'partitions'"):
+            load_config(_write(tmp_path, f"input_path: /x\ntable_root: /y\n{old}\n"))

@@ -56,7 +56,7 @@ def test_span_sequence_equality_vs_oracle(spark, oracle_sequences):
         assert got[d] == want[d], f"sequence mismatch for {d}"
 
 
-def test_salted_repartition_preserves_sequences(spark, oracle_sequences):
+def test_doc_id_repartition_preserves_sequences(spark, oracle_sequences):
     docs = synthesize_documents(spark, SF_DIR)
     out = extract_pipeline(docs, num_partitions=7)
     got = _spark_sequences(out)
@@ -110,7 +110,7 @@ def test_empty_and_mega_docs_present_in_corpus(flat_docs):
     assert n_out > 20 * max(med, 1), "mega-doc should dominate the median"
 
 
-def test_salted_repartition_spreads_megadocs(spark):
+def test_doc_id_repartition_spreads_megadocs(spark):
     """Mega-docs clustered in one scan split must land on distinct
     extraction partitions (``part_id``) after extract_pipeline's doc_id
     repartition — the skew-control contract."""

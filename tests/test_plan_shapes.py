@@ -440,11 +440,17 @@ def test_phash_payload_shuffles_only_from_a_narrow_input(spark):
 # collects while being built (quantizer training samples, the Bloom
 # build). The exchanges are those the mapInPandas / applyInPandas versions
 # planned; the Bloom probe UDF runs in both legs of its union.
+# embedding_near_dups builds its candidates with the capped banded
+# primitive: the bucket-size aggregate (planned once for each of its four
+# consumers: both join sides, the star and the hub) and the hub aggregate
+# add five exchanges. The LSH kernel and its spread exchange are planned
+# once, under the cached bucket relation; the uncapped probe join planned
+# them on each join side.
 _FORMER_PANDAS_MAP_PLANS = {
     "similarity_lsh_topk": (4, 2),
     "similarity_ivf_topk": (4, 2),
     "similarity_ivf_pq_topk": (2, 2),
-    "embedding_near_dups": (3, 2),
+    "embedding_near_dups": (7, 1),
     "semantic_dedup": (8, 2),
     "media_features": (0, 1),
     "dedup_bloom_incremental": (2, 2),

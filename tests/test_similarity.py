@@ -51,7 +51,7 @@ def test_lsh_xor_probes_equal_kernel_replay(spark, emb):
     )
 
     num_planes, num_tables = 6, 4
-    planes = hyperplanes(64, num_planes, num_tables)
+    planes = hyperplanes(num_planes, num_tables)
     vecs = emb.filter("vec_id < 300")
     got = {
         (r.vec_id, r.bucket)
@@ -105,6 +105,88 @@ def test_near_dups_finds_planted_duplicates(spark, emb):
     assert (0, 10001) in pairs and (0, 10002) in pairs and (10001, 10002) in pairs
     assert all(c > 0.99 for c in pairs.values())
     del F
+
+
+def test_near_dups_cover_codes_within_hamming_one(spark):
+    """Coverage of ``embedding_near_dups`` on near-dups that are NOT
+    scaled copies: 200 planted pairs at cosine 0.95 (a unit base plus an
+    orthogonal tilt of 18.2°), so their sign-bit codes differ in ~10% of
+    the bits. The output is exactly a numpy replay of the coverage rule:
+    a pair is a candidate iff its two codes are within Hamming 1 in at
+    least one of the 4 tables (8 seed-42 planes each), and it is kept iff
+    its cosine is ≥ the threshold. Measured recall on the planted pairs:
+    200/200 (the per-pair estimate is 1 − (1 − 0.81)⁴ ≈ 0.999)."""
+    rng = np.random.RandomState(7)
+    n, dim, cos = 200, 64, 0.95
+    base = rng.normal(size=(n, dim))
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    tilt = rng.normal(size=(n, dim))
+    tilt -= (tilt * base).sum(axis=1, keepdims=True) * base
+    tilt /= np.linalg.norm(tilt, axis=1, keepdims=True)
+    twin = cos * base + np.sqrt(1 - cos * cos) * tilt
+    mat = np.concatenate([base, twin])
+    ids = list(range(n)) + [1000 + i for i in range(n)]
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "vec_id long, embedding array<double>",
+    )
+    got = {(r.id_a, r.id_b): r.cosine for r in embedding_near_dups(vecs, 0.9).collect()}
+
+    planes = np.random.RandomState(42).normal(size=(4, 8, dim))
+    codes = ((np.einsum("nd,tpd->ntp", mat, planes) > 0) * (1 << np.arange(8))).sum(axis=2)
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    cosines = unit @ unit.T
+    want = {}
+    for i in range(len(ids)):
+        for j in range(len(ids)):
+            if ids[i] >= ids[j] or cosines[i, j] < 0.9:
+                continue
+            if min(bin(int(x)).count("1") for x in codes[i] ^ codes[j]) <= 1:
+                want[(ids[i], ids[j])] = cosines[i, j]
+    assert set(got) == set(want)
+    assert all(abs(got[p] - want[p]) < 1e-5 for p in want)
+    found = sum((i, 1000 + i) in got for i in range(n))
+    assert found == n, f"recall {found}/{n}"
+
+
+def test_near_dups_cap_identical_embeddings(spark, monkeypatch):
+    """2,000 identical vectors fill every one of the 32 deletion-key
+    buckets (4 tables × 8 bits): each is over the 1,000 cap, so the
+    self-join gets no rows and each bucket star-links through hub 0 —
+    at most 32 × 1,999 candidate rows before the cosine check, where the
+    uncapped probe join emitted 4 × C(2000, 2) = 7,996,000. The hub star
+    keeps the cluster connected: one component."""
+    import pyspark.sql.functions as F
+
+    from openllm_ocr_annotator_spark.operators import dedup
+
+    seen = {"stats": []}
+    banded = dedup._banded_candidates
+
+    def spy(*args, **kw):
+        seen["cand"] = banded(*args, stats=seen["stats"], **kw)
+        return seen["cand"]
+
+    monkeypatch.setattr(dedup, "_banded_candidates", spy)
+    v = np.random.RandomState(3).normal(size=64).tolist()
+    n = 2000
+    vecs = spark.range(n).select(
+        F.col("id").alias("vec_id"), F.array(*[F.lit(x) for x in v]).alias("embedding")
+    )
+    pairs = embedding_near_dups(vecs).cache()
+    (st,) = seen["stats"]
+    buckets = st.collect()
+    assert len(buckets) == 32 and {r.n_members for r in buckets} == {n}
+    assert sum(r.pairs_materialized for r in buckets) == 32 * (n - 1)
+    assert {(r.a.vec_id, r.b.vec_id) for r in seen["cand"].collect()} == {
+        (0, i) for i in range(1, n)
+    }
+    assert pairs.count() == n - 1
+    labels = dedup.dedup_clusters(
+        pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    ).collect()
+    assert len(labels) == n and {r.cluster_id for r in labels} == {0}
+    pairs.unpersist()
 
 
 def test_ivf_topk_recall_and_determinism(spark, emb):
