@@ -165,71 +165,73 @@ def _banded_candidates(
     max_bucket_size: int,
     stats: list | None = None,
     pair_pred=None,
+    split: tuple = (),
 ) -> DataFrame:
     """The one banded-candidate primitive behind every LSH-style pair path
     (MinHash bands, SimHash/pHash chunks, embedding deletion keys): bucket
     the posting rows on ``bucket_keys``, self-join each bucket, star-link
     the buckets over ``max_bucket_size`` through their hub, and return the
-    distinct candidate pairs as two struct columns ``a`` and ``b`` — each
-    ``(member, *carry)`` — with ``a.member < b.member``. Callers verify
-    the pairs (estimated Jaccard, exact Hamming over a carried hash,
-    cosine); ``pair_pred`` (over the ``a``/``b`` sides) drops pairs from
-    both the self-join and the star before the distinct.
+    distinct pairs as flat columns ``a_<c>``/``b_<c>`` for ``c`` in
+    ``(member, *carry)``, with ``a_<member> < b_<member>``. Callers verify
+    the pairs; ``pair_pred`` (over those columns) drops join and star pairs
+    alike before the distinct.
 
-    A bucket over the cap contributes STAR pairs — its min-member hub
-    paired with every other member — instead of the bucket² self-join:
-    O(n) rows, and a true viral cluster (boilerplate text, recompressed
-    images, identical embeddings) stays CONNECTED through the hub, so
-    components still resolve. The price is pairwise completeness *within*
-    the bucket (two non-hub members are linked only via the hub or via
-    another bucket they share) — the right trade for pair feeds into
-    connected components, and deterministic, so the pure-Python goldens
-    replay it exactly. The cap bounds the hot key where the pairs are
-    built (DS2, ICDE 2021). The hub is ``min(struct(member, *carry))``
-    from a map-side-combinable groupBy + rejoin — never a single-task
-    window sort over a 10⁷-member bucket.
+    A bucket over the cap contributes STAR pairs — its min-member hub with
+    every other member — instead of the bucket² self-join: O(n) rows, and a
+    viral cluster stays CONNECTED through the hub, so components still
+    resolve; the price is pairwise completeness within the bucket. It is
+    deterministic, so the pure-Python goldens replay it, and it bounds the
+    hot key where the pairs are built (DS2, ICDE 2021). The hub is
+    ``min(struct(member, *carry))`` from a map-side-combinable groupBy.
 
-    ``stats``: pass ``[]`` to receive the drop-accounting relation — one
-    row per oversized bucket with ``n_members``, ``pairs_materialized``
-    (n−1 star edges) and ``pairs_skipped`` (the bucket² remainder) — the
-    lineage-style side channel that makes the recall trade measurable
-    instead of asserted.
+    ``split`` narrows the star to members that agree on these columns: an
+    over-cap bucket gets one hub per split value, and the hubs self-join
+    like a bucket under the cap. One groupBy gives each (bucket, split
+    value) its hub and bucket size; joined onto the postings once, it
+    feeds the self-join and the star, split by the over-cap flag.
+
+    ``stats``: pass ``[]`` to receive one row per oversized bucket with
+    ``n_members``, ``pairs_materialized`` (star edges plus hub pairs: n−1
+    without ``split``) and ``pairs_skipped`` (the rest of bucket²).
     """
     side = [member, *carry]
-    sizes = postings.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("_n"))
-    over = sizes.filter(F.col("_n") > max_bucket_size)
-    ok = postings.join(over.select(*bucket_keys), bucket_keys, "left_anti")
-    viral = postings.join(over.select(*bucket_keys), bucket_keys, "left_semi")
-    # the hub is side ``a`` of every star pair of its bucket
-    hubs = viral.groupBy(*bucket_keys).agg(F.min(F.struct(*side)).alias("a"))
-    star = (
-        viral.join(hubs, bucket_keys)
-        .filter(F.col(member) != F.col(f"a.{member}"))
-        .select("a", F.struct(*side).alias("b"))
+    # one row per (bucket, split value) with its hub, and the bucket's size
+    groups = postings.groupBy(*bucket_keys, *split).agg(
+        F.count(F.lit(1)).alias("_c"), F.min(F.struct(*side)).alias("_hub")
     )
-    same_bucket = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in bucket_keys]
+    groups = groups.withColumn(
+        "_n", F.sum("_c").over(Window.partitionBy(*bucket_keys)) if split else F.col("_c")
+    )
+    over = F.col("_n") > max_bucket_size
+    hub = F.col(member) == F.col(f"_hub.{member}")
+    rows = postings.join(groups, [*bucket_keys, *split])
+    star = rows.filter(over & ~hub).select(
+        *[F.col(f"_hub.{c}").alias(f"a_{c}") for c in side],
+        *[F.col(c).alias(f"b_{c}") for c in side],
+    )
+    # an over-cap bucket self-joins only its hubs (one per split value)
+    joined = rows.filter(~over | hub).select(*bucket_keys, *side)
     cand = (
-        ok.alias("a")
-        .join(ok.alias("b"), [*same_bucket, F.col(f"a.{member}") < F.col(f"b.{member}")])
-        .select(*[F.struct(*[F.col(f"{s}.{c}").alias(c) for c in side]).alias(s) for s in "ab"])
+        joined.select(*bucket_keys, *[F.col(c).alias(f"a_{c}") for c in side])
+        .join(joined.select(*bucket_keys, *[F.col(c).alias(f"b_{c}") for c in side]), bucket_keys)
+        .filter(F.col(f"a_{member}") < F.col(f"b_{member}"))
+        .drop(*bucket_keys)
         .unionByName(star)
     )
     if pair_pred is not None:
         cand = cand.filter(pair_pred)
     if stats is not None:
-        n = F.col("_n").cast("long")
-        stats.append(
-            over.select(
-                *bucket_keys,
-                n.alias("n_members"),
-                (n - F.lit(1)).alias("pairs_materialized"),
-                # n(n-1)/2 - (n-1) = (n-1)(n-2)/2, always even — pure long
-                # arithmetic (a double division would round once a viral
-                # bucket passes ~10^8 members: n² > 2^53)
-                F.shiftright((n - F.lit(1)) * (n - F.lit(2)), 1)
-                .alias("pairs_skipped"),
-            )
+        per_bucket = groups.filter(over).groupBy(*bucket_keys).agg(
+            F.first("_n").cast("long").alias("n"), F.count(F.lit(1)).alias("s")
         )
+        n, s = F.col("n"), F.col("s")
+        # n−s star edges plus s(s−1)/2 hub pairs, in long arithmetic (a
+        # double would round past ~10^8 members: n² > 2^53)
+        pairs = n - s + F.shiftright(s * (s - F.lit(1)), 1)
+        stats.append(per_bucket.select(
+            *bucket_keys, n.alias("n_members"), pairs.alias("pairs_materialized"),
+            (F.shiftright(n * (n - F.lit(1)), 1) - pairs).alias("pairs_skipped"),
+        ))
     return cand.distinct()
 
 
@@ -282,7 +284,7 @@ def _jaccard_estimates(sigs: DataFrame, cand: DataFrame, threshold: float) -> Da
         lambda acc, x: acc + x,
     ) / F.size("sig_a")
     return (
-        cand.select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        cand.select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
         .join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("est_jaccard", est)
@@ -369,7 +371,7 @@ def minhash_lsh_incremental(
     # the hubs match and the output stays exactly full-minus-history×history
     cand = _banded_candidates(
         _band_rows(sigs, 64, 16), ["band_idx", "band_hash"], "doc_id", ["_new"],
-        max_bucket_size, stats, pair_pred=F.col("a._new") | F.col("b._new"),
+        max_bucket_size, stats, pair_pred=F.col("a__new") | F.col("b__new"),
     )
     return _jaccard_estimates(sigs, cand, threshold)
 
@@ -467,7 +469,7 @@ def chunk_band_pairs(
     ).select(key_col, hash_col, "c.chunk_idx", "c.chunk_val")
 
     hamming = F.bit_count(
-        F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+        F.col(f"a_{hash_col}").bitwiseXOR(F.col(f"b_{hash_col}"))
     )
     return (
         _banded_candidates(
@@ -475,8 +477,8 @@ def chunk_band_pairs(
             max_bucket_size, stats,
         )
         .select(
-            F.col(f"a.{key_col}").alias("key_a"),
-            F.col(f"b.{key_col}").alias("key_b"),
+            F.col(f"a_{key_col}").alias("key_a"),
+            F.col(f"b_{key_col}").alias("key_b"),
             hamming.alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)

@@ -108,10 +108,11 @@ def hyperplanes(num_planes: int, num_tables: int = 1) -> np.ndarray:
 def _per_vector(
     vectors: DataFrame, dim: int, return_type: str, kernel,
 ) -> DataFrame:
-    """(vec_id, out): ``kernel(mat)`` maps one Arrow batch of vectors, as an
-    (n, dim) float64 matrix, to one ``return_type`` value per vector (a
-    sequence, or a ``pd.DataFrame`` for a struct). Only the vector column
-    crosses into Python; callers explode array results JVM-side.
+    """(vec_id, ..., out): ``kernel(mat)`` maps one Arrow batch of vectors,
+    as an (n, dim) float64 matrix, to one ``return_type`` value per vector
+    (a sequence, or a ``pd.DataFrame`` for a struct). Only the vector
+    column crosses into Python, and the other input columns ride along;
+    callers explode array results JVM-side.
 
     The UDF is marked nondeterministic only to stop filter pushdown: the
     ``isnotnull`` a join infers on ``cell`` and the ``size(out) > 0`` an
@@ -122,14 +123,19 @@ def _per_vector(
         lambda vecs, _: kernel(np.array(vecs.tolist(), dtype=np.float64).reshape(-1, dim)),
         arg=None,
     ).asNondeterministic()
-    return vectors.select(F.col("vec_id").cast("long").alias("vec_id"), udf("embedding").alias("out"))
+    return vectors.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        *[c for c in vectors.columns if c not in ("vec_id", "embedding")],
+        udf("embedding").alias("out"),
+    )
 
 
 def lsh_bucket_ids(vectors: DataFrame, planes: np.ndarray) -> DataFrame:
-    """(vec_id, bucket) rows over L independent tables:
+    """(vec_id, ..., bucket) rows over L independent tables:
     bucket = (table_idx << num_planes) | sign-bit code. The kernel returns
     each vector's L buckets (one matmul per table per batch); the JVM
-    explodes them. ``xor_probes`` adds the query-side neighbor codes."""
+    explodes them, and input columns other than ``embedding`` ride along.
+    ``xor_probes`` adds the query-side neighbor codes."""
     n_tables, n_planes, dim = planes.shape
     weights = 1 << np.arange(n_planes, dtype=np.int64)  # (planes,)
     bases = np.arange(n_tables, dtype=np.int64) << n_planes  # (tables,)
@@ -140,10 +146,8 @@ def lsh_bucket_ids(vectors: DataFrame, planes: np.ndarray) -> DataFrame:
         ).sum(axis=2)  # (n, tables)
         return list(bases | codes)
 
-    return _per_vector(
-        spread_partitions(vectors.select("vec_id", "embedding"), "vec_id"),
-        dim, "array<long>", buckets,
-    ).select("vec_id", F.explode("out").alias("bucket"))
+    out = _per_vector(spread_partitions(vectors, "vec_id"), dim, "array<long>", buckets)
+    return out.select(*out.columns[:-1], F.explode("out").alias("bucket"))
 
 
 def xor_probes(bucket: str, num_planes: int):
@@ -717,36 +721,48 @@ def pq_load(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
     return centroids, codebooks
 
 
-def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95) -> DataFrame:
+def embedding_near_dups(
+    vectors: DataFrame, threshold: float = 0.95,
+    caches: list | None = None,
+) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets + exact verify.
 
-    Near-dups (cosine ≥ 0.95) collide on all planes with high probability,
-    so narrow buckets + several tables give near-1 recall with tiny fan-out.
     A pair is a candidate iff its 8-bit sign codes are within Hamming 1 in
-    at least one of the 4 tables. The candidates come from deletion keys:
-    per table and bit k, the key is ``(bucket with bit k cleared, k)``, and
-    two codes within Hamming 1 always share one (identical codes share all
-    8). That makes the candidate step the symmetric bucket self-join of
-    ``dedup._banded_candidates``, so a bucket over 1,000 vectors (k
-    identical embeddings would otherwise emit k² join rows) is star-linked
-    through its min-id hub, as on the MinHash and SimHash paths.
+    at least one of the 4 tables: per table and bit k the deletion key is
+    ``(bucket with bit k cleared, k)``, which two such codes always share,
+    so candidates are the bucket self-join of ``dedup._banded_candidates``.
 
-    The bucket relation is cached, because it feeds the bucket count, both
-    join sides and the star, and each would otherwise rerun the LSH kernel.
-    There is no ``caches=`` hand-back: the cache lives until Spark evicts
-    it or the session ends.
+    The 1,000 cap splits on an exact-copy fingerprint (``xxhash64`` of the
+    vector): copies of one vector in an over-cap key star-link through
+    their min-id hub (k−1 rows, not k²) while distinct vectors still join
+    each other. A size cap alone would lose pairs: each (table, bit) has
+    only 128 keys, so uniform codes push every key past 1,000 at n ≈ 128k
+    and a star keeps only hub pairs. The join over distinct vectors stays
+    unbounded (~n²/8 rows for uniform codes), as before the cap;
+    ``semantic_dedup``'s ``n_cells`` is the bounded path at corpus scale.
+
+    The bucket relation is cached so the LSH kernel runs once; pass
+    ``caches=[]`` to receive it and ``unpersist()`` it after the result is
+    materialized.
     """
     from .dedup import _banded_candidates
 
-    keys = lsh_bucket_ids(vectors, hyperplanes(8, 4)).cache().select(
+    buckets = lsh_bucket_ids(
+        vectors.select("vec_id", "embedding", F.xxhash64("embedding").alias("copy")),
+        hyperplanes(8, 4),
+    ).cache()
+    if caches is not None:
+        caches.append(buckets)
+    keys = buckets.select(
         "vec_id",
+        "copy",
         F.posexplode(
             F.array(*[F.col("bucket").bitwiseAND(F.lit(~(1 << k))) for k in range(8)])
         ).alias("bit", "key"),
     )
-    cand = _banded_candidates(keys, ["bit", "key"], "vec_id", [], 1000).select(
-        F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-    )
+    cand = _banded_candidates(
+        keys, ["bit", "key"], "vec_id", [], 1000, split=["copy"]
+    ).select(F.col("a_vec_id").alias("id_a"), F.col("b_vec_id").alias("id_b"))
     va = _vectors(vectors, "id_a", "va")
     vb = _vectors(vectors, "id_b", "vb")
     return (

@@ -58,28 +58,51 @@ REPO = os.path.dirname(HERE)
 
 CHILD = r"""
 import json, sys, time
-sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 
-n_exec, cores_per, input_dir, pkg_zip, n_trials = (
-    int(sys.argv[1]), int(sys.argv[2]), sys.argv[3], sys.argv[4], int(sys.argv[5]))
+(job, n_exec, cores_per, input_dir, pkg_zip, n_trials, app, mem_mb,
+ shuffle_partitions, extra_conf) = (
+    sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4], sys.argv[5],
+    int(sys.argv[6]), sys.argv[7], int(sys.argv[8]), int(sys.argv[9]),
+    json.loads(sys.argv[10]))
 
-builder = (SparkSession.builder.appName(f"{app}_{{n_exec}}x{{cores_per}}")
-    .master(f"local-cluster[{{n_exec}},{{cores_per}},{mem_mb}]")
+builder = (SparkSession.builder.appName(f"{app}_{n_exec}x{cores_per}")
+    .master(f"local-cluster[{n_exec},{cores_per},{mem_mb}]")
     .config("spark.submit.pyFiles", pkg_zip)          # --py-files shipping
-    .config("spark.executor.memory", "{mem_mb}m")
-    .config("spark.sql.shuffle.partitions", str({shuffle_partitions}))
+    .config("spark.executor.memory", f"{mem_mb}m")
+    .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     .config("spark.ui.enabled", "false"))
-for k, v in {extra_conf!r}.items():
+for k, v in extra_conf.items():
     builder = builder.config(k, v)
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 docs = spark.read.parquet(input_dir)
 n_docs = docs.count()
-{trial}
+
+
+def extract_trial():
+    from openllm_ocr_annotator_spark.operators.extract import extract_pipeline
+
+    extract_pipeline(docs, num_partitions=None).agg(F.count(F.lit(1)).alias("n")).first()
+    return None, []
+
+
+def dedup_trial():
+    from openllm_ocr_annotator_spark.operators.dedup import (
+        dedup_clusters, minhash_lsh_pairs, survivors)
+
+    caches = []
+    pairs = minhash_lsh_pairs(
+        docs, threshold=0.7, max_bucket_size=1000, caches=caches).persist()
+    clusters = dedup_clusters(pairs, docs=docs).persist()
+    kept = docs.join(survivors(clusters, docs), "doc_id").count()
+    return kept, [pairs, clusters, *caches]
+
+
+trial = {"extract": extract_trial, "dedup": dedup_trial}[job]
 times, results = [], []
 for _ in range(n_trials):  # first is warmup (JIT + executor/python spin-up)
     t0 = time.perf_counter()
@@ -88,44 +111,24 @@ for _ in range(n_trials):  # first is warmup (JIT + executor/python spin-up)
     results.append(result)
     for frame in held:
         frame.unpersist()
-assert len(set(results)) == 1, f"nondeterministic result: {{results}}"
+assert len(set(results)) == 1, f"nondeterministic result: {results}"
 spark.stop()
 best = min(times[1:])
-out = {{
+out = {
     "executors": n_exec, "cores_per_executor": cores_per,
     "total_cores": n_exec * cores_per, "docs": n_docs,
     "trial_seconds": [round(t, 2) for t in times],
-    "best_seconds": round(best, 2), "docs_per_sec": n_docs / best}}
+    "best_seconds": round(best, 2), "docs_per_sec": n_docs / best}
 if results[0] is not None:
     out["kept_docs"] = results[0]
 print("RESULT " + json.dumps(out))
 """
 
-EXTRACT_TRIAL = """
-from openllm_ocr_annotator_spark.operators.extract import extract_pipeline
-
-def trial():
-    extract_pipeline(docs, num_partitions=None).agg(F.count(F.lit(1)).alias("n")).first()
-    return None, []
-"""
-
-DEDUP_TRIAL = """
-from openllm_ocr_annotator_spark.operators.dedup import (
-    dedup_clusters, minhash_lsh_pairs, survivors)
-
-def trial():
-    caches = []
-    pairs = minhash_lsh_pairs(
-        docs, threshold=0.7, max_bucket_size=1000, caches=caches).persist()
-    clusters = dedup_clusters(pairs, docs=docs).persist()
-    kept = docs.join(survivors(clusters, docs), "doc_id").count()
-    return kept, [pairs, clusters, *caches]
-"""
-
+# shuffle partitions = max(min_partitions, partitions_per_core × cores)
 JOBS = {
     "extract": {
         "app": "scaling", "mem_mb": 4096, "trials": 6, "timeout": 3600,
-        "shuffle_partitions": "n_exec * cores_per", "trial": EXTRACT_TRIAL,
+        "min_partitions": 1, "partitions_per_core": 1,
         "extra_conf": {
             "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
             "spark.sql.files.maxPartitionBytes": "4m",
@@ -133,8 +136,7 @@ JOBS = {
     },
     "dedup": {
         "app": "dedup_scaling", "mem_mb": 6144, "trials": 4, "timeout": 5400,
-        "shuffle_partitions": "max(32, n_exec * cores_per * 2)",
-        "trial": DEDUP_TRIAL, "extra_conf": {},
+        "min_partitions": 32, "partitions_per_core": 2, "extra_conf": {},
     },
 }
 
@@ -144,16 +146,13 @@ def run_child(
     n_trials: int | None = None,
 ) -> dict:
     spec = JOBS[job]
-    script = CHILD.format(
-        repo=REPO, app=spec["app"], mem_mb=spec["mem_mb"],
-        shuffle_partitions=spec["shuffle_partitions"],
-        extra_conf=spec["extra_conf"], trial=spec["trial"],
-    )
     total = n_exec * cores_per
+    shuffle_partitions = max(spec["min_partitions"], spec["partitions_per_core"] * total)
     cmd = [
-        "taskset", "-c", f"0-{total - 1}", sys.executable, "-c", script,
-        str(n_exec), str(cores_per), input_dir, pkg_zip,
-        str(n_trials or spec["trials"]),
+        "taskset", "-c", f"0-{total - 1}", sys.executable, "-c", CHILD,
+        job, str(n_exec), str(cores_per), input_dir, pkg_zip,
+        str(n_trials or spec["trials"]), spec["app"], str(spec["mem_mb"]),
+        str(shuffle_partitions), json.dumps(spec["extra_conf"]),
     ]
     out = subprocess.run(
         cmd, capture_output=True, text=True, cwd=REPO, timeout=spec["timeout"]

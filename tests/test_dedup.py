@@ -430,7 +430,10 @@ def test_caches_handback_and_release(spark):
     persistent-RDD registry, which sees cache() and persist() entries)."""
     from openllm_ocr_annotator_spark.operators.dedup import contamination_score
     from openllm_ocr_annotator_spark.operators.extract import ensemble_extract
-    from openllm_ocr_annotator_spark.operators.similarity import semantic_dedup
+    from openllm_ocr_annotator_spark.operators.similarity import (
+        embedding_near_dups,
+        semantic_dedup,
+    )
     from openllm_ocr_annotator_spark.synth import synthesize_documents
 
     def persistent_ids():
@@ -445,7 +448,7 @@ def test_caches_handback_and_release(spark):
     span_docs = synthesize_documents(spark, SF_DIR).limit(20)
     rng = np.random.RandomState(3)
     vectors = spark.createDataFrame(
-        [(i, rng.normal(size=8).tolist()) for i in range(24)],
+        [(i, rng.normal(size=64).tolist()) for i in range(24)],
         "vec_id long, embedding array<double>",
     )
     # (run, whether the call persists nothing besides the handed-back
@@ -460,6 +463,7 @@ def test_caches_handback_and_release(spark):
             span_docs, [("default", 1.0, None), ("twin", 1.0, None)], caches=caches
         ), True),
         (lambda caches: semantic_dedup(vectors, n_cells=4, caches=caches), False),
+        (lambda caches: embedding_near_dups(vectors, caches=caches), True),
     ]
     for run, sole_persist in runs:
         base = persistent_ids()

@@ -173,12 +173,13 @@ def test_near_dups_cap_identical_embeddings(spark, monkeypatch):
     vecs = spark.range(n).select(
         F.col("id").alias("vec_id"), F.array(*[F.lit(x) for x in v]).alias("embedding")
     )
-    pairs = embedding_near_dups(vecs).cache()
+    caches = []
+    pairs = embedding_near_dups(vecs, caches=caches).cache()
     (st,) = seen["stats"]
     buckets = st.collect()
     assert len(buckets) == 32 and {r.n_members for r in buckets} == {n}
     assert sum(r.pairs_materialized for r in buckets) == 32 * (n - 1)
-    assert {(r.a.vec_id, r.b.vec_id) for r in seen["cand"].collect()} == {
+    assert {(r.a_vec_id, r.b_vec_id) for r in seen["cand"].collect()} == {
         (0, i) for i in range(1, n)
     }
     assert pairs.count() == n - 1
@@ -186,7 +187,58 @@ def test_near_dups_cap_identical_embeddings(spark, monkeypatch):
         pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     ).collect()
     assert len(labels) == n and {r.cluster_id for r in labels} == {0}
-    pairs.unpersist()
+    for frame in [pairs, *caches]:
+        frame.unpersist()
+
+
+def test_near_dups_keep_pairs_in_over_cap_bucket_of_distinct_vectors(spark):
+    """A deletion-key bucket over the 1,000 cap that holds distinct
+    vectors keeps every pair: 1,001 unrelated vectors share one table-0
+    code, so all 8 table-0 keys hold 1,003 members, and a pair planted
+    among them at cosine 0.95 (ids far above the hub) shares no key in
+    tables 1-3 (its codes there differ in ≥ 2 bits). A star-linked bucket
+    would keep only hub pairs and lose it; the copy split keeps the
+    self-join, so the output is exactly the numpy replay of the coverage
+    rule (Hamming ≤ 1 in one of the 4 tables, cosine ≥ 0.9)."""
+    rng = np.random.RandomState(11)
+    dim = 64
+    planes = np.random.RandomState(42).normal(size=(4, 8, dim))
+
+    def codes(m):
+        return ((np.einsum("nd,tpd->ntp", m, planes) > 0) * (1 << np.arange(8))).sum(axis=2)
+
+    # draws biased toward u land in u's table-0 code ~7% of the time and
+    # stay unrelated to each other (pairwise cosine ≤ ~0.8)
+    u = rng.normal(size=dim)
+    draws = rng.normal(size=(20_000, dim)) + u
+    code0 = codes(u[None])[0, 0]
+    cone = draws[codes(draws)[:, 0] == code0][:1003]
+    x = cone[-1] / np.linalg.norm(cone[-1])
+    tilt = rng.normal(size=(20_000, dim))
+    tilt -= np.outer(tilt @ x, x)
+    tilt /= np.linalg.norm(tilt, axis=1, keepdims=True)
+    twins = 0.95 * x + np.sqrt(1 - 0.95**2) * tilt
+    diff = np.vectorize(lambda v: bin(int(v)).count("1"))(codes(twins) ^ codes(x[None])[0])
+    twin = twins[(diff[:, 0] == 0) & (diff[:, 1:] >= 2).all(axis=1)][0]
+    mat = np.concatenate([cone[:1001], [x, twin]])
+    ids = list(range(1001)) + [5000, 5001]
+    cm = codes(mat)
+    assert (cm[:, 0] == code0).all()
+    vecs = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in zip(ids, mat)],
+        "vec_id long, embedding array<double>",
+    )
+    got = {(r.id_a, r.id_b) for r in embedding_near_dups(vecs, 0.9).collect()}
+
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    close = np.triu(unit @ unit.T >= 0.9, 1)
+    want = {
+        (ids[i], ids[j])
+        for i, j in zip(*np.nonzero(close))
+        if min(bin(int(v)).count("1") for v in cm[i] ^ cm[j]) <= 1
+    }
+    assert (5000, 5001) in got
+    assert got == want
 
 
 def test_ivf_topk_recall_and_determinism(spark, emb):
