@@ -181,36 +181,39 @@ def _banded_candidates(
     viral cluster stays CONNECTED through the hub, so components still
     resolve; the price is pairwise completeness within the bucket. It is
     deterministic, so the pure-Python goldens replay it, and it bounds the
-    hot key where the pairs are built (DS2, ICDE 2021). The hub is
-    ``min(struct(member, *carry))`` from a map-side-combinable groupBy.
+    hot key where the pairs are built (DS2, ICDE 2021). Bucket sizes are a
+    map-side-combinable count, the small over-cap key set is joined onto
+    the postings once as a flag, and the hub is ``min(struct(member,
+    *carry))`` grouped over the flagged rows only — never a window sort
+    over a 10⁷-member bucket.
 
     ``split`` narrows the star to members that agree on these columns: an
     over-cap bucket gets one hub per split value, and the hubs self-join
-    like a bucket under the cap. One groupBy gives each (bucket, split
-    value) its hub and bucket size; joined onto the postings once, it
-    feeds the self-join and the star, split by the over-cap flag.
+    like a bucket under the cap.
 
     ``stats``: pass ``[]`` to receive one row per oversized bucket with
     ``n_members``, ``pairs_materialized`` (star edges plus hub pairs: n−1
     without ``split``) and ``pairs_skipped`` (the rest of bucket²).
     """
     side = [member, *carry]
-    # one row per (bucket, split value) with its hub, and the bucket's size
-    groups = postings.groupBy(*bucket_keys, *split).agg(
-        F.count(F.lit(1)).alias("_c"), F.min(F.struct(*side)).alias("_hub")
+    sizes = postings.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("_n"))
+    over = sizes.filter(F.col("_n") > max_bucket_size)
+    rows = postings.join(over, bucket_keys, "left")  # _n flags the star rows
+    viral = rows.filter(F.col("_n").isNotNull())
+    hubs = viral.groupBy(*bucket_keys, *split).agg(F.min(F.struct(*side)).alias("_hub"))
+    star = (
+        viral.join(hubs, [*bucket_keys, *split])
+        .filter(F.col(member) != F.col(f"_hub.{member}"))
+        .select(
+            *[F.col(f"_hub.{c}").alias(f"a_{c}") for c in side],
+            *[F.col(c).alias(f"b_{c}") for c in side],
+        )
     )
-    groups = groups.withColumn(
-        "_n", F.sum("_c").over(Window.partitionBy(*bucket_keys)) if split else F.col("_c")
-    )
-    over = F.col("_n") > max_bucket_size
-    hub = F.col(member) == F.col(f"_hub.{member}")
-    rows = postings.join(groups, [*bucket_keys, *split])
-    star = rows.filter(over & ~hub).select(
-        *[F.col(f"_hub.{c}").alias(f"a_{c}") for c in side],
-        *[F.col(c).alias(f"b_{c}") for c in side],
-    )
-    # an over-cap bucket self-joins only its hubs (one per split value)
-    joined = rows.filter(~over | hub).select(*bucket_keys, *side)
+    joined = rows.filter(F.col("_n").isNull()).select(*bucket_keys, *side)
+    if split:  # an over-cap bucket self-joins its hubs, one per split value
+        joined = joined.unionByName(
+            hubs.select(*bucket_keys, *[F.col(f"_hub.{c}").alias(c) for c in side])
+        )
     cand = (
         joined.select(*bucket_keys, *[F.col(c).alias(f"a_{c}") for c in side])
         .join(joined.select(*bucket_keys, *[F.col(c).alias(f"b_{c}") for c in side]), bucket_keys)
@@ -221,10 +224,10 @@ def _banded_candidates(
     if pair_pred is not None:
         cand = cand.filter(pair_pred)
     if stats is not None:
-        per_bucket = groups.filter(over).groupBy(*bucket_keys).agg(
-            F.first("_n").cast("long").alias("n"), F.count(F.lit(1)).alias("s")
+        per_bucket = over.join(
+            hubs.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("s")), bucket_keys
         )
-        n, s = F.col("n"), F.col("s")
+        n, s = F.col("_n").cast("long"), F.col("s")
         # n−s star edges plus s(s−1)/2 hub pairs, in long arithmetic (a
         # double would round past ~10^8 members: n² > 2^53)
         pairs = n - s + F.shiftright(s * (s - F.lit(1)), 1)

@@ -753,13 +753,8 @@ def embedding_near_dups(
     ).cache()
     if caches is not None:
         caches.append(buckets)
-    keys = buckets.select(
-        "vec_id",
-        "copy",
-        F.posexplode(
-            F.array(*[F.col("bucket").bitwiseAND(F.lit(~(1 << k))) for k in range(8)])
-        ).alias("bit", "key"),
-    )
+    cleared = [F.col("bucket").bitwiseAND(F.lit(~(1 << k))) for k in range(8)]
+    keys = buckets.select("vec_id", "copy", F.posexplode(F.array(*cleared)).alias("bit", "key"))
     cand = _banded_candidates(
         keys, ["bit", "key"], "vec_id", [], 1000, split=["copy"]
     ).select(F.col("a_vec_id").alias("id_a"), F.col("b_vec_id").alias("id_b"))

@@ -322,11 +322,9 @@ def _one_column_operators(spark):
         "bpe_token_counts": (
             lambda: tokenize.bpe_token_counts(docs, [("a", "b")]),
             {"text"}, 1, 1, f"struct<{kept},n_tokens:bigint>"),
-        # the banded primitive joins the bucket sizes onto the postings
-        # once (the mapInPandas plan had 7 exchanges)
         "simhash_pairs": (
             lambda: dedup.simhash_pairs(docs),
-            {"text"}, 5, 1, "struct<doc_a:bigint,doc_b:bigint,hamming:int>"),
+            {"text"}, 7, 1, "struct<doc_a:bigint,doc_b:bigint,hamming:int>"),
         "minhash_signatures": (
             lambda: dedup.minhash_signatures(docs),
             {"text"}, 1, 1, "struct<doc_id:bigint,signature:array<bigint>>"),
@@ -443,16 +441,16 @@ def test_phash_payload_shuffles_only_from_a_narrow_input(spark):
 # build). The exchanges are those the mapInPandas / applyInPandas versions
 # planned; the Bloom probe UDF runs in both legs of its union.
 # embedding_near_dups builds its candidates with the capped banded
-# primitive: the per-(key, copy) hub aggregate and the key-size window over
-# it are planned once for each of their three consumers (both join sides
-# and the star), which adds six exchanges. The LSH kernel and its spread
-# exchange are planned once, under the cached bucket relation; the
-# uncapped probe join planned them on each join side.
+# primitive: the key-size count under the over-cap flag join and the hub
+# aggregate over the flagged rows are planned once for each consumer (both
+# join sides and the star), which adds eight exchanges. The LSH kernel and
+# its spread exchange are planned once, under the cached bucket relation;
+# the uncapped probe join planned them on each join side.
 _FORMER_PANDAS_MAP_PLANS = {
     "similarity_lsh_topk": (4, 2),
     "similarity_ivf_topk": (4, 2),
     "similarity_ivf_pq_topk": (2, 2),
-    "embedding_near_dups": (8, 1),
+    "embedding_near_dups": (11, 1),
     "semantic_dedup": (8, 2),
     "media_features": (0, 1),
     "dedup_bloom_incremental": (2, 2),
